@@ -984,29 +984,14 @@ object Queries {
       |CAST((16 + doc_id % 48) * (16 + doc_id % 24) * (doc_id % 256) * 3 AS BIGINT) AS px_sum
       |FROM documents""".stripMargin
 
-  /** LSH-bucketed ANN, Gaussian-plane production form (spec-gated: recall
-    * vs q29 brute force asserted in AnnSpec; not SQL-expressible because the
-    * planes come from Random.nextGaussian).
-    */
-  def q37AnnLsh(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0).select(col("embedding")).as[Array[Float]].head()
-    Ann.lshTopK(s, emb, "vec_id", "embedding", query, k = 20, nPlanes = 5)
-  }
-
   /** LSH ANN, ORACLE-GATED: closed-form fnv1a integer planes make the
     * signature, the Hamming ≤ 1 multiprobe set, and hence the exact scan
     * membership SQL-expressible; scoring is the exact scaled-integer dot.
-    * This hash-gates the entire probe machinery — same plan shape as the
-    * Gaussian variant, only the plane constants differ.
+    * This hash-gates the entire probe machinery over the bucket encoding
+    * computed on the fly (q63 probes the same layout stored).
     */
-  def q37AnnLshGate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0).select(col("embedding")).as[Array[Float]].head()
-    Ann.lshTopKGate(s, emb, "vec_id", "embedding", query, k = 20, nPlanes = 5)
-  }
+  def q37AnnLshGate(s: SparkSession, dir: String): DataFrame =
+    onTheFlyTopK(s, dir, Ann.lsh(nPlanes = 5))
 
   val q37Sql: String = {
     val dim = 64; val nPlanes = 5
@@ -1326,7 +1311,7 @@ object Queries {
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1) // bounded: 8 query vectors
-    Ann.multiQueryTopK(s, emb, "vec_id", "embedding", queries, k = 20)
+    Ann.multiQueryTopK(s, Ann.flat, emb, "vec_id", "embedding", queries, k = 20)
   }
 
   val q51Sql: String = {
@@ -1402,20 +1387,13 @@ object Queries {
        |FROM documents""".stripMargin
 
   /** int8-quantized ANN over the STORED 64 B binary column (the 4×-less-IO
-    * claim made physical: AnnSpec asserts the on-disk ratio vs the float
-    * table): quantization clamp(floor(v·127)) happens once at write; the
-    * query-time scan reads qvec only and scores with the exact integer dot,
-    * which the oracle reproduces term-for-term from the float source.
+    * claim made physical: OperatorsSpec asserts the on-disk ratio vs the
+    * float table): quantization clamp(floor(v·127)) happens once at write;
+    * the query-time scan reads qvec only and scores with the exact integer
+    * dot, which the oracle reproduces term-for-term from the float source.
     */
-  def q60AnnInt8(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0)
-      .select(col("embedding")).as[Array[Float]].head()
-    val path = ensureLayout(layoutPath("int8_q127", dir))(
-      Ann.int8WriteLayout(s, emb, "vec_id", "embedding", layoutPath("int8_q127", dir)))
-    Ann.int8TopKStoredNative(s, path, "vec_id", query, k = 20)
-  }
+  def q60AnnInt8(s: SparkSession, dir: String): DataFrame =
+    storedTopK(s, dir, Ann.int8, "int8_q127")
 
   val q60Sql: String = {
     def q8(ref: String, i: Int) =
@@ -1634,7 +1612,9 @@ object Queries {
   // v4: every parametric layout (ivf cells, lsh buckets, pq codes, ivfpq,
   // band keys) now records its parameters in _meta, validated on every
   // probe/append — earlier cached layouts lack the record and must rebuild
-  private val LayoutVersion = "v4"
+  // v5: the int8 layout records its quantizer scale in _meta, LSH buckets
+  // are Int partition keys, and every ANN layout is split-built
+  private val LayoutVersion = "v5"
 
   /** `kind` must encode every layout PARAMETER (cell/plane/codebook counts)
     * — e.g. "ivfcells_c16" — so a parameter change misses the cache instead
@@ -1670,44 +1650,41 @@ object Queries {
     path
   }
 
-  // Every partitioned layout is built INCREMENTALLY — a base write of the
-  // even-id half, then an APPEND of the odd half — so the driver's oracle
-  // runs gate the append lifecycle itself every round: q61/q63/q64/q73 pass
-  // only if the merged layout is indistinguishable from a one-shot build.
+  // Every stored ANN layout is built INCREMENTALLY — a base write of the
+  // even-id half, then an APPEND of the odd half — so every oracle run of
+  // q60–q64/q73 gates the append lifecycle itself: they pass only if the
+  // merged layout is indistinguishable from a one-shot build.
 
-  /** The shared even/odd split-build: base-write one half of the
-    * embeddings, append the other, once per layout path.
+  /** `layout` split-built once under `kind`, read back through its `_meta`
+    * guard.
     */
-  private def splitBuilt(s: SparkSession, dir: String, p: String)(
-      write: DataFrame => Unit, append: DataFrame => Unit): String =
+  private def splitBuilt(s: SparkSession, dir: String, layout: Ann.VectorLayout, kind: String): DataFrame = {
+    val p = layoutPath(kind, dir)
     ensureLayout(p) {
       val emb = t(s, dir, "embeddings")
-      write(emb.filter(col("vec_id") % 2 === 0))
-      append(emb.filter(col("vec_id") % 2 === 1))
+      Ann.writeLayout(s, layout, emb.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", p)
+      Ann.appendLayout(s, layout, emb.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", p)
     }
-
-  /** The shared cell-partitioned IVF layout (q61, q64). */
-  private def ivfLayout(s: SparkSession, dir: String): String = {
-    val p = layoutPath("ivfcells_c16", dir)
-    splitBuilt(s, dir, p)(
-      Ann.ivfWriteLayoutGate(s, _, "vec_id", "embedding", p, nCells = 16),
-      Ann.ivfAppendLayout(s, _, "vec_id", "embedding", p, nCells = 16))
+    Ann.stored(s, layout, p)
   }
 
-  /** The bucket-partitioned LSH layout (q63). */
-  private def lshLayout(s: SparkSession, dir: String): String = {
-    val p = layoutPath("lshbuckets_p5", dir)
-    splitBuilt(s, dir, p)(
-      Ann.lshWriteLayoutGate(s, _, "vec_id", "embedding", p, nPlanes = 5),
-      Ann.lshAppendLayout(s, _, "vec_id", "embedding", p, nPlanes = 5))
+  private def query0(s: SparkSession, dir: String): Array[Float] = {
+    import s.implicits._
+    t(s, dir, "embeddings").filter(col("vec_id") === 0).select(col("embedding")).as[Array[Float]].head()
   }
 
-  /** The cell-partitioned IVF-PQ index (q73). */
-  private def ivfPqLayout(s: SparkSession, dir: String): String = {
-    val p = layoutPath("ivfpq_c16m8k16", dir)
-    splitBuilt(s, dir, p)(
-      Ann.ivfPqWriteLayout(s, _, "vec_id", "embedding", p),
-      Ann.ivfPqAppendLayout(s, _, "vec_id", "embedding", p))
+  /** Top-20 for vector 0 over the stored, split-built `layout`. */
+  private def storedTopK(s: SparkSession, dir: String, layout: Ann.VectorLayout, kind: String): DataFrame =
+    Ann.topK(s, layout, splitBuilt(s, dir, layout, kind), "vec_id", "embedding", query0(s, dir), k = 20)
+
+  /** Top-20 for vector 0 over `layout` encoded on the fly from the float
+    * corpus: the same probe set and scores as the stored layout, without
+    * its IO pruning.
+    */
+  private def onTheFlyTopK(s: SparkSession, dir: String, layout: Ann.VectorLayout): DataFrame = {
+    val q = query0(s, dir)
+    val emb = Ann.encoded(s, layout, t(s, dir, "embeddings"), "vec_id", "embedding", q.length)
+    Ann.topK(s, layout, emb, "vec_id", "embedding", q, k = 20)
   }
 
   /** IVF over the cell-PARTITIONED layout: same probe set and scores as q47
@@ -1715,13 +1692,8 @@ object Queries {
     * directories at the scan — nProbe/nCells of the corpus is READ, not just
     * scored. Partition pruning is PlanSpec-asserted.
     */
-  def q61AnnIvfPart(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0).select(col("embedding")).as[Array[Float]].head()
-    val path = ivfLayout(s, dir)
-    Ann.ivfTopKPartitioned(s, path, "vec_id", "embedding", query, k = 20, nCells = 16, nProbe = 4)
-  }
+  def q61AnnIvfPart(s: SparkSession, dir: String): DataFrame =
+    storedTopK(s, dir, Ann.ivf(nCells = 16, nProbe = 4), "ivfcells_c16")
 
   def q61Sql: String = q47Sql
 
@@ -1730,13 +1702,8 @@ object Queries {
     * SQL verbatim), with the Hamming≤1 multiprobe set pruning partition
     * directories: 6 of 32 buckets read.
     */
-  def q63AnnLshPart(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0).select(col("embedding")).as[Array[Float]].head()
-    val path = lshLayout(s, dir)
-    Ann.lshTopKPartitioned(s, path, "vec_id", "embedding", query, k = 20, nPlanes = 5)
-  }
+  def q63AnnLshPart(s: SparkSession, dir: String): DataFrame =
+    storedTopK(s, dir, Ann.lsh(nPlanes = 5), "lshbuckets_p5")
 
   def q63Sql: String = q37Sql
 
@@ -1745,16 +1712,15 @@ object Queries {
     * queries' probe sets) serves the whole batch; each query scores only
     * vectors assigned to ITS probed cells (checked per row inside the
     * aggregator combine), so every per-query result equals an independent
-    * ivfTopKGate call — which is what the oracle computes.
+    * single-query q61 probe — which is what the oracle computes.
     */
   def q64AnnMultiIvf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 8)
+    val queries = t(s, dir, "embeddings").filter(col("vec_id") < 8)
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val path = ivfLayout(s, dir)
-    Ann.multiQueryIvfPartitioned(s, path, "vec_id", "embedding", queries, k = 20)
+    val ivf = Ann.ivf(nCells = 16, nProbe = 4)
+    Ann.multiQueryTopK(s, ivf, splitBuilt(s, dir, ivf, "ivfcells_c16"), "vec_id", "embedding", queries, k = 20)
   }
 
   def q64Sql: String = {
@@ -1801,16 +1767,11 @@ object Queries {
     * fnv1a codewords; assignment at write time (8 B/vector stored), query
     * scoring = ADC table lookups. The oracle reproduces assignment + ADC
     * term-for-term from the float source, so the whole PQ machinery is
-    * hash-gated; retrieval quality vs brute force is spec-gated (AnnSpec).
+    * hash-gated; retrieval quality vs brute force is spec-gated
+    * (OperatorsSpec).
     */
-  def q62AnnPq(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0).select(col("embedding")).as[Array[Float]].head()
-    val path = ensureLayout(layoutPath("pqcodes_m8k16", dir))(
-      Ann.pqWriteLayout(s, emb, "vec_id", "embedding", layoutPath("pqcodes_m8k16", dir), m = 8, kw = 16))
-    Ann.pqTopKStored(s, path, "vec_id", query, k = 20, m = 8, kw = 16)
-  }
+  def q62AnnPq(s: SparkSession, dir: String): DataFrame =
+    storedTopK(s, dir, Ann.pq(m = 8, kw = 16), "pqcodes_m8k16")
 
   def q62Sql: String = {
     val dim = 64; val m = 8; val kw = 16; val subDim = dim / m
@@ -2169,13 +2130,8 @@ object Queries {
     * the full combination: gate-centroid assignment + probe set (q47's
     * machinery) over codebook assignment + ADC sums (q62's).
     */
-  def q73AnnIvfPq(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0).select(col("embedding")).as[Array[Float]].head()
-    val path = ivfPqLayout(s, dir)
-    Ann.ivfPqTopK(s, path, "vec_id", query, k = 20)
-  }
+  def q73AnnIvfPq(s: SparkSession, dir: String): DataFrame =
+    storedTopK(s, dir, Ann.ivfPq(nCells = 16, nProbe = 4, m = 8, kw = 16), "ivfpq_c16m8k16")
 
   def q73Sql: String = {
     val dim = 64; val nCells = 16; val nProbe = 4; val m = 8; val kw = 16; val subDim = dim / m
@@ -2966,28 +2922,14 @@ object Queries {
   // and a forward val reference would be captured as null at object init
   def q48Sql: String = q29Sql
 
-  /** IVF ANN, Lloyd-trained production form (spec-gated: recall vs brute +
-    * full-probe == brute asserted in AnnSpec; the trainer's fixpoint is not
-    * SQL-expressible).
-    */
-  def q47AnnIvf(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0).select(col("embedding")).as[Array[Float]].head()
-    Ann.ivfTopK(s, emb, "vec_id", "embedding", query, k = 20, nCells = 16, nProbe = 4)
-  }
-
   /** IVF ANN, ORACLE-GATED: closed-form fnv1a integer centroids make cell
     * assignment (exact-integer argmin with index tiebreak), the nProbe probe
     * set, and the scan membership SQL-expressible — hash-gating the whole
-    * assign→probe→scan machinery. The Lloyd trainer stays spec-gated.
+    * assign→probe→scan machinery over the cell encoding computed on the
+    * fly (q61 probes the same layout stored).
     */
-  def q47AnnIvfGate(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = t(s, dir, "embeddings")
-    val query = emb.filter(col("vec_id") === 0).select(col("embedding")).as[Array[Float]].head()
-    Ann.ivfTopKGate(s, emb, "vec_id", "embedding", query, k = 20, nCells = 16, nProbe = 4)
-  }
+  def q47AnnIvfGate(s: SparkSession, dir: String): DataFrame =
+    onTheFlyTopK(s, dir, Ann.ivf(nCells = 16, nProbe = 4))
 
   // def, not val: declared after the sqlChecked map in source order — a
   // forward val reference would be captured as null at object init
@@ -3027,8 +2969,8 @@ object Queries {
   }
 
   /** Empty since round 3: every query is oracle-gated. The fnv1a simhash
-    * (q27SimHashPairs), Gaussian LSH (q37AnnLsh), and Lloyd IVF (q47AnnIvf)
-    * production forms remain spec-gated alongside their gate variants.
+    * production form (q27SimHashPairs) remains spec-gated alongside its
+    * gate variant.
     */
   val rowsOnly: Map[String, (SparkSession, String) => DataFrame] = Map.empty
 }

@@ -26,13 +26,6 @@ object Sketches {
     else (0 to norm.length - n).map(i => norm.substring(i, i + n)).toSet
   }
 
-  /** Word n-gram shingles. */
-  def wordShingles(text: String, n: Int): Set[String] = {
-    val toks = WsPat.split(text.toLowerCase(Root)).filter(_.nonEmpty)
-    if (toks.length < n) toks.toSet
-    else toks.sliding(n).map(_.mkString(" ")).toSet
-  }
-
   /** 64-bit FNV-1a — stable, engine-independent string hash. */
   def fnv1a(s: String): Long = {
     var h = 0xcbf29ce484222325L

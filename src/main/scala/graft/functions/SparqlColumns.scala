@@ -73,10 +73,6 @@ object SparqlColumns {
       "\"BCE_$1\""
     )
 
-  /** C4 — `rdf:type` → `a` (ttl_compare.py:221-222). */
-  def shortenRdfType(pred: Column): Column =
-    when(pred === "rdf:type", lit("a")).otherwise(pred)
-
   /** C6 — `"normal rank"` → `NormalRank` (get_updates.py:951-958): strip
     * quotes/space, initcap each word, join.
     */
@@ -91,15 +87,6 @@ object SparqlColumns {
       .when(current.startsWith("ps:"), current)
       .when(current =!= "qualifier", main)
       .otherwise(current)
-
-  /** C9 — quoted-string-aware third token, gated on `ps:` predicate
-    * (get_updates.py:703-708).
-    */
-  def thirdElement(c: Column): Column = {
-    val pat = "(\\S+)\\s(ps:\\S+)\\s((\".*?\"|\\S+))"
-    when(regexp_extract(c, pat, 2) =!= "", regexp_extract(c, pat, 3))
-      .otherwise(lit(null).cast("string"))
-  }
 
   /** Deterministic statement-id mint (J3 replacement; SURVEY.md §7.4):
     * content hash shaped like Wikidata's `s:Qn-…` ids.

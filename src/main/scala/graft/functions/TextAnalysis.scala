@@ -295,18 +295,6 @@ object TextAnalysis {
         (acc, w) => acc + bpeWordTokens(regexp_replace(w, "[^a-z]", ""))).as("bpe_tokens"))
   }
 
-  def rollingHash(s: String): Long = {
-    val M = (1L << 61) - 1
-    var h = 0L
-    var i = 0
-    while (i < s.length) {
-      // multiply mod M via math.BigInt-free splitting is overkill at base 31:
-      h = (h * 31 + s.charAt(i)) % M
-      i += 1
-    }
-    h
-  }
-
   /** Within-document repetition score (the Gopher/MassiveText repetition
     * family, Rae et al. 2021 §A1.1): how much of the document is its own
     * most-repeated word `n`-gram. Returned as exact integers —

@@ -1,20 +1,22 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Sketches
+import graft.sources.Tables
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
   *  - bruteForceTopK: exact cosine top-k against one query vector — a single
   *    narrow map + TakeOrderedAndProject; the baseline and the verifier.
-  *  - lshTopK: random-hyperplane LSH buckets (SimHash for vectors) — the
-  *    scale path: each query probes only its bucket (and neighbors), so the
-  *    scored set is a small fraction of the corpus. Buckets are a plain
-  *    groupable column ⇒ co-located joins, no custom physical operator.
   *  - nearDupPairs: embedding-cosine near-duplicate detection via the same
   *    bucket join shape as Dedup.minHashCandidates.
+  *  - VectorLayout: every ANN index (IVF, LSH, int8, PQ, IVF-PQ) as one
+  *    description — partitioning × stored encoding — served by one
+  *    lifecycle: writeLayout / appendLayout, topK for one query,
+  *    multiQueryTopK for a batch.
   */
 object Ann {
 
@@ -56,41 +58,6 @@ object Ann {
       .select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
       .map { case (id, v) => (id, Sketches.cosine(v, q.value)) }
-      .toDF("id", "cosine")
-      .orderBy(col("cosine").desc, col("id").asc)
-      .limit(k)
-  }
-
-  /** Bucketed ANN: assign every vector (and the query) a hyperplane
-    * signature; scan only vectors sharing the signature bucket or differing
-    * in ≤ 1 bit (multi-probe). Falls back to fewer results if the bucket is
-    * sparse — standard recall/cost tradeoff.
-    */
-  def lshTopK(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Array[Float],
-      k: Int,
-      nPlanes: Int = 12
-  ): DataFrame = {
-    import spark.implicits._
-    val dim = query.length
-    val planes = spark.sparkContext.broadcast(hyperplanes(dim, nPlanes))
-    val qSig = signBits(query, planes.value)
-    val probes = (qSig +: (0 until nPlanes).map(b => qSig ^ (1L << b))).toSet
-    val probesB = spark.sparkContext.broadcast(probes)
-    val q = spark.sparkContext.broadcast(query)
-    embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val pl = planes.value; val pr = probesB.value; val qv = q.value
-        it.flatMap { case (id, v) =>
-          if (pr.contains(signBits(v, pl))) Some((id, Sketches.cosine(v, qv))) else None
-        }
-      }
       .toDF("id", "cosine")
       .orderBy(col("cosine").desc, col("id").asc)
       .limit(k)
@@ -238,16 +205,14 @@ object Ann {
     cosineVerified(spark, all, pairs, minCosine)
   }
 
-  // ------------------------------------------------- oracle-gated variants
+  // ------------------------------------------------- closed-form constants
   //
-  // The Gaussian-plane LSH and Lloyd-trained IVF above are the production
-  // forms (spec-gated: recall vs brute force, full-probe == brute). The
-  // variants below swap ONLY the randomness for closed-form integers from
-  // fnv1a and run every comparison in exact scaled-integer arithmetic —
-  // bucket membership, cell assignment, probe sets, and scores all become
-  // SQL-expressible, so a DuckDB oracle reproduces the EXACT scan set and
-  // hash-gates the whole probe machinery (q37/q47). Same plan shape, same
-  // 100×-scale properties; only the constants differ.
+  // Every ANN index below takes its randomness from fnv1a instead of a
+  // trained or Gaussian model, and runs every comparison in exact
+  // scaled-integer arithmetic: bucket membership, cell assignment, probe
+  // sets and scores all become SQL-expressible, so a DuckDB oracle
+  // reproduces the EXACT scan set from the float source and hash-gates the
+  // whole probe machinery (q37, q47, q60–q64, q73).
 
   /** Closed-form integer hyperplanes: plane p component i =
     * fnv1a("plane:p:i") mod 2001 − 1000 ∈ [−1000, 1000].
@@ -257,8 +222,8 @@ object Ann {
       Array.tabulate(dim)(i => math.floorMod(Sketches.fnv1a(s"plane:$p:$i"), 2001L) - 1000L))
 
   /** Milli-scaled vector components: a_i = floor(v_i · 1000) — the exact
-    * integer domain every gate-variant comparison runs in (floor matches
-    * SQL floor; float→double widening is exact on both engines).
+    * integer domain every layout comparison runs in (floor matches SQL
+    * floor; float→double widening is exact on both engines).
     */
   def milliScaled(v: Array[Float]): Array[Long] = {
     val a = new Array[Long](v.length)
@@ -282,41 +247,6 @@ object Ann {
     bits
   }
 
-  /** Oracle-gated LSH top-k: integer-plane signatures, candidate iff the
-    * signature is within Hamming 1 of the query's (the same multiprobe set
-    * as lshTopK), scored with the exact scaled-integer dot. Identical scan
-    * shape to lshTopK — narrow filter + TakeOrderedAndProject.
-    */
-  def lshTopKGate(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Array[Float],
-      k: Int,
-      nPlanes: Int = 5
-  ): DataFrame = {
-    import spark.implicits._
-    val planes = spark.sparkContext.broadcast(intPlanes(query.length, nPlanes))
-    val qSig = signBitsInt(milliScaled(query), planes.value)
-    val q = spark.sparkContext.broadcast(query)
-    embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val pl = planes.value; val qv = q.value
-        it.flatMap { case (id, v) =>
-          val sig = signBitsInt(milliScaled(v), pl)
-          if (java.lang.Long.bitCount(sig ^ qSig) <= 1)
-            Some((id, Sketches.scaledDot(v, qv)))
-          else None
-        }
-      }
-      .toDF(idCol, "scaled_dot")
-      .orderBy(col("scaled_dot").desc, col(idCol).asc)
-      .limit(k)
-  }
-
   /** Closed-form integer centroids on the milli scale: cell c component i =
     * fnv1a("centroid:c:i") mod 2001 − 1000.
     */
@@ -324,11 +254,11 @@ object Ann {
     Array.tabulate(nCells)(c =>
       Array.tabulate(dim)(i => math.floorMod(Sketches.fnv1a(s"centroid:$c:$i"), 2001L) - 1000L))
 
-  /** Cell ranking for the gate variant: argmin over c of ‖a − x_c‖² with
-    * lowest-index tiebreak, computed as score_c = Σx_c² − 2·(a·x_c) (the
-    * Σa_i² term is constant per vector, so the argmin — and every tie — is
-    * unchanged; this keeps the SQL oracle a single 64-term dot per cell).
-    * Returns cell indices best-first.
+  /** Cell ranking: argmin over c of ‖a − x_c‖² with lowest-index tiebreak,
+    * computed as score_c = Σx_c² − 2·(a·x_c) (the Σa_i² term is constant
+    * per vector, so the argmin — and every tie — is unchanged; this keeps
+    * the SQL oracle a single 64-term dot per cell). Returns cell indices
+    * best-first.
     */
   def rankCellsInt(a: Array[Long], cents: Array[Array[Long]]): Array[Int] = {
     val scores = Array.tabulate(cents.length) { c =>
@@ -344,348 +274,6 @@ object Ann {
     }
     cents.indices.sortBy(c => (scores(c), c)).toArray
   }
-
-  /** Oracle-gated IVF top-k: closed-form centroids, distributed integer
-    * assignment, nProbe-cell scan, exact scaled-integer scoring — the same
-    * assign→probe→scan plan as ivfTopK with every step SQL-reproducible.
-    */
-  def ivfTopKGate(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Array[Float],
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 4
-  ): DataFrame = {
-    import spark.implicits._
-    val cents = spark.sparkContext.broadcast(intCentroids(query.length, nCells))
-    val probe = rankCellsInt(milliScaled(query), cents.value).take(nProbe).toSet
-    val probeB = spark.sparkContext.broadcast(probe)
-    val q = spark.sparkContext.broadcast(query)
-    embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = cents.value; val pr = probeB.value; val qv = q.value
-        it.flatMap { case (id, v) =>
-          if (pr.contains(rankCellsInt(milliScaled(v), cs)(0)))
-            Some((id, Sketches.scaledDot(v, qv)))
-          else None
-        }
-      }
-      .toDF(idCol, "scaled_dot")
-      .orderBy(col("scaled_dot").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  // ----------------------------------------------- physical-layout variants
-  //
-  // Every probe path above prunes COMPUTE (rows scored) but still READS the
-  // whole corpus — at 100 TB the win must come from pruning IO. These
-  // operators materialize the corpus in a probe-friendly physical layout
-  // once (a write-side cost amortized over every query), after which the
-  // probe set prunes FILES at the scan:
-  //  - ivfWriteLayoutGate / ivfTopKPartitioned: embeddings partitioned by
-  //    assigned cell id → a query reads only nProbe of nCells partition
-  //    directories (partition pruning, PlanSpec-asserted).
-  //  - int8WriteLayout / int8TopKStored: the quantized vector stored as a
-  //    64 B binary column → every scan reads ~4× fewer bytes than float32.
-  //  - pqWriteLayout / pqTopKStored: 8 PQ codes stored per vector (8 B) →
-  //    ~32× fewer scan bytes, scored by ADC table lookup.
-  // Parquet partition dirs/columns stand in for Iceberg partition transforms
-  // (the KgPipeline.materializeGraph convention); the gate constants are the
-  // closed-form fnv1a family so every layout is DuckDB-reproducible from the
-  // float source.
-
-  /** Cell-assigned form of an embeddings batch (None when empty): the
-    * shared narrow map behind both the full layout build and incremental
-    * append — assignment is a pure function of the vector, so a vector
-    * lands in the SAME cell whether written at build time or appended
-    * later (what makes append correct without touching existing files).
-    */
-  private def ivfAssigned(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nCells: Int
-  ): Option[DataFrame] = {
-    import spark.implicits._
-    val first = embeddings.select(col(vecCol)).as[Array[Float]].take(1)
-    if (first.isEmpty) return None
-    val cents = spark.sparkContext.broadcast(intCentroids(first.head.length, nCells))
-    Some(embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = cents.value
-        it.map { case (id, v) => (id, v, rankCellsInt(milliScaled(v), cs)(0)) }
-      }
-      .toDF(idCol, vecCol, "cell"))
-  }
-
-  /** Materialize embeddings physically partitioned by gate-centroid cell id:
-    * assignment is a narrow map (no shuffle — each write task writes its
-    * rows into the partition dirs it holds); the layout is deterministic
-    * from the source table, so rebuild-vs-reuse is a pure cost decision.
-    */
-  def ivfWriteLayoutGate(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nCells: Int = 16
-  ): Unit =
-    ivfAssigned(spark, embeddings, idCol, vecCol, nCells).foreach { df =>
-      graft.sources.Tables.format.writePartitioned(df, path, "cell")
-      graft.sources.Tables.writeLayoutMeta(spark, path, "n_cells" -> nCells)
-      graft.sources.Tables.recordLayoutLineage(path, "build", embeddings, idCol)
-    }
-
-  /** Incremental refresh of a cell-partitioned layout: assign the NEW
-    * vectors (same closed-form centroids — appended rows land in the same
-    * cells a full rebuild would put them in) and append their files into
-    * the existing partition dirs. Existing files are untouched, probes
-    * prune exactly as before, and the lineage log records the batch — the
-    * daily-growth lifecycle of a 100 TB index without a rebuild.
-    */
-  def ivfAppendLayout(
-      spark: SparkSession,
-      newVectors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nCells: Int = 16
-  ): Unit =
-    ivfAssigned(spark, newVectors, idCol, vecCol, nCells).foreach { df =>
-      graft.sources.Tables.requireLayoutMeta(spark, path, "n_cells" -> nCells)
-      graft.sources.Tables.format.appendPartitioned(df, path, "cell")
-      graft.sources.Tables.recordLayoutLineage(path, "append", newVectors, idCol)
-    }
-
-  /** Probe-limited IVF over the cell-partitioned layout: the `cell IN
-    * (probe set)` predicate is a PARTITION filter, so the scan lists and
-    * reads only nProbe of nCells directories — corpus-fraction READ (not
-    * just scored) ≈ nProbe/nCells. Same rows as ivfTopKGate (q47's oracle
-    * gates it via identical SQL).
-    */
-  def ivfTopKPartitioned(
-      spark: SparkSession,
-      layoutPath: String,
-      idCol: String,
-      vecCol: String,
-      query: Array[Float],
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 4
-  ): DataFrame = {
-    import spark.implicits._
-    graft.sources.Tables.requireLayoutMeta(spark, layoutPath, "n_cells" -> nCells)
-    val cents = intCentroids(query.length, nCells)
-    val probe = rankCellsInt(milliScaled(query), cents).take(nProbe).toSeq
-    val q = spark.sparkContext.broadcast(query)
-    spark.read.parquet(layoutPath)
-      .filter(col("cell").isin(probe.map(Int.box): _*))
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, Sketches.scaledDot(v, q.value)) }
-      .toDF(idCol, "scaled_dot")
-      .orderBy(col("scaled_dot").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Materialize embeddings physically partitioned by LSH bucket (the full
-    * integer-plane signature, 0..2^nPlanes−1) — the LSH twin of
-    * ivfWriteLayoutGate: assignment is a narrow map at write time, and the
-    * Hamming≤1 multiprobe set becomes a partition filter at query time.
-    */
-  def lshWriteLayoutGate(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nPlanes: Int = 5
-  ): Unit =
-    lshAssigned(spark, embeddings, idCol, vecCol, nPlanes).foreach { df =>
-      graft.sources.Tables.format.writePartitioned(df, path, "bucket")
-      graft.sources.Tables.writeLayoutMeta(spark, path, "n_planes" -> nPlanes)
-      graft.sources.Tables.recordLayoutLineage(path, "build", embeddings, idCol)
-    }
-
-  /** Bucket-assigned form of an embeddings batch — the ivfAssigned twin for
-    * the hyperplane family.
-    */
-  private def lshAssigned(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nPlanes: Int
-  ): Option[DataFrame] = {
-    import spark.implicits._
-    val first = embeddings.select(col(vecCol)).as[Array[Float]].take(1)
-    if (first.isEmpty) return None
-    val planes = spark.sparkContext.broadcast(intPlanes(first.head.length, nPlanes))
-    Some(embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val pl = planes.value
-        it.map { case (id, v) => (id, v, signBitsInt(milliScaled(v), pl)) }
-      }
-      .toDF(idCol, vecCol, "bucket"))
-  }
-
-  /** Incremental refresh of the bucket-partitioned layout (see
-    * ivfAppendLayout — same lifecycle, hyperplane-bucket partitioning).
-    */
-  def lshAppendLayout(
-      spark: SparkSession,
-      newVectors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nPlanes: Int = 5
-  ): Unit =
-    lshAssigned(spark, newVectors, idCol, vecCol, nPlanes).foreach { df =>
-      graft.sources.Tables.requireLayoutMeta(spark, path, "n_planes" -> nPlanes)
-      graft.sources.Tables.format.appendPartitioned(df, path, "bucket")
-      graft.sources.Tables.recordLayoutLineage(path, "append", newVectors, idCol)
-    }
-
-  /** Probe-limited LSH over the bucket-partitioned layout: the query's
-    * Hamming≤1 probe set (nPlanes+1 of 2^nPlanes buckets) prunes partition
-    * directories at the scan — same rows as lshTopKGate (q37's oracle gates
-    * it via identical SQL), but the corpus fraction READ ≈ (nPlanes+1)/2^nPlanes.
-    */
-  def lshTopKPartitioned(
-      spark: SparkSession,
-      layoutPath: String,
-      idCol: String,
-      vecCol: String,
-      query: Array[Float],
-      k: Int,
-      nPlanes: Int = 5
-  ): DataFrame = {
-    import spark.implicits._
-    graft.sources.Tables.requireLayoutMeta(spark, layoutPath, "n_planes" -> nPlanes)
-    val planes = intPlanes(query.length, nPlanes)
-    val qSig = signBitsInt(milliScaled(query), planes)
-    val probes = (qSig +: (0 until nPlanes).map(b => qSig ^ (1L << b))).distinct
-    val q = spark.sparkContext.broadcast(query)
-    spark.read.parquet(layoutPath)
-      .filter(col("bucket").isin(probes.map(Long.box): _*))
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, Sketches.scaledDot(v, q.value)) }
-      .toDF(idCol, "scaled_dot")
-      .orderBy(col("scaled_dot").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Materialize the int8-quantized corpus: (id, qvec BINARY). Parquet
-    * stores the quantized vector as a 64 B byte array vs 256 B of float32 —
-    * the 4×-less-IO claim is about THIS stored column, size-ratio-asserted
-    * in AnnSpec against the float layout.
-    */
-  def int8WriteLayout(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String
-  ): Unit = {
-    if (embeddings.take(1).isEmpty) return
-    graft.sources.Tables.format.write(int8Quantized(spark, embeddings, idCol, vecCol), path)
-    graft.sources.Tables.recordLayoutLineage(path, "build", embeddings, idCol)
-  }
-
-  private def int8Quantized(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String
-  ): DataFrame = {
-    import spark.implicits._
-    embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, quantizeInt8(v)) }
-      .toDF(idCol, "qvec")
-  }
-
-  /** Incremental refresh of the stored-int8 layout: quantize the new batch
-    * (same closed-form quantizer) and append.
-    */
-  def int8AppendLayout(
-      spark: SparkSession,
-      newVectors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String
-  ): Unit = {
-    if (newVectors.take(1).isEmpty) return // the None guard of the siblings
-    graft.sources.Tables.format.append(int8Quantized(spark, newVectors, idCol, vecCol), path)
-    graft.sources.Tables.recordLayoutLineage(path, "append", newVectors, idCol)
-  }
-
-  /** Brute-force top-k over the STORED int8 column: the scan reads the 64 B
-    * qvec, never the float vector. Rows equal int8TopK's (quantization is
-    * deterministic), so q60's closed-form SQL oracle gates this path too.
-    */
-  def int8TopKStored(
-      spark: SparkSession,
-      layoutPath: String,
-      idCol: String,
-      query: Array[Float],
-      k: Int
-  ): DataFrame = {
-    import spark.implicits._
-    val qq = spark.sparkContext.broadcast(quantizeInt8(query))
-    spark.read.parquet(layoutPath)
-      .select(col(idCol).cast("long"), col("qvec"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val q = qq.value
-        it.map { case (id, qv) => (id, dotInt8(qv, q)) }
-      }
-      .toDF(idCol, "int8_dot")
-      .orderBy(col("int8_dot").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** Native-codegen form of int8TopKStored: scoring via the Int8DotExpr
-    * Catalyst expression (binary columns are `byte[]` in generated code),
-    * so scan → score → TakeOrderedAndProject is ONE fused codegen stage
-    * with no object ser/deser fence — the production shape of the
-    * stored-quantized scan. Query vector rides as a SQL binary literal.
-    * Row-equal to the typed form (PlanSpec) and gated by q60's oracle.
-    */
-  def int8TopKStoredNative(
-      spark: SparkSession,
-      layoutPath: String,
-      idCol: String,
-      query: Array[Float],
-      k: Int
-  ): DataFrame = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int8_dot_fast",
-      exprs => graft.plans.Int8DotExpr(exprs.head, exprs(1)),
-      "built-in")
-    val qhex = quantizeInt8(query).map(b => f"${b & 0xff}%02X").mkString
-    spark.read.parquet(layoutPath)
-      .select(
-        col(idCol).cast("long"),
-        expr(s"int8_dot_fast(qvec, X'$qhex')").as("int8_dot"))
-      .orderBy(col("int8_dot").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  // ------------------------------------------------- product quantization
 
   /** Closed-form PQ codebooks on the milli scale: subspace s (of m), codeword
     * c (of kw), component j (of dim/m) = fnv1a("pq:s:c:j") mod 2001 − 1000 —
@@ -735,8 +323,8 @@ object Ann {
   }
 
   /** ADC (asymmetric distance computation) lookup table for one query:
-    * qtab[s][c] = q_sub(milli) · codeword(s, c) — m×kw Longs, built once on
-    * the driver and broadcast; per-vector scoring is then m table lookups.
+    * qtab[s][c] = q_sub(milli) · codeword(s, c) — m×kw Longs, built once
+    * per query on the driver; per-vector scoring is then m table lookups.
     */
   def pqQueryTable(query: Array[Float], books: Array[Array[Array[Long]]]): Array[Array[Long]] = {
     val qm = milliScaled(query)
@@ -755,219 +343,15 @@ object Ann {
     }
   }
 
-  /** Materialize PQ codes: (id, codes BINARY of m bytes) — 8 B per vector at
-    * the defaults vs 256 B float32, a ~32× scan-IO reduction for query-time
-    * scoring (assignment cost is paid once at write).
+  /** ADC score of stored codes against a query table: Σ_s qtab[s][codes[s]]
+    * (an approximate dot — recall vs brute force is spec-gated; the
+    * arithmetic itself is exact and oracle-gated by q62/q73).
     */
-  def pqWriteLayout(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      m: Int = 8,
-      kw: Int = 16
-  ): Unit =
-    pqCoded(spark, embeddings, idCol, vecCol, m, kw).foreach { df =>
-      graft.sources.Tables.format.write(df, path)
-      graft.sources.Tables.writeLayoutMeta(spark, path, "m" -> m, "kw" -> kw)
-      graft.sources.Tables.recordLayoutLineage(path, "build", embeddings, idCol)
-    }
-
-  private def pqCoded(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      m: Int,
-      kw: Int
-  ): Option[DataFrame] = {
-    import spark.implicits._
-    val first = embeddings.select(col(vecCol)).as[Array[Float]].take(1)
-    if (first.isEmpty) return None
-    val books = spark.sparkContext.broadcast(pqCodebooks(first.head.length, m, kw))
-    Some(embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val b = books.value
-        it.map { case (id, v) => (id, pqAssign(milliScaled(v), b)) }
-      }
-      .toDF(idCol, "codes"))
-  }
-
-  /** Incremental refresh of the stored-codes layout: encode the new batch
-    * with the same closed-form codebooks and append.
-    */
-  def pqAppendLayout(
-      spark: SparkSession,
-      newVectors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      m: Int = 8,
-      kw: Int = 16
-  ): Unit =
-    pqCoded(spark, newVectors, idCol, vecCol, m, kw).foreach { df =>
-      graft.sources.Tables.requireLayoutMeta(spark, path, "m" -> m, "kw" -> kw)
-      graft.sources.Tables.format.append(df, path)
-      graft.sources.Tables.recordLayoutLineage(path, "append", newVectors, idCol)
-    }
-
-  /** ADC scoring + top-k over a (id, codes) frame — THE one definition of
-    * the stored-codes scoring loop, shared by the flat PQ scan and the
-    * IVF-PQ probe path (which only adds a partition filter in front).
-    */
-  private def adcTopK(
-      spark: SparkSession,
-      rows: DataFrame,
-      idCol: String,
-      qtab: Array[Array[Long]],
-      k: Int
-  ): DataFrame = {
-    import spark.implicits._
-    val t = spark.sparkContext.broadcast(qtab)
-    rows
-      .select(col(idCol).cast("long"), col("codes"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        val tt = t.value
-        it.map { case (id, codes) =>
-          var score = 0L
-          var s = 0
-          while (s < codes.length) { score += tt(s)(codes(s) & 0xff); s += 1 }
-          (id, score)
-        }
-      }
-      .toDF(idCol, "pq_dot")
-      .orderBy(col("pq_dot").desc, col(idCol).asc)
-      .limit(k)
-  }
-
-  /** PQ top-k over STORED codes: scan reads m bytes per vector, score =
-    * Σ_s qtab[s][codes[s]] (approximate dot — recall-vs-brute spec-gated;
-    * the assignment+ADC arithmetic itself is exact and oracle-gated by q62).
-    */
-  def pqTopKStored(
-      spark: SparkSession,
-      layoutPath: String,
-      idCol: String,
-      query: Array[Float],
-      k: Int,
-      m: Int = 8,
-      kw: Int = 16
-  ): DataFrame = {
-    graft.sources.Tables.requireLayoutMeta(spark, layoutPath, "m" -> m, "kw" -> kw)
-    val qtab = pqQueryTable(query, pqCodebooks(query.length, m, kw))
-    adcTopK(spark, spark.read.parquet(layoutPath), idCol, qtab, k)
-  }
-
-  /** IVF-PQ layout — the production vector-index shape (the FAISS IVFPQ
-    * family): each vector stored as its PQ CODES (8 B at the defaults),
-    * physically partitioned by its IVF cell. A query then (a) prunes
-    * partition directories to its nProbe cells and (b) scores the surviving
-    * rows by ADC table lookup — IO bounded by nProbe/nCells of an
-    * already-32×-smaller table. Both constants come from the closed-form
-    * fnv1a families, so the combined machinery stays SQL-reproducible.
-    */
-  def ivfPqWriteLayout(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nCells: Int = 16,
-      m: Int = 8,
-      kw: Int = 16
-  ): Unit =
-    ivfPqAssigned(spark, embeddings, idCol, vecCol, nCells, m, kw).foreach { df =>
-      graft.sources.Tables.format.writePartitioned(df, path, "cell")
-      // the layout's parameters are PART of the layout (the band-layout
-      // rule): a probe ranking cells against different centroids, or an ADC
-      // table built from different codebooks, silently returns wrong top-k —
-      // so persist them under the path and validate on every append/probe
-      graft.sources.Tables.writeLayoutMeta(spark, path,
-        "n_cells" -> nCells, "m" -> m, "kw" -> kw)
-      graft.sources.Tables.recordLayoutLineage(path, "build", embeddings, idCol)
-    }
-
-  private def requireIvfPqParams(
-      spark: SparkSession, path: String, nCells: Int, m: Int, kw: Int): Unit =
-    graft.sources.Tables.requireLayoutMeta(spark, path,
-      "n_cells" -> nCells, "m" -> m, "kw" -> kw)
-
-  private def ivfPqAssigned(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      nCells: Int,
-      m: Int,
-      kw: Int
-  ): Option[DataFrame] = {
-    import spark.implicits._
-    val first = embeddings.select(col(vecCol)).as[Array[Float]].take(1)
-    if (first.isEmpty) return None
-    val dim = first.head.length
-    val cents = spark.sparkContext.broadcast(intCentroids(dim, nCells))
-    val books = spark.sparkContext.broadcast(pqCodebooks(dim, m, kw))
-    Some(embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        val cs = cents.value; val b = books.value
-        it.map { case (id, v) =>
-          val a = milliScaled(v)
-          (id, pqAssign(a, b), rankCellsInt(a, cs)(0))
-        }
-      }
-      .toDF(idCol, "codes", "cell"))
-  }
-
-  /** Incremental refresh of the IVF-PQ index: encode + cell-assign the new
-    * batch (both closed-form, so appended rows are byte-identical to what a
-    * full rebuild would produce) and append into the cell partitions.
-    */
-  def ivfPqAppendLayout(
-      spark: SparkSession,
-      newVectors: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nCells: Int = 16,
-      m: Int = 8,
-      kw: Int = 16
-  ): Unit = {
-    requireIvfPqParams(spark, path, nCells, m, kw)
-    ivfPqAssigned(spark, newVectors, idCol, vecCol, nCells, m, kw).foreach { df =>
-      graft.sources.Tables.format.appendPartitioned(df, path, "cell")
-      graft.sources.Tables.recordLayoutLineage(path, "append", newVectors, idCol)
-    }
-  }
-
-  /** IVF-PQ top-k: partition-pruned scan of the probed cells, ADC scoring
-    * over the stored codes. Rows equal "PQ ADC restricted to the gate-IVF
-    * probe set", which is what q73's oracle computes.
-    */
-  def ivfPqTopK(
-      spark: SparkSession,
-      layoutPath: String,
-      idCol: String,
-      query: Array[Float],
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 4,
-      m: Int = 8,
-      kw: Int = 16
-  ): DataFrame = {
-    requireIvfPqParams(spark, layoutPath, nCells, m, kw)
-    val cents = intCentroids(query.length, nCells)
-    val probe = rankCellsInt(milliScaled(query), cents).take(nProbe).toSeq
-    val qtab = pqQueryTable(query, pqCodebooks(query.length, m, kw))
-    adcTopK(
-      spark,
-      spark.read.parquet(layoutPath).filter(col("cell").isin(probe.map(Int.box): _*)),
-      idCol, qtab, k)
+  def adcScore(qtab: Array[Array[Long]], codes: Array[Byte]): Long = {
+    var score = 0L
+    var s = 0
+    while (s < codes.length) { score += qtab(s)(codes(s) & 0xff); s += 1 }
+    score
   }
 
   /** Scalar (int8) quantization — the memory/IO lever at 100 TB: a 64-dim
@@ -997,11 +381,11 @@ object Ann {
   }
 
   /** Quantized brute-force top-k: quantize corpus and query to int8, score
-    * with the exact integer dot, deterministic (score desc, id) order. At
-    * scale the corpus would be stored pre-quantized (a 64 B binary column)
-    * and this becomes a pure scan-side kernel; recall vs the float scorer
-    * is spec-asserted, exact agreement is oracle-gated (quantization is
-    * floor/clamp arithmetic the SQL oracle reproduces).
+    * with the exact integer dot, deterministic (score desc, id) order — the
+    * read-time reference the stored int8 layout must equal row for row.
+    * Recall vs the float scorer is spec-asserted, exact agreement is
+    * oracle-gated (quantization is floor/clamp arithmetic the SQL oracle
+    * reproduces).
     */
   def int8TopK(
       spark: SparkSession,
@@ -1025,185 +409,374 @@ object Ann {
       .limit(k)
   }
 
-  /** IVF (inverted-file) ANN — the coarse-quantizer scale path alongside
-    * LSH: k-means centroids trained on a bounded driver-side sample
-    * (deterministic seeded Lloyd iterations; at 100 TB this step is MLlib
-    * KMeans over a sample table — the 5-line swap is the trainer only),
-    * centroids broadcast, every vector assigned to its nearest centroid (a
-    * narrow map), and a query scans ONLY the `nProbe` nearest cells —
-    * corpus-fraction scanned ≈ nProbe/k instead of 1.
+  // ------------------------------------------------------ vector layouts
+  //
+  // Every probe path that scans the float corpus prunes COMPUTE (rows
+  // scored) but still READS the whole corpus — at 100 TB the win must come
+  // from pruning IO. A VectorLayout materializes the corpus once in a
+  // probe-friendly physical shape (a write-side cost amortized over every
+  // query): partitioned by IVF cell or LSH bucket, so a query's probe set
+  // prunes partition DIRECTORIES at the scan, and/or stored compressed
+  // (int8 `qvec`, PQ `codes`), so every scan reads fewer bytes. Encoding is
+  // a pure function of the vector, so a vector lands in the same partition
+  // with the same bytes whether written at build time or appended later —
+  // what makes append correct without touching existing files. Parquet
+  // partition dirs stand in for Iceberg partition transforms (the
+  // KgPipeline.materializeGraph convention).
+
+  /** How a layout partitions its rows, and which partitions a query probes. */
+  private[graft] sealed trait Partitioning extends Serializable
+
+  /** No partition column: every row is a candidate for every query. */
+  private[graft] case object Unpartitioned extends Partitioning
+
+  /** IVF: `cell` = the nearest of nCells closed-form centroids; a query
+    * probes its nProbe nearest cells, so ≈ nProbe/nCells of the layout is
+    * READ.
     */
-  object Ivf {
-    final case class Model(centroids: Array[Array[Float]]) {
-      def assign(v: Array[Float]): Int = {
-        var best = 0; var bestD = Double.MaxValue
-        var c = 0
-        while (c < centroids.length) {
-          var d = 0.0; var i = 0
-          val ct = centroids(c)
-          while (i < v.length && i < ct.length) { val t = v(i) - ct(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        best
-      }
-      def nearestCells(q: Array[Float], nProbe: Int): Array[Int] =
-        centroids.indices.sortBy { c =>
-          var d = 0.0; var i = 0
-          val ct = centroids(c)
-          while (i < q.length && i < ct.length) { val t = q(i) - ct(i); d += t * t; i += 1 }
-          d
-        }.take(nProbe).toArray
+  private[graft] final case class Cells(nCells: Int, nProbe: Int) extends Partitioning
+
+  /** LSH: `bucket` = the nPlanes-bit integer-plane signature; a query
+    * probes the nPlanes+1 buckets within Hamming 1 of its own.
+    */
+  private[graft] final case class Buckets(nPlanes: Int) extends Partitioning {
+    require(nPlanes < 32, "the bucket signature must fit in an Int partition key")
+  }
+
+  /** What a layout stores per vector, and how a query scores it. */
+  private[graft] sealed trait Encoding extends Serializable
+
+  /** The float vector itself, scored by the exact scaled-integer dot. */
+  private[graft] case object Float32 extends Encoding
+
+  /** The quantized vector as a 64 B binary `qvec` (4× fewer scan bytes
+    * than float32), scored by the exact integer dot.
+    */
+  private[graft] case object Int8 extends Encoding
+
+  /** m PQ codes as a binary `codes` (8 B at the defaults, ~32× fewer scan
+    * bytes), scored by ADC table lookup.
+    */
+  private[graft] final case class Pq(m: Int, kw: Int) extends Encoding
+
+  /** One ANN index: a partitioning × a stored encoding. Adding a layout is
+    * one value of this type; writeLayout, appendLayout, topK and
+    * multiQueryTopK serve every value.
+    */
+  private[graft] final case class VectorLayout(part: Partitioning, enc: Encoding) {
+    /** The layout's parameters are PART of the layout (the band-layout
+      * rule): a probe ranking cells against different centroids, or an ADC
+      * table built from different codebooks, silently returns wrong top-k —
+      * so they are persisted under `<path>/_meta` and validated on every
+      * append and probe.
+      */
+    def meta: Seq[(String, Int)] = (part match {
+      case Cells(nCells, _) => Seq("n_cells" -> nCells)
+      case Buckets(nPlanes) => Seq("n_planes" -> nPlanes)
+      case Unpartitioned    => Nil
+    }) ++ (enc match {
+      case Pq(m, kw) => Seq("m" -> m, "kw" -> kw)
+      case Int8      => Seq("int8_scale" -> 127)
+      case Float32   => Nil
+    })
+
+    def partCol: Option[String] = part match {
+      case _: Cells      => Some("cell")
+      case _: Buckets    => Some("bucket")
+      case Unpartitioned => None
     }
 
-    /** Deterministic Lloyd training on a bounded sample: init = the k
-      * lowest-id vectors, fixed iteration count, stable tie-breaks.
-      */
-    def train(sample: Seq[Array[Float]], k: Int, iters: Int = 5): Model = {
-      require(sample.nonEmpty, "empty training sample")
-      var m = Model(sample.take(k).toArray)
-      (1 to iters).foreach { _ =>
-        val dim = sample.head.length
-        val sums = Array.fill(m.centroids.length)(new Array[Double](dim))
-        val counts = new Array[Long](m.centroids.length)
-        sample.foreach { v =>
-          val c = m.assign(v)
-          counts(c) += 1
-          var i = 0
-          while (i < dim) { sums(c)(i) += v(i); i += 1 }
-        }
-        m = Model(m.centroids.indices.map { c =>
-          if (counts(c) == 0) m.centroids(c) // keep empty cells stable
-          else sums(c).map(x => (x / counts(c)).toFloat)
-        }.toArray)
-      }
-      m
+    /** The stored vector column (the score's input). */
+    def storedCol(vecCol: String): String = enc match {
+      case Float32 => vecCol
+      case Int8    => "qvec"
+      case _: Pq   => "codes"
+    }
+
+    /** The score column's name — part of the oracle schemas. */
+    def scoreName: String = enc match {
+      case Float32 => "scaled_dot"
+      case Int8    => "int8_dot"
+      case _: Pq   => "pq_dot"
     }
   }
 
-  /** IVF top-k: train on the first `sampleN` vectors by id (bounded driver
-    * pull), assign distributed, scan only the probed cells.
+  /** Float vectors partitioned by IVF cell (q47, q61, q64, ann_serve). */
+  private[graft] def ivf(nCells: Int = 16, nProbe: Int = 4): VectorLayout =
+    VectorLayout(Cells(nCells, nProbe), Float32)
+
+  /** Float vectors partitioned by LSH bucket (q37, q63). */
+  private[graft] def lsh(nPlanes: Int = 5): VectorLayout = VectorLayout(Buckets(nPlanes), Float32)
+
+  /** Stored int8 vectors (q60). */
+  private[graft] val int8: VectorLayout = VectorLayout(Unpartitioned, Int8)
+
+  /** Stored PQ codes (q62). */
+  private[graft] def pq(m: Int = 8, kw: Int = 16): VectorLayout = VectorLayout(Unpartitioned, Pq(m, kw))
+
+  /** IVF-PQ — the production vector-index shape (the FAISS IVFPQ family):
+    * PQ codes partitioned by IVF cell, so a query reads nProbe/nCells of an
+    * already-32×-smaller table (q73, ann_serve).
     */
-  def ivfTopK(
+  private[graft] def ivfPq(nCells: Int = 16, nProbe: Int = 4, m: Int = 8, kw: Int = 16): VectorLayout =
+    VectorLayout(Cells(nCells, nProbe), Pq(m, kw))
+
+  /** The raw float corpus, every row scored: nothing to write (q51). */
+  private[graft] val flat: VectorLayout = VectorLayout(Unpartitioned, Float32)
+
+  /** A layout's closed-form constants at one dimension, built once per
+    * call: the per-vector encoder shipped to executors, and the per-query
+    * probe set and scoring state built on the driver.
+    */
+  private final class Codec(layout: VectorLayout, dim: Int) extends Serializable {
+    private val cents = layout.part match { case Cells(n, _) => intCentroids(dim, n); case _ => null }
+    private val planes = layout.part match { case Buckets(n) => intPlanes(dim, n); case _ => null }
+    private val books = layout.enc match { case Pq(m, kw) => pqCodebooks(dim, m, kw); case _ => null }
+
+    /** One vector's stored row: (id, the float vector when stored, the
+      * stored bytes otherwise, the partition key); milliScaled runs once.
+      */
+    def encode(id: Long, v: Array[Float]): (Long, Array[Float], Array[Byte], Int) = {
+      val a = milliScaled(v)
+      val key = layout.part match {
+        case _: Cells      => rankCellsInt(a, cents)(0)
+        case _: Buckets    => signBitsInt(a, planes).toInt
+        case Unpartitioned => 0
+      }
+      layout.enc match {
+        case Float32 => (id, v, null, key)
+        case Int8    => (id, null, quantizeInt8(v), key)
+        case _: Pq   => (id, null, pqAssign(a, books), key)
+      }
+    }
+
+    /** The partition keys query q probes (empty when unpartitioned). */
+    def probes(q: Array[Float]): Seq[Int] = layout.part match {
+      case Cells(_, nProbe) => rankCellsInt(milliScaled(q), cents).take(nProbe).toSeq
+      case Buckets(nPlanes) =>
+        val sig = signBitsInt(milliScaled(q), planes)
+        (sig +: (0 until nPlanes).map(b => sig ^ (1L << b))).map(_.toInt)
+      case Unpartitioned => Nil
+    }
+
+    /** Query q's scoring state, built once: the vector, its quantization,
+      * or its ADC table.
+      */
+    def prepare(q: Array[Float]): AnyRef = layout.enc match {
+      case Float32 => q
+      case Int8    => quantizeInt8(q)
+      case _: Pq   => pqQueryTable(q, books)
+    }
+
+    /** Query q's score over the stored column, as a column: the
+      * scaled-dot and int8-dot Catalyst expressions keep scan → score →
+      * TakeOrderedAndProject one codegen stage with no object fence (q48,
+      * q60); ADC is a UDF over the binary codes with the query table
+      * inlined.
+      */
+    def scoreColumn(spark: SparkSession, q: Array[Float], stored: Column): Column = layout.enc match {
+      case Float32 =>
+        register(spark, "scaled_dot_fast", graft.plans.ScaledDotExpr(_, _))
+        call_function("scaled_dot_fast", stored, typedLit(q))
+      case Int8 =>
+        register(spark, "int8_dot_fast", graft.plans.Int8DotExpr(_, _))
+        call_function("int8_dot_fast", stored, lit(quantizeInt8(q)))
+      case _: Pq =>
+        val qtab = pqQueryTable(q, books)
+        udf((codes: Array[Byte]) => adcScore(qtab, codes)).apply(stored)
+    }
+  }
+
+  private def register(spark: SparkSession, name: String,
+      mk: (Expression, Expression) => Expression): Unit =
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      name, exprs => mk(exprs.head, exprs(1)), "built-in")
+
+  /** One typed score of a stored row against a prepared query — the
+    * multi-query combine's form of Codec.scoreColumn.
+    */
+  private def scoreRow(enc: Encoding, prepared: AnyRef, v: Array[Float], bytes: Array[Byte]): Long =
+    enc match {
+      case Float32 => Sketches.scaledDot(v, prepared.asInstanceOf[Array[Float]])
+      case Int8    => dotInt8(bytes, prepared.asInstanceOf[Array[Byte]])
+      case _: Pq   => adcScore(prepared.asInstanceOf[Array[Array[Long]]], bytes)
+    }
+
+  /** The layout's rows computed ON THE FLY from float embeddings — one
+    * narrow map, no shuffle — in exactly the stored schema: (idCol, stored
+    * vector column[, partition column]). The build and append write these
+    * rows; a probe over them (the unpartitioned gate queries q37/q47)
+    * scores the same rows a stored layout would return, without its IO
+    * pruning.
+    */
+  private[graft] def encoded(
       spark: SparkSession,
+      layout: VectorLayout,
       embeddings: DataFrame,
       idCol: String,
       vecCol: String,
-      query: Array[Float],
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 4,
-      sampleN: Int = 10000
+      dim: Int
   ): DataFrame = {
     import spark.implicits._
-    val sample = embeddings
-      .select(col(idCol).cast("long"), col(vecCol))
-      .as[(Long, Array[Float])]
-      .orderBy(col(idCol).asc) // deterministic sample
-      .limit(sampleN)
-      .collect()
-      .map(_._2)
-    val model = spark.sparkContext.broadcast(Ivf.train(sample.toSeq, nCells))
-    val probe = model.value.nearestCells(query, nProbe).toSet
-    val probeB = spark.sparkContext.broadcast(probe)
-    val q = spark.sparkContext.broadcast(query)
+    val codec = spark.sparkContext.broadcast(new Codec(layout, dim))
     embeddings
       .select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
-        val m = model.value; val pr = probeB.value; val qv = q.value
-        it.flatMap { case (id, v) =>
-          if (pr.contains(m.assign(v))) Some((id, Sketches.cosine(v, qv))) else None
-        }
+        val c = codec.value
+        it.map { case (id, v) => c.encode(id, v) }
       }
-      .toDF("id", "cosine")
-      .orderBy(col("cosine").desc, col("id").asc)
+      .toDF(idCol, "_vec", "_bytes", "_key")
+      .select(Seq(col(idCol),
+        col(if (layout.enc == Float32) "_vec" else "_bytes").as(layout.storedCol(vecCol))) ++
+        layout.partCol.map(col("_key").as(_)): _*)
+  }
+
+  /** encoded() at the batch's own dimension; None for an empty batch. */
+  private def encodedBatch(
+      spark: SparkSession, layout: VectorLayout, batch: DataFrame, idCol: String, vecCol: String
+  ): Option[DataFrame] = {
+    import spark.implicits._
+    batch.select(col(vecCol)).as[Array[Float]].take(1).headOption
+      .map(v => encoded(spark, layout, batch, idCol, vecCol, v.length))
+  }
+
+  /** Materialize a layout: the data (overwrite — which also clears any
+    * previous `_meta`, so the data goes first), then the `_meta` contract,
+    * then one lineage row. Partition assignment is a narrow map (each write
+    * task writes its rows into the partition dirs it holds); the layout is
+    * deterministic from the source table, so rebuild-vs-reuse is a pure
+    * cost decision.
+    */
+  private[graft] def writeLayout(
+      spark: SparkSession,
+      layout: VectorLayout,
+      embeddings: DataFrame,
+      idCol: String,
+      vecCol: String,
+      path: String
+  ): Unit = {
+    encodedBatch(spark, layout, embeddings, idCol, vecCol).foreach { df =>
+      layout.partCol.fold(Tables.format.write(df, path))(Tables.format.writePartitioned(df, path, _))
+      Tables.writeLayoutMeta(spark, path, layout.meta: _*)
+      Tables.recordLayoutLineage(path, "build", embeddings, idCol)
+    }
+  }
+
+  /** Incremental refresh: check the `_meta` contract FIRST (an empty batch
+    * against a mismatched layout still fails), then encode the new vectors
+    * with the same closed-form constants — appended rows are byte-identical
+    * to what a full rebuild would write, in the partitions it would put
+    * them in — append their files, and record the batch's lineage row.
+    * Existing files are untouched and probes prune exactly as before: the
+    * daily-growth lifecycle of a 100 TB index without a rebuild.
+    */
+  private[graft] def appendLayout(
+      spark: SparkSession,
+      layout: VectorLayout,
+      newVectors: DataFrame,
+      idCol: String,
+      vecCol: String,
+      path: String
+  ): Unit = {
+    Tables.requireLayoutMeta(spark, path, layout.meta: _*)
+    encodedBatch(spark, layout, newVectors, idCol, vecCol).foreach { df =>
+      layout.partCol.fold(Tables.format.append(df, path))(Tables.format.appendPartitioned(df, path, _))
+      Tables.recordLayoutLineage(path, "append", newVectors, idCol)
+    }
+  }
+
+  /** A written layout's rows, after validating its `_meta` contract. */
+  private[graft] def stored(spark: SparkSession, layout: VectorLayout, path: String): DataFrame = {
+    Tables.requireLayoutMeta(spark, path, layout.meta: _*)
+    spark.read.parquet(path)
+  }
+
+  /** Keep only the rows in the probed partitions: over a stored layout
+    * this is a PARTITION filter, so the scan lists and reads only those
+    * directories (PlanSpec-asserted for q61/q63/q73).
+    */
+  private def probed(layout: VectorLayout, rows: DataFrame, keys: Seq[Int]): DataFrame =
+    layout.partCol.fold(rows)(p => rows.filter(col(p).isin(keys.distinct.map(Int.box): _*)))
+
+  /** Single-query top-k over a layout's rows (`stored` or `encoded`):
+    * probe-set filter → native score → TakeOrderedAndProject by (score
+    * desc, id asc). Output (idCol, scoreName). The oracle reproduces the
+    * exact probe set and scores from the float source.
+    */
+  private[graft] def topK(
+      spark: SparkSession,
+      layout: VectorLayout,
+      rows: DataFrame,
+      idCol: String,
+      vecCol: String,
+      query: Array[Float],
+      k: Int
+  ): DataFrame = {
+    val codec = new Codec(layout, query.length)
+    probed(layout, rows, codec.probes(query))
+      .select(
+        col(idCol).cast("long").as(idCol),
+        codec.scoreColumn(spark, query, col(layout.storedCol(vecCol))).as(layout.scoreName))
+      .orderBy(col(layout.scoreName).desc, col(idCol).asc)
       .limit(k)
   }
 
   /** Window top-k per probe group — the generic "k nearest per query" shape
-    * for batched multi-query search (Window.partitionBy(query).orderBy desc).
+    * for batched multi-query search (Window.partitionBy(query).orderBy
+    * desc); the reference multiQueryTopK is proven equal to.
     */
   def topKPerGroup(scored: DataFrame, groupCol: String, scoreCol: String, idCol: String, k: Int): DataFrame = {
     val w = Window.partitionBy(col(groupCol)).orderBy(col(scoreCol).desc, col(idCol).asc)
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Typed bounded-buffer top-k per group — the 100×-scale form of
-    * topKPerGroup: a map-side-combining `Aggregator[ScoredId, List, Seq]`
-    * (the Linking.TopKQids pattern), so the group shuffle moves at most k
-    * scored rows per (query, map partition) instead of every scored corpus
-    * row. Same output rows and rank order (score desc, id asc) as the
-    * window form — proven equal in OperatorsSpec; partial/final
-    * ObjectHashAggregate asserted in PlanSpec.
-    */
   final case class ScoredId(id: Long, score: Long)
-
-  class TopKIds(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[ScoredId, List[ScoredId], Seq[ScoredId]] {
-    private def better(a: ScoredId, b: ScoredId): Boolean =
-      a.score > b.score || (a.score == b.score && a.id < b.id)
-    private def insert(buf: List[ScoredId], v: ScoredId): List[ScoredId] = {
-      val (pre, post) = buf.span(b => better(b, v))
-      val merged = pre ::: v :: post
-      if (merged.length > k) merged.take(k) else merged
-    }
-    def zero: List[ScoredId] = Nil
-    def reduce(buf: List[ScoredId], v: ScoredId): List[ScoredId] = insert(buf, v)
-    def merge(a: List[ScoredId], b: List[ScoredId]): List[ScoredId] = b.foldLeft(a)(insert)
-    def finish(buf: List[ScoredId]): Seq[ScoredId] = buf
-    def bufferEncoder: org.apache.spark.sql.Encoder[List[ScoredId]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[ScoredId]]()
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[ScoredId]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredId]]()
-  }
 
   /** One query's results out of the multi-query aggregator. */
   final case class QueryHits(query_id: Long, hits: Seq[ScoredId])
 
-  /** THE (query_id, id, score, rank) projection every multi-query path
-    * shares: posexplode the per-query hit lists in rank order.
+  /** Score-inside-combine batched top-k: ONE typed Aggregator whose buffer
+    * is M bounded top-k lists, scoring every (stored row, query) pair
+    * INSIDE `reduce` — the M× row amplification of the
+    * flatMap-then-aggregate form disappears (the M scores per row live only
+    * as loop state, never as materialized rows), so the aggregation input
+    * is the corpus itself and the only shuffled bytes are the per-partition
+    * buffers (≤ M·k ScoredIds each). Query m scores a row only when the
+    * row's partition key is in m's probe set (`probes` null: every row), so
+    * each query gets exactly its single-query topK result while M queries
+    * share one partition-pruned pass. Per-query state (vector, quantized
+    * vector or ADC table) is prepared once on the driver; the combine is a
+    * while loop with no per-(row, query) closure or allocation. The query
+    * batch is serialized with the aggregator — one copy per TASK, fine for
+    * dashboard-scale M.
     */
-  private def hitsToDf(
-      hits: org.apache.spark.sql.Dataset[QueryHits],
-      idCol: String,
-      scoreName: String
-  ): DataFrame =
-    hits
-      .select(col("query_id"), posexplode(col("hits")).as(Seq("rank0", "hit")))
-      .select(
-        col("query_id"),
-        col("hit.id").as(idCol),
-        col("hit.score").as(scoreName),
-        (col("rank0") + 1).cast("bigint").as("rank"))
-
-  /** Shared buffer machinery of EVERY multi-query top-k aggregator (float
-    * dot, cell-filtered float dot, cell-filtered ADC): M bounded
-    * score-ordered lists, the tie-break order, the bounded insert with the
-    * cheap full-buffer reject, merge, finish, encoders. Subclasses supply
-    * only `reduce` — how a corpus row scores against query m — so the
-    * ordering logic has ONE definition and a tie-break change can never
-    * desynchronize the float and compressed serving paths from their
-    * single-query twins.
-    */
-  abstract class MultiQueryTopKBase[R](queryIds: Seq[Long], k: Int)
+  private[graft] final class MultiQueryTopK(
+      enc: Encoding, queryIds: Array[Long], prepared: Array[AnyRef], probes: Array[Set[Int]], k: Int)
       extends org.apache.spark.sql.expressions.Aggregator[
-        R, Array[List[ScoredId]], Seq[QueryHits]] {
-    private def better(a: ScoredId, b: ScoredId): Boolean =
-      a.score > b.score || (a.score == b.score && a.id < b.id)
+        (Long, Array[Float], Array[Byte], Int), Array[List[ScoredId]], Seq[QueryHits]] {
+    private def better(score: Long, id: Long, than: ScoredId): Boolean =
+      score > than.score || (score == than.score && id < than.id)
     private def insert(buf: List[ScoredId], v: ScoredId): List[ScoredId] = {
-      val (pre, post) = buf.span(b => better(b, v))
+      val (pre, post) = buf.span(b => better(b.score, b.id, v))
       val merged = pre ::: v :: post
       if (merged.length > k) merged.take(k) else merged
     }
-    /** Bounded offer: a full buffer whose tail beats the new score skips
-      * the insert entirely (the common case once the heap warms up).
-      */
-    protected final def offer(buf: Array[List[ScoredId]], m: Int, id: Long, score: Long): Unit = {
-      val b = buf(m)
-      if (b.length < k || better(ScoredId(id, score), b.last)) buf(m) = insert(b, ScoredId(id, score))
-    }
     def zero: Array[List[ScoredId]] = Array.fill(queryIds.length)(Nil)
+    def reduce(buf: Array[List[ScoredId]], row: (Long, Array[Float], Array[Byte], Int)): Array[List[ScoredId]] = {
+      var m = 0
+      while (m < prepared.length) {
+        if (probes == null || probes(m).contains(row._4)) {
+          val score = scoreRow(enc, prepared(m), row._2, row._3)
+          // bounded offer: a full buffer whose tail beats the score skips
+          // the insert (the common case once the buffer warms up)
+          val b = buf(m)
+          if (b.length < k || better(score, row._1, b.last)) buf(m) = insert(b, ScoredId(row._1, score))
+        }
+        m += 1
+      }
+      buf
+    }
     def merge(a: Array[List[ScoredId]], b: Array[List[ScoredId]]): Array[List[ScoredId]] =
       Array.tabulate(queryIds.length)(m => b(m).foldLeft(a(m))(insert))
     def finish(buf: Array[List[ScoredId]]): Seq[QueryHits] =
@@ -1214,192 +787,63 @@ object Ann {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[QueryHits]]()
   }
 
-  /** Score-inside-combine batched ANN: ONE typed Aggregator whose buffer is
-    * M bounded top-k lists, scoring every (corpus row, query) pair INSIDE
-    * `reduce` — the M× row amplification of the flatMap-then-aggregate form
-    * disappears (the M scores per corpus row live only as loop state, never
-    * as materialized/encoded rows). Compute is the same M·N dots; what
-    * changes is that the aggregation input is the corpus itself (N rows) and
-    * the only shuffled bytes are the per-partition buffers (≤ M·k ScoredIds
-    * each). The query batch is serialized with the aggregator — fine for
-    * dashboard-scale M (it's one copy per TASK, not per row); a
-    * million-query batch would switch to a broadcast handle, same shape.
+  /** Batched multi-query top-k over a layout's rows in one pass: the
+    * partition filter is the UNION of the M queries' probe sets, scoring is
+    * per-query-probe-filtered inside the aggregator combine (see
+    * MultiQueryTopK). Output (query_id, idCol, scoreName, rank) — each
+    * query's rows equal an independent topK call, and over `flat` the
+    * flatMap + per-group window form.
     */
-  class MultiQueryTopK(queries: Array[(Long, Array[Float])], k: Int)
-      extends MultiQueryTopKBase[(Long, Array[Float])](queries.map(_._1).toSeq, k) {
-    def reduce(buf: Array[List[ScoredId]], row: (Long, Array[Float])): Array[List[ScoredId]] = {
-      val (id, v) = row
-      var m = 0
-      while (m < queries.length) {
-        offer(buf, m, id, Sketches.scaledDot(v, queries(m)._2))
-        m += 1
-      }
-      buf
-    }
-  }
-
-  /** Batched multi-query exact top-k in one corpus pass with NO M×
-    * intermediate rows (see MultiQueryTopK). Output: (query_id, idCol,
-    * scaled_dot, rank) — identical rows to the flatMap + per-group window
-    * form, proven equal in AnnSpec.
-    */
-  def multiQueryTopK(
+  private[graft] def multiQueryTopK(
       spark: SparkSession,
-      embeddings: DataFrame,
+      layout: VectorLayout,
+      rows: DataFrame,
       idCol: String,
       vecCol: String,
       queries: Array[(Long, Array[Float])],
       k: Int
   ): DataFrame = {
     import spark.implicits._
-    val agg = new MultiQueryTopK(queries, k)
-    hitsToDf(
-      embeddings
-        .select(col(idCol).cast("long"), col(vecCol))
-        .as[(Long, Array[Float])]
-        .select(agg.toColumn)
-        .flatMap(identity(_)),
-      idCol, "scaled_dot")
-  }
-
-  /** MultiQueryTopK over a CELL-AWARE corpus row: query m scores a row only
-    * when the row's stored cell is in m's probe set — the batched form of
-    * IVF probing, so M queries share ONE partition-pruned pass (the scan
-    * reads the UNION of the probe sets; each query still scores exactly its
-    * own probed cells, which keeps the result identical to M independent
-    * ivfTopKGate calls and SQL-expressible).
-    */
-  class MultiQueryTopKCells(
-      queries: Array[(Long, Array[Float], Set[Int])], k: Int)
-      extends MultiQueryTopKBase[(Long, Array[Float], Int)](queries.map(_._1).toSeq, k) {
-    def reduce(buf: Array[List[ScoredId]], row: (Long, Array[Float], Int)): Array[List[ScoredId]] = {
-      val (id, v, cell) = row
-      var m = 0
-      while (m < queries.length) {
-        if (queries(m)._3.contains(cell))
-          offer(buf, m, id, Sketches.scaledDot(v, queries(m)._2))
-        m += 1
-      }
-      buf
-    }
-  }
-
-  /** Batched IVF ANN over the cell-partitioned layout: the scan's partition
-    * filter is the UNION of the M queries' probe sets, scoring is
-    * per-query-cell-filtered inside the aggregator combine — one
-    * partition-pruned corpus pass serves the whole query batch, each query
-    * getting exactly its ivfTopKGate result.
-    */
-  def multiQueryIvfPartitioned(
-      spark: SparkSession,
-      layoutPath: String,
-      idCol: String,
-      vecCol: String,
-      queries: Array[(Long, Array[Float])],
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 4
-  ): DataFrame = {
-    import spark.implicits._
-    graft.sources.Tables.requireLayoutMeta(spark, layoutPath, "n_cells" -> nCells)
-    val cents = intCentroids(queries.head._2.length, nCells)
-    val qs = queries.map { case (qid, qv) =>
-      (qid, qv, rankCellsInt(milliScaled(qv), cents).take(nProbe).toSet)
-    }
-    val union = qs.flatMap(_._3).distinct.toSeq
-    val agg = new MultiQueryTopKCells(qs, k)
-    hitsToDf(
-      spark.read.parquet(layoutPath)
-        .filter(col("cell").isin(union.map(Int.box): _*))
-        .select(col(idCol).cast("long"), col(vecCol), col("cell").cast("int"))
-        .as[(Long, Array[Float], Int)]
-        .select(agg.toColumn)
-        .flatMap(identity(_)),
-      idCol, "scaled_dot")
-  }
-
-  /** MultiQueryTopK over stored PQ CODES with per-query cell filtering —
-    * the IVF-PQ twin of MultiQueryTopKCells: per query m carrying its own
-    * ADC table and probe set, a row is scored only when its stored cell is
-    * in m's probe set, and scoring is m table lookups over the 8-byte code
-    * instead of a float dot. The batched form of the production index probe:
-    * one codes-only, partition-pruned pass serves the whole batch, each
-    * query getting exactly its ivfPqTopK result.
-    */
-  class MultiQueryTopKCodes(
-      queries: Array[(Long, Array[Array[Long]], Set[Int])], k: Int)
-      extends MultiQueryTopKBase[(Long, Array[Byte], Int)](queries.map(_._1).toSeq, k) {
-    def reduce(buf: Array[List[ScoredId]], row: (Long, Array[Byte], Int)): Array[List[ScoredId]] = {
-      val (id, codes, cell) = row
-      var m = 0
-      while (m < queries.length) {
-        if (queries(m)._3.contains(cell)) {
-          val tab = queries(m)._2
-          var score = 0L
-          var s = 0
-          while (s < codes.length) { score += tab(s)(codes(s) & 0xff); s += 1 }
-          offer(buf, m, id, score)
-        }
-        m += 1
-      }
-      buf
-    }
-  }
-
-  /** Batched IVF-PQ ANN over the cell-partitioned stored-codes layout: the
-    * scan's partition filter is the UNION of the M queries' probe sets and
-    * reads ONLY the 8-byte codes column (~32× less IO than the float
-    * layout); scoring is per-query ADC inside the aggregator combine. Each
-    * query's rows equal an independent `ivfPqTopK` call (the serving spec
-    * proves it). Output: (query_id, idCol, pq_dot, rank).
-    */
-  def multiQueryIvfPqPartitioned(
-      spark: SparkSession,
-      layoutPath: String,
-      idCol: String,
-      queries: Array[(Long, Array[Float])],
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 4,
-      m: Int = 8,
-      kw: Int = 16
-  ): DataFrame = {
-    import spark.implicits._
-    requireIvfPqParams(spark, layoutPath, nCells, m, kw)
-    val dim = queries.head._2.length
-    val cents = intCentroids(dim, nCells)
-    val books = pqCodebooks(dim, m, kw)
-    val qs = queries.map { case (qid, qv) =>
-      (qid, pqQueryTable(qv, books), rankCellsInt(milliScaled(qv), cents).take(nProbe).toSet)
-    }
-    val union = qs.flatMap(_._3).distinct.toSeq
-    val agg = new MultiQueryTopKCodes(qs, k)
-    hitsToDf(
-      spark.read.parquet(layoutPath)
-        .filter(col("cell").isin(union.map(Int.box): _*))
-        .select(col(idCol).cast("long"), col("codes"), col("cell").cast("int"))
-        .as[(Long, Array[Byte], Int)]
-        .select(agg.toColumn)
-        .flatMap(identity(_)),
-      idCol, "pq_dot")
-  }
-
-  /** Aggregator-based top-k per group: identical rows/columns to
-    * topKPerGroup (groupCol, idCol, scoreCol, rank), different physical
-    * shape (partial + final agg, ≤ k rows per group cross the shuffle).
-    */
-  def topKPerGroupAgg(scored: DataFrame, groupCol: String, scoreCol: String, idCol: String, k: Int): DataFrame = {
-    val fn = org.apache.spark.sql.functions.udaf(
-      new TopKIds(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[ScoredId]())
-    scored
-      .groupBy(col(groupCol))
-      .agg(fn(col(idCol), col(scoreCol)).as("topk"))
-      .select(col(groupCol), posexplode(col("topk")).as(Seq("rank0", "hit")))
+    val codec = new Codec(layout, queries.head._2.length)
+    val probes = queries.map { case (_, q) => codec.probes(q) }
+    val agg = new MultiQueryTopK(layout.enc, queries.map(_._1), queries.map(q => codec.prepare(q._2)),
+      layout.partCol.map(_ => probes.map(_.toSet)).orNull, k)
+    val stored = col(layout.storedCol(vecCol))
+    val (vec, bytes) =
+      if (layout.enc == Float32) (stored, lit(null).cast("binary"))
+      else (lit(null).cast("array<float>"), stored)
+    probed(layout, rows, probes.flatten.toSeq)
+      .select(col(idCol).cast("long"), vec, bytes, layout.partCol.fold(lit(0))(col(_).cast("int")))
+      .as[(Long, Array[Float], Array[Byte], Int)]
+      .select(agg.toColumn)
+      .flatMap(identity(_))
+      .select(col("query_id"), posexplode(col("hits")).as(Seq("rank0", "hit")))
       .select(
-        col(groupCol),
+        col("query_id"),
         col("hit.id").as(idCol),
-        col("hit.score").as(scoreCol),
-        (col("rank0") + 1).cast("int").as("rank"))
+        col("hit.score").as(layout.scoreName),
+        (col("rank0") + 1).cast("bigint").as("rank"))
   }
+
+  // Call sites compiled against these signatures elsewhere in the build
+  // (the perfbench harness) — one-line forwarders onto the lifecycle.
+
+  def ivfWriteLayoutGate(spark: SparkSession, embeddings: DataFrame, idCol: String, vecCol: String,
+      path: String, nCells: Int = 16): Unit =
+    writeLayout(spark, ivf(nCells), embeddings, idCol, vecCol, path)
+
+  def ivfPqWriteLayout(spark: SparkSession, embeddings: DataFrame, idCol: String, vecCol: String,
+      path: String, nCells: Int = 16, m: Int = 8, kw: Int = 16): Unit =
+    writeLayout(spark, ivfPq(nCells, m = m, kw = kw), embeddings, idCol, vecCol, path)
+
+  def multiQueryIvfPartitioned(spark: SparkSession, layoutPath: String, idCol: String, vecCol: String,
+      queries: Array[(Long, Array[Float])], k: Int, nCells: Int = 16, nProbe: Int = 4): DataFrame =
+    multiQueryTopK(spark, ivf(nCells, nProbe), stored(spark, ivf(nCells, nProbe), layoutPath),
+      idCol, vecCol, queries, k)
+
+  def multiQueryIvfPqPartitioned(spark: SparkSession, layoutPath: String, idCol: String,
+      queries: Array[(Long, Array[Float])], k: Int, nCells: Int = 16, nProbe: Int = 4,
+      m: Int = 8, kw: Int = 16): DataFrame =
+    multiQueryTopK(spark, ivfPq(nCells, nProbe, m, kw),
+      stored(spark, ivfPq(nCells, nProbe, m, kw), layoutPath), idCol, "codes", queries, k)
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
 
 /** Native Catalyst expression for the stored-int8 ANN scoring kernel: the
-  * exact integer dot over two BINARY columns (the 64 B quantized vectors of
-  * Ann.int8WriteLayout), fully inside whole-stage codegen — binary columns
+  * exact integer dot over two BINARY columns (the 64 B quantized vectors of the
+  * Ann.int8 layout), fully inside whole-stage codegen — binary columns
   * arrive in generated code as `byte[]`, so the scan → score →
   * TakeOrderedAndProject path is one fused stage with no object fence (the
   * typed-Dataset form pays a DeserializeToObject boundary per row).

@@ -244,72 +244,34 @@ object StreamIngest {
 
   /** ANN SERVING under Structured Streaming — the production loop of a
     * vector index: query vectors arrive as a stream, and each micro-batch
-    * is answered by ONE partition-pruned probe of the stored IVF layout
-    * (`Ann.multiQueryIvfPartitioned`: the scan's partition filter is the
-    * union of the batch's probe sets, per-query membership checked inside
-    * the aggregator combine). The per-batch `collect` is of QUERY vectors
-    * only — a serving batch is small by definition and `maxBatchQueries`
-    * enforces it — while the corpus side stays distributed and
-    * file-pruned. The sink is IDEMPOTENT per micro-batch: results land in
-    * a `batch_id=<id>` directory written with overwrite, so a crash after
+    * is answered by ONE probe of the stored layout (`Ann.multiQueryTopK`:
+    * the scan's partition filter is the union of the batch's probe sets,
+    * per-query membership checked and scored inside the aggregator
+    * combine). Over the IVF-PQ layout the per-batch corpus read is
+    * codes-only (~32× smaller than the float layout) AND pruned to the
+    * union of the batch's probe cells. The per-batch `collect` is of QUERY
+    * vectors only — a serving batch is small by definition and
+    * `maxBatchQueries` enforces it, LIMIT-bounded in the plan so an
+    * oversized batch trips the guard without ever materializing on the
+    * driver — while the corpus side stays distributed and file-pruned.
+    * The sink is IDEMPOTENT per micro-batch: results land in a
+    * `batch_id=<id>` directory written with overwrite, so a crash after
     * the write but before the offset commit re-executes the batch into the
-    * SAME directory instead of appending duplicates — exactly-once results,
-    * not just exactly-once offsets (the spec proves a re-drain changes
-    * nothing).
+    * SAME directory instead of appending duplicates — exactly-once
+    * results, not just exactly-once offsets (StreamingSpec proves each
+    * served query's rows equal an independent probe and a re-drain
+    * changes nothing).
     */
   def runAnnServe(
       spark: SparkSession,
+      layout: graft.operators.Ann.VectorLayout,
       queriesDir: String,
       layoutPath: String,
       checkpointDir: String,
       outPath: String,
       k: Int = 20,
       maxBatchQueries: Int = 1024
-  ): Unit =
-    serveLoop(spark, queriesDir, checkpointDir, outPath, maxBatchQueries)(qs =>
-      graft.operators.Ann
-        .multiQueryIvfPartitioned(spark, layoutPath, "vec_id", "embedding", qs, k))
-
-  /** ANN serving over the COMPRESSED index — the production shape: each
-    * micro-batch is answered by one probe of the IVF-PQ layout
-    * (`Ann.multiQueryIvfPqPartitioned`), so the per-batch corpus read is
-    * codes-only (~32× smaller than the float layout) AND pruned to the
-    * union of the batch's probe cells, with ADC scoring inside the
-    * aggregator combine. Same idempotent per-`batch_id` sink and same
-    * limit-bounded batch guard as `runAnnServe` — literally the same loop,
-    * parameterized by the probe (the twins share one body, so serving
-    * semantics cannot drift between the float and compressed paths).
-    * StreamingSpec proves each served query's rows equal an independent
-    * `ivfPqTopK` call and a re-drain appends nothing.
-    */
-  def runAnnServePq(
-      spark: SparkSession,
-      queriesDir: String,
-      layoutPath: String,
-      checkpointDir: String,
-      outPath: String,
-      k: Int = 20,
-      maxBatchQueries: Int = 1024
-  ): Unit =
-    serveLoop(spark, queriesDir, checkpointDir, outPath, maxBatchQueries)(qs =>
-      graft.operators.Ann.multiQueryIvfPqPartitioned(spark, layoutPath, "vec_id", qs, k))
-
-  /** THE serving loop both index shapes run (float IVF and IVF-PQ): drain
-    * the query stream with AvailableNow; per micro-batch, collect the
-    * (limit-bounded) query vectors — the collect is of QUERY rows only, the
-    * corpus side stays distributed and file-pruned inside `probe` — and
-    * land the probe's result in a `batch_id=<id>` directory with overwrite,
-    * so a crash between write and offset commit re-executes into the SAME
-    * directory instead of appending duplicates: exactly-once results, not
-    * just exactly-once offsets.
-    */
-  private def serveLoop(
-      spark: SparkSession,
-      queriesDir: String,
-      checkpointDir: String,
-      outPath: String,
-      maxBatchQueries: Int
-  )(probe: Array[(Long, Array[Float])] => org.apache.spark.sql.DataFrame): Unit = {
+  ): Unit = {
     import spark.implicits._
     val stream = spark.readStream
       .schema("query_id BIGINT, embedding ARRAY<FLOAT>")
@@ -318,8 +280,6 @@ object StreamIngest {
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        // the collect is LIMIT-bounded in the plan, so an oversized batch
-        // trips the guard without ever materializing on the driver
         val qs = batch
           .select(col("query_id").cast("long"), col("embedding"))
           .limit(maxBatchQueries + 1)
@@ -328,7 +288,9 @@ object StreamIngest {
           s"serving batch exceeds $maxBatchQueries queries - " +
             "split the input or raise the bound")
         if (qs.nonEmpty)
-          probe(qs).write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
+          graft.operators.Ann.multiQueryTopK(spark, layout,
+              graft.operators.Ann.stored(spark, layout, layoutPath), "vec_id", "embedding", qs, k)
+            .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
       }
       .start()
     q.awaitTermination()

@@ -310,42 +310,50 @@ class PlanSpec extends SparkSpec {
 
   test("IVF layout append: merged layout equals one-shot build; probe still prunes; lineage recorded") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, input_file_name}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_append").toFile.toString
-    val pSplit = s"$tmp/split"
-    val pOne = s"$tmp/oneshot"
+    import org.apache.spark.sql.functions.col
+    import operators.Ann
+    val tmp = java.nio.file.Files.createTempDirectory("graft_layout_append").toFile.toString
     val emb = Tables.read(spark, sfDir, "embeddings")
-    // base build from 2/3 of the corpus, then append the remaining third
-    operators.Ann.ivfWriteLayoutGate(spark, emb.filter(col("vec_id") % 3 =!= 0),
-      "vec_id", "embedding", pSplit, nCells = 16)
-    operators.Ann.ivfAppendLayout(spark, emb.filter(col("vec_id") % 3 === 0),
-      "vec_id", "embedding", pSplit, nCells = 16)
-    operators.Ann.ivfWriteLayoutGate(spark, emb, "vec_id", "embedding", pOne, nCells = 16)
-    // appended rows landed in the same cells a full rebuild assigns
-    def cellCounts(p: String) = spark.read.parquet(p).groupBy("cell").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(cellCounts(pSplit) == cellCounts(pOne))
-    // probe over the merged layout == probe over the one-shot layout
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
-    def topk(p: String) = operators.Ann
-      .ivfTopKPartitioned(spark, p, "vec_id", "embedding", qv, k = 20, nCells = 16, nProbe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(topk(pSplit) == topk(pOne))
-    // the probe still reads ONLY the probed cells' files — append must not
-    // break partition pruning (appended files live inside cell dirs)
-    val probe = operators.Ann
-      .rankCellsInt(operators.Ann.milliScaled(qv), operators.Ann.intCentroids(qv.length, 16))
-      .take(4).toSeq
-    val layout = spark.read.parquet(pSplit)
-    val filesAll = layout.select(input_file_name()).distinct().count()
-    val filesPruned = layout.filter(col("cell").isin(probe.map(Int.box): _*))
-      .select(input_file_name()).distinct().count()
-    assert(filesPruned > 0 && filesPruned < filesAll,
-      s"merged layout lost file pruning: pruned=$filesPruned all=$filesAll")
-    // lineage: build + append rows cover every vector exactly once
-    val lin = Tables.readLayoutLineage(spark, pSplit).collect()
-    assert(lin.map(_.getAs[String]("op")).sorted.toSeq == Seq("append", "build"))
-    assert(lin.map(_.getAs[Long]("rows")).sum == emb.count())
+    // stored rows with binary columns compared by value
+    def rows(p: String) = spark.read.parquet(p).collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.toSeq
+      case v              => v
+    }).toSet
+    Seq("ivf" -> Ann.ivf(), "lsh" -> Ann.lsh(), "int8" -> Ann.int8, "pq" -> Ann.pq(), "ivfpq" -> Ann.ivfPq())
+      .foreach { case (kind, layout) =>
+        val pSplit = s"$tmp/$kind-split"
+        val pOne = s"$tmp/$kind-oneshot"
+        // base build from 2/3 of the corpus, then append the remaining third
+        Ann.writeLayout(spark, layout, emb.filter(col("vec_id") % 3 =!= 0), "vec_id", "embedding", pSplit)
+        Ann.appendLayout(spark, layout, emb.filter(col("vec_id") % 3 === 0), "vec_id", "embedding", pSplit)
+        Ann.writeLayout(spark, layout, emb, "vec_id", "embedding", pOne)
+        // appended rows are the rows a full rebuild writes, in the same
+        // partitions (the partition column reads back as a value)
+        assert(rows(pSplit) == rows(pOne), kind)
+        // probe over the merged layout == probe over the one-shot layout
+        def probe(p: String) =
+          Ann.topK(spark, layout, Ann.stored(spark, layout, p), "vec_id", "embedding", qv, k = 20)
+        val merged = probe(pSplit)
+        val got = merged.collect().map(_.toSeq).toSeq
+        assert(got.nonEmpty && got == probe(pOne).collect().map(_.toSeq).toSeq, kind)
+        // a partitioned layout's probe still reads ONLY the probed
+        // partitions' files — append must not break partition pruning
+        // (appended files live inside the partition dirs)
+        layout.partCol.foreach { _ =>
+          val scan = initialPlan(merged).collect {
+            case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+          }.head
+          val filesRead = scan.metrics("numFiles").value
+          val filesAll = spark.read.parquet(pSplit).inputFiles.length
+          assert(filesRead > 0 && filesRead < filesAll,
+            s"$kind merged layout lost file pruning: read=$filesRead all=$filesAll")
+        }
+        // lineage: build + append rows cover every vector exactly once
+        val lin = Tables.readLayoutLineage(spark, pSplit).collect()
+        assert(lin.map(_.getAs[String]("op")).sorted.toSeq == Seq("append", "build"), kind)
+        assert(lin.map(_.getAs[Long]("rows")).sum == emb.count(), kind)
+      }
   }
 
   test("stored-int8 native scoring: no object fence; rows equal the typed stored form") {
@@ -358,8 +366,7 @@ class PlanSpec extends SparkSpec {
     assert(initialPlan(df).toString.contains("int8_dot_fast"))
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
-    val typed = operators.Ann
-      .int8TopKStored(spark, Queries.layoutPath("int8_q127", sfDir), "vec_id", qv, 20)
+    val typed = operators.Ann.int8TopK(spark, emb, "vec_id", "embedding", qv, 20)
       .collect().map(_.toSeq).toSeq
     assert(df.collect().map(_.toSeq).toSeq == typed && typed.nonEmpty)
   }

@@ -8,6 +8,18 @@ import org.apache.spark.sql.functions._
 
 class OperatorsSpec extends SparkSpec {
 
+  /** Single-query ANN top-k over `layout` encoded on the fly from the
+    * embeddings (the unpartitioned gate form of a layout probe).
+    */
+  private def onTheFly(layout: Ann.VectorLayout, emb: org.apache.spark.sql.DataFrame,
+      q: Array[Float], k: Int) =
+    Ann.topK(spark, layout, Ann.encoded(spark, layout, emb, "vec_id", "embedding", q.length),
+      "vec_id", "embedding", q, k)
+
+  /** Single-query ANN top-k over the layout stored at `path`. */
+  private def probe(layout: Ann.VectorLayout, path: String, q: Array[Float], k: Int) =
+    Ann.topK(spark, layout, Ann.stored(spark, layout, path), "vec_id", "embedding", q, k)
+
   /** (id1, id2) row set of a pair-emitting operator's output. */
   private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = df
     .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -189,40 +201,6 @@ class OperatorsSpec extends SparkSpec {
     assert(pairs.forall(_.getAs[Int]("hamming") <= 6))
   }
 
-  test("ANN: LSH top-k ⊆ high recall vs brute force; query vec is its own nearest") {
-    import spark.implicits._
-    val emb = Tables.read(spark, sfDir, "embeddings")
-    val q = emb.filter(col("vec_id") === 0).select("embedding")
-      .as[Array[Float]].head()
-    val brute = Ann.bruteForceTopK(spark, emb, "vec_id", "embedding", q, 10)
-      .collect().map(_.getLong(0))
-    assert(brute.head == 0L) // self-similarity = 1.0 tops the list
-    // plane count scales with corpus size: ~log2(N / bucketTarget); 4 planes
-    // for 500 vectors ≈ 30/bucket (the default 12 targets ≥10^6 vectors)
-    val lsh = Ann.lshTopK(spark, emb, "vec_id", "embedding", q, 10, nPlanes = 4)
-      .collect().map(_.getLong(0)).toSet
-    assert(lsh.contains(0L))
-    // recall of LSH against brute-force top-10 should be non-trivial
-    assert(brute.count(lsh.contains) >= 3)
-  }
-
-  test("IVF ANN: self is found, recall vs brute force is non-trivial, cells partition the corpus") {
-    import spark.implicits._
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") === 0)
-      .select("embedding").as[Array[Float]].head()
-    val brute = Ann.bruteForceTopK(spark, emb, "vec_id", "embedding", q, 10)
-      .collect().map(_.getLong(0))
-    val ivf = Ann.ivfTopK(spark, emb, "vec_id", "embedding", q, 10, nCells = 8, nProbe = 3)
-      .collect().map(_.getLong(0)).toSet
-    assert(ivf.contains(0L)) // the query's own cell is always probed
-    assert(brute.count(ivf.contains) >= 5, s"ivf=$ivf brute=${brute.toSeq}")
-    // probing fewer cells scans a strict subset of the corpus: full probe == brute
-    val full = Ann.ivfTopK(spark, emb, "vec_id", "embedding", q, 10, nCells = 8, nProbe = 8)
-      .collect().map(_.getLong(0))
-    assert(full.toSeq == brute.toSeq)
-  }
-
   test("canonicalizeUrl: scheme/host case, default vs non-default ports, tracking params, sorting, fragments") {
     import spark.implicits._
     import graft.functions.TextAnalysis
@@ -390,12 +368,11 @@ class OperatorsSpec extends SparkSpec {
       .collect()
       .map { case (id, v) => (id, graft.functions.Sketches.scaledDot(v, q)) }
       .sortBy { case (id, d) => (-d, id) }.take(10).map(_._1).toSeq
-    val fullProbe = Ann.ivfTopKGate(spark, emb, "vec_id", "embedding", q, 10, nCells = 16, nProbe = 16)
+    val fullProbe = onTheFly(Ann.ivf(nCells = 16, nProbe = 16), emb, q, 10)
       .collect().map(_.getLong(0)).toSeq
     assert(fullProbe == bruteByDot)
     // the query's own signature is Hamming 0 from itself ⇒ always scanned
-    val lshGate = Ann.lshTopKGate(spark, emb, "vec_id", "embedding", q, 10, nPlanes = 5)
-      .collect().map(_.getLong(0)).toSet
+    val lshGate = onTheFly(Ann.lsh(nPlanes = 5), emb, q, 10).collect().map(_.getLong(0)).toSet
     assert(lshGate.contains(0L))
     // rankCellsInt's reduced score (Σx²−2a·x) ranks exactly like true ‖a−x‖²
     val cents = Ann.intCentroids(q.length, 16)
@@ -405,26 +382,6 @@ class OperatorsSpec extends SparkSpec {
       (d, c)
     }.toSeq
     assert(Ann.rankCellsInt(a, cents).toSeq == byTrueDist)
-  }
-
-  test("topKPerGroupAgg == topKPerGroup on multi-query ANN scoring") {
-    import spark.implicits._
-    import graft.functions.Sketches
-    val emb = Tables.read(spark, sfDir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 4)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val qB = spark.sparkContext.broadcast(queries)
-    val scored = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) => qB.value.map { case (q, qv) => (q, id, Sketches.scaledDot(v, qv)) } }
-      .toDF("query_id", "vec_id", "scaled_dot")
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"), r.getAs[Long]("scaled_dot"),
-        r.getAs[Int]("rank"))
-    val win = Ann.topKPerGroup(scored, "query_id", "scaled_dot", "vec_id", 7).collect().map(key).toSet
-    val agg = Ann.topKPerGroupAgg(scored, "query_id", "scaled_dot", "vec_id", 7).collect().map(key).toSet
-    assert(agg == win && agg.size == 4 * 7)
   }
 
   test("int8 quantized ANN: quantization bounds, self found, high recall vs float brute force") {
@@ -509,7 +466,7 @@ class OperatorsSpec extends SparkSpec {
     val win = Ann.topKPerGroup(scored, "query_id", "scaled_dot", "vec_id", 7)
       .select(col("query_id"), col("vec_id"), col("scaled_dot"), col("rank").cast("long"))
       .collect().map(_.toSeq).toSet
-    val fused = Ann.multiQueryTopK(spark, emb, "vec_id", "embedding", queries, 7)
+    val fused = Ann.multiQueryTopK(spark, Ann.flat, emb, "vec_id", "embedding", queries, 7)
       .collect().map(_.toSeq).toSet
     assert(fused == win && fused.size == 4 * 7)
   }
@@ -519,7 +476,7 @@ class OperatorsSpec extends SparkSpec {
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     val tmp = java.nio.file.Files.createTempDirectory("graft_int8_spec").toString
-    Ann.int8WriteLayout(spark, emb, "vec_id", "embedding", s"$tmp/int8")
+    Ann.writeLayout(spark, Ann.int8, emb, "vec_id", "embedding", s"$tmp/int8")
     // float comparison table with the SAME columns-minus-quantization, so the
     // size ratio isolates the quantized column (the source table carries an
     // extra label column that would inflate the ratio in our favor)
@@ -531,8 +488,7 @@ class OperatorsSpec extends SparkSpec {
     }
     val ratio = bytes(s"$tmp/float").toDouble / bytes(s"$tmp/int8")
     assert(ratio >= 3.0, s"int8 layout only ${ratio}x smaller than float32")
-    val stored = Ann.int8TopKStored(spark, s"$tmp/int8", "vec_id", qv, 10)
-      .collect().map(_.toSeq).toSeq
+    val stored = probe(Ann.int8, s"$tmp/int8", qv, 10).collect().map(_.toSeq).toSeq
     val onTheFly = Ann.int8TopK(spark, emb, "vec_id", "embedding", qv, 10)
       .collect().map(_.toSeq).toSeq
     assert(stored == onTheFly && stored.nonEmpty)
@@ -543,11 +499,10 @@ class OperatorsSpec extends SparkSpec {
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
-    Ann.ivfWriteLayoutGate(spark, emb, "vec_id", "embedding", s"$tmp/cells", nCells = 16)
-    val part = Ann.ivfTopKPartitioned(spark, s"$tmp/cells", "vec_id", "embedding", qv, 20, 16, 4)
-      .collect().map(_.toSeq).toSeq
-    val gate = Ann.ivfTopKGate(spark, emb, "vec_id", "embedding", qv, 20, 16, 4)
-      .collect().map(_.toSeq).toSeq
+    val ivf = Ann.ivf(nCells = 16, nProbe = 4)
+    Ann.writeLayout(spark, ivf, emb, "vec_id", "embedding", s"$tmp/cells")
+    val part = probe(ivf, s"$tmp/cells", qv, 20).collect().map(_.toSeq).toSeq
+    val gate = onTheFly(ivf, emb, qv, 20).collect().map(_.toSeq).toSeq
     assert(part == gate && part.nonEmpty)
   }
 
@@ -556,11 +511,10 @@ class OperatorsSpec extends SparkSpec {
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     val tmp = java.nio.file.Files.createTempDirectory("graft_lsh_spec").toString
-    Ann.lshWriteLayoutGate(spark, emb, "vec_id", "embedding", s"$tmp/buckets", nPlanes = 5)
-    val part = Ann.lshTopKPartitioned(spark, s"$tmp/buckets", "vec_id", "embedding", qv, 20, 5)
-      .collect().map(_.toSeq).toSeq
-    val gate = Ann.lshTopKGate(spark, emb, "vec_id", "embedding", qv, 20, 5)
-      .collect().map(_.toSeq).toSeq
+    val lsh = Ann.lsh(nPlanes = 5)
+    Ann.writeLayout(spark, lsh, emb, "vec_id", "embedding", s"$tmp/buckets")
+    val part = probe(lsh, s"$tmp/buckets", qv, 20).collect().map(_.toSeq).toSeq
+    val gate = onTheFly(lsh, emb, qv, 20).collect().map(_.toSeq).toSeq
     assert(part == gate && part.nonEmpty)
   }
 
@@ -648,43 +602,46 @@ class OperatorsSpec extends SparkSpec {
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     val tmp = java.nio.file.Files.createTempDirectory("graft_meta_guard").toString
-    Ann.ivfWriteLayoutGate(spark, emb, "vec_id", "embedding", s"$tmp/cells", nCells = 16)
-    // a 32-cell probe of a 16-cell layout would rank cells against the
-    // wrong centroid family and silently return wrong neighbors — the meta
-    // guard turns that into an error naming the parameter
-    val e1 = intercept[IllegalArgumentException] {
-      Ann.ivfTopKPartitioned(spark, s"$tmp/cells", "vec_id", "embedding", qv, 20,
-        nCells = 32, nProbe = 4)
+    // every layout kind: (written layout, a reader with mismatched constants,
+    // the parameter the error must name). A 32-cell probe of a 16-cell
+    // layout ranks cells against the wrong centroid family, an ADC table
+    // from the wrong codebooks mis-scores every code — silently wrong
+    // neighbors, unless the meta guard turns it into an error. int8 has no
+    // free constant, so its mismatch is a reader of another kind (the meta
+    // lacks n_cells at all — the by-name read itself refuses).
+    val kinds = Seq(
+      ("ivf", Ann.ivf(nCells = 16), Ann.ivf(nCells = 32), "n_cells"),
+      ("lsh", Ann.lsh(nPlanes = 5), Ann.lsh(nPlanes = 4), "n_planes"),
+      ("int8", Ann.int8, Ann.ivfPq(), "n_cells"),
+      ("pq", Ann.pq(m = 8, kw = 16), Ann.pq(m = 8, kw = 8), "kw"),
+      ("ivfpq", Ann.ivfPq(kw = 16), Ann.ivfPq(kw = 8), "kw"))
+    kinds.foreach { case (kind, layout, wrong, param) =>
+      val p = s"$tmp/$kind"
+      Ann.writeLayout(spark, layout, emb, "vec_id", "embedding", p)
+      val e1 = intercept[IllegalArgumentException](probe(wrong, p, qv, 20))
+      assert(e1.getMessage.contains(param), s"$kind probe: ${e1.getMessage}")
+      // append checks the contract before anything else: an EMPTY batch
+      // against a mismatched layout fails too
+      Seq(emb.limit(1), emb.limit(0)).foreach { batch =>
+        val e2 = intercept[IllegalArgumentException] {
+          Ann.appendLayout(spark, wrong, batch, "vec_id", "embedding", p)
+        }
+        assert(e2.getMessage.contains(param), s"$kind append: ${e2.getMessage}")
+      }
+      assert(probe(layout, p, qv, 20).collect().nonEmpty, kind)
     }
-    assert(e1.getMessage.contains("n_cells"), e1.getMessage)
-    Ann.pqWriteLayout(spark, emb, "vec_id", "embedding", s"$tmp/codes", m = 8, kw = 16)
-    val e2 = intercept[IllegalArgumentException] {
-      Ann.pqTopKStored(spark, s"$tmp/codes", "vec_id", qv, 20, m = 8, kw = 8)
-    }
-    assert(e2.getMessage.contains("kw"), e2.getMessage)
-    val e3 = intercept[IllegalArgumentException] {
-      Ann.lshAppendLayout(spark, emb.limit(1), "vec_id", "embedding", s"$tmp/cells", nPlanes = 5)
-    }
-    // appending LSH rows into an IVF layout: the meta has no n_planes
-    // field at all — the by-name read itself refuses
-    assert(e3.getMessage.contains("n_planes"), e3.getMessage)
 
     // rebuild-in-place flips the layout's contract: writeLayoutMeta must
     // DROP the memoized validation of the old parameters, so a probe that
     // matched before the rebuild fails after it (instead of the memo
     // silently disabling the guard for exactly the rebuild case)
-    Ann.ivfWriteLayoutGate(spark, emb, "vec_id", "embedding", s"$tmp/rebuilt", nCells = 16)
-    Ann.ivfTopKPartitioned(spark, s"$tmp/rebuilt", "vec_id", "embedding", qv, 20,
-      nCells = 16, nProbe = 4).collect() // validates + memoizes n_cells=16
-    Ann.ivfWriteLayoutGate(spark, emb, "vec_id", "embedding", s"$tmp/rebuilt", nCells = 8)
-    val e4 = intercept[IllegalArgumentException] {
-      Ann.ivfTopKPartitioned(spark, s"$tmp/rebuilt", "vec_id", "embedding", qv, 20,
-        nCells = 16, nProbe = 4)
-    }
+    Ann.writeLayout(spark, Ann.ivf(nCells = 16), emb, "vec_id", "embedding", s"$tmp/rebuilt")
+    probe(Ann.ivf(nCells = 16), s"$tmp/rebuilt", qv, 20).collect() // validates + memoizes n_cells=16
+    Ann.writeLayout(spark, Ann.ivf(nCells = 8), emb, "vec_id", "embedding", s"$tmp/rebuilt")
+    val e4 = intercept[IllegalArgumentException](probe(Ann.ivf(nCells = 16), s"$tmp/rebuilt", qv, 20))
     assert(e4.getMessage.contains("n_cells"), e4.getMessage)
     // ...and the rebuilt contract itself validates
-    assert(Ann.ivfTopKPartitioned(spark, s"$tmp/rebuilt", "vec_id", "embedding", qv, 20,
-      nCells = 8, nProbe = 4).collect().nonEmpty)
+    assert(probe(Ann.ivf(nCells = 8), s"$tmp/rebuilt", qv, 20).collect().nonEmpty)
   }
 
   test("batched IVF over the partitioned layout == M independent ivfTopKGate calls") {
@@ -694,12 +651,13 @@ class OperatorsSpec extends SparkSpec {
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
     val tmp = java.nio.file.Files.createTempDirectory("graft_mivf_spec").toString
-    Ann.ivfWriteLayoutGate(spark, emb, "vec_id", "embedding", s"$tmp/cells", nCells = 16)
-    val batched = Ann.multiQueryIvfPartitioned(
-        spark, s"$tmp/cells", "vec_id", "embedding", queries, k = 10)
+    val ivf = Ann.ivf(nCells = 16, nProbe = 4)
+    Ann.writeLayout(spark, ivf, emb, "vec_id", "embedding", s"$tmp/cells")
+    val batched = Ann.multiQueryTopK(
+        spark, ivf, Ann.stored(spark, ivf, s"$tmp/cells"), "vec_id", "embedding", queries, k = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val independent = queries.flatMap { case (qid, qv) =>
-      Ann.ivfTopKGate(spark, emb, "vec_id", "embedding", qv, 10, 16, 4)
+      onTheFly(ivf, emb, qv, 10)
         .collect().zipWithIndex
         .map { case (r, i) => (qid, r.getLong(0), r.getLong(1), (i + 1).toLong) }
     }.toSet
@@ -711,8 +669,8 @@ class OperatorsSpec extends SparkSpec {
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     val tmp = java.nio.file.Files.createTempDirectory("graft_pq_spec").toString
-    Ann.pqWriteLayout(spark, emb, "vec_id", "embedding", s"$tmp/codes", m = 8, kw = 16)
-    val stored = Ann.pqTopKStored(spark, s"$tmp/codes", "vec_id", qv, 20, 8, 16)
+    Ann.writeLayout(spark, Ann.pq(m = 8, kw = 16), emb, "vec_id", "embedding", s"$tmp/codes")
+    val stored = probe(Ann.pq(m = 8, kw = 16), s"$tmp/codes", qv, 20)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     // exactness of the machinery: recompute assignment + ADC on the driver
     // from the float source and reproduce every (id, score) pair

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.Ann
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -52,21 +53,21 @@ class StreamingSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-annserve").toString
     val layout = s"$tmp/ivf"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    graft.operators.Ann.ivfWriteLayoutGate(spark, emb, "vec_id", "embedding", layout, nCells = 16)
+    Ann.writeLayout(spark, Ann.ivf(nCells = 16), emb, "vec_id", "embedding", layout)
     // the "query stream": the first 8 vectors arriving as a file batch
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("long").as("query_id"), col("embedding"))
     queries.write.mode("overwrite").parquet(s"$tmp/queries")
-    StreamIngest.runAnnServe(spark, s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out")
+    StreamIngest.runAnnServe(spark, Ann.ivf(), s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out")
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val served = key(spark.read.parquet(s"$tmp/out"))
-    val batch = key(graft.operators.Ann.multiQueryIvfPartitioned(
-      spark, layout, "vec_id", "embedding",
+    val batch = key(Ann.multiQueryTopK(
+      spark, Ann.ivf(), Ann.stored(spark, Ann.ivf(), layout), "vec_id", "embedding",
       queries.as[(Long, Array[Float])].collect().sortBy(_._1), k = 20))
     assert(served == batch && batch.nonEmpty, s"served=${served.size} batch=${batch.size}")
     // exactly-once: a second drain from the same checkpoint answers nothing new
-    StreamIngest.runAnnServe(spark, s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out")
+    StreamIngest.runAnnServe(spark, Ann.ivf(), s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out")
     assert(key(spark.read.parquet(s"$tmp/out")) == served)
   }
 
@@ -137,11 +138,11 @@ class StreamingSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-annserve-pq").toString
     val layout = s"$tmp/ivfpq"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    graft.operators.Ann.ivfPqWriteLayout(spark, emb, "vec_id", "embedding", layout)
+    Ann.writeLayout(spark, Ann.ivfPq(), emb, "vec_id", "embedding", layout)
     val queries = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").cast("long").as("query_id"), col("embedding"))
     queries.write.mode("overwrite").parquet(s"$tmp/queries")
-    StreamIngest.runAnnServePq(spark, s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out")
+    StreamIngest.runAnnServe(spark, Ann.ivfPq(), s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out")
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     val served = key(spark.read.parquet(s"$tmp/out")
@@ -150,14 +151,14 @@ class StreamingSpec extends SparkSpec {
     // probe (the q73-gated path) — the batched serving loop is pure IO
     // sharing, never a result change
     val expected = queries.as[(Long, Array[Float])].collect().flatMap { case (qid, qv) =>
-      graft.operators.Ann.ivfPqTopK(spark, layout, "vec_id", qv, k = 20)
+      Ann.topK(spark, Ann.ivfPq(), Ann.stored(spark, Ann.ivfPq(), layout), "vec_id", "embedding", qv, k = 20)
         .collect().zipWithIndex
         .map { case (r, i) => (qid, r.getLong(0), r.getLong(1), (i + 1).toLong) }
     }.toSet
     assert(served == expected && expected.nonEmpty,
       s"served=${served.size} expected=${expected.size}")
     // exactly-once: second drain from the same checkpoint answers nothing new
-    StreamIngest.runAnnServePq(spark, s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out")
+    StreamIngest.runAnnServe(spark, Ann.ivfPq(), s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out")
     assert(key(spark.read.parquet(s"$tmp/out")
       .select("query_id", "vec_id", "pq_dot", "rank")) == served)
   }
@@ -185,11 +186,11 @@ class StreamingSpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft-annserve-guard").toString
     val layout = s"$tmp/ivf"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    graft.operators.Ann.ivfWriteLayoutGate(spark, emb, "vec_id", "embedding", layout, nCells = 16)
+    Ann.writeLayout(spark, Ann.ivf(nCells = 16), emb, "vec_id", "embedding", layout)
     emb.select(col("vec_id").cast("long").as("query_id"), col("embedding"))
       .limit(10).write.mode("overwrite").parquet(s"$tmp/queries")
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      StreamIngest.runAnnServe(spark, s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out",
+      StreamIngest.runAnnServe(spark, Ann.ivf(), s"$tmp/queries", layout, s"$tmp/ckpt", s"$tmp/out",
         maxBatchQueries = 4)
     }
     assert(e.getMessage.contains("serving batch") ||
