@@ -1019,7 +1019,7 @@ object Queries {
     * u ∈ [-1,1] from fnv1a(id:i) — cosine(original, copy) ≥ 0.999999 while
     * no natural pair reaches 0.61 at any test SF (measured), so the expected
     * output is exactly the planted (i, i+1e6) pairs and the banded-LSH
-    * recall of Ann.nearDupPairs is oracle-checkable in plain SQL.
+    * recall of Dedup.nearDupPairs is oracle-checkable in plain SQL.
     */
   /** (corpus, planted near-dup copies) — shared by q38, q90, and the
     * incremental-union spec.
@@ -1043,7 +1043,7 @@ object Queries {
 
   def q38EmbedNearDup(s: SparkSession, dir: String): DataFrame = {
     val (emb, planted) = plantedEmb(s, dir)
-    Ann.nearDupPairs(s, emb.unionByName(planted), "vec_id", "embedding", minCosine = 0.95)
+    Dedup.nearDupPairs(s, emb.unionByName(planted), "vec_id", "embedding", minCosine = 0.95)
       .select(col("id1"), col("id2"))
   }
 
@@ -1614,7 +1614,8 @@ object Queries {
   // probe/append — earlier cached layouts lack the record and must rebuild
   // v5: the int8 layout records its quantizer scale in _meta, LSH buckets
   // are Int partition keys, and every ANN layout is split-built
-  private val LayoutVersion = "v5"
+  // v6: the MinHash signature layout records num_hashes/shingle_n in _meta
+  private val LayoutVersion = "v6"
 
   /** `kind` must encode every layout PARAMETER (cell/plane/codebook counts)
     * — e.g. "ivfcells_c16" — so a parameter change misses the cache instead
@@ -2227,23 +2228,19 @@ object Queries {
        |LEFT JOIN agg a ON a.doc_id = d.doc_id""".stripMargin
   }
 
-  /** The shared stored-signature layout (q75, q77): built incrementally —
-    * even-id base write, odd-id append — like the ANN layouts.
+  /** The shared stored-signature layout (q75, q77, q83, q92): built
+    * incrementally — even-id base write, odd-id append — like the ANN
+    * layouts, and read back through its `_meta` guard.
     */
-  private def sigLayout(s: SparkSession, dir: String): String = {
+  private def storedSigs(s: SparkSession, dir: String): DataFrame = {
     val p = layoutPath("minhashsig_h64s5", dir, srcTable = "documents")
     ensureLayout(p) {
       val docs = t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
       Dedup.writeSignatureLayout(s, docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", p)
       Dedup.appendSignatureLayout(s, docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", p)
     }
+    Dedup.storedSignatures(s, p)
   }
-
-  /** Diagnostics-only accessor for the stored signature layout path (used by
-    * graft.BenchExtra to isolate stage costs — not a query path).
-    */
-  private[graft] def sigLayoutForDiagnostics(s: SparkSession, dir: String): String =
-    sigLayout(s, dir)
 
   /** MinHash candidates over the MATERIALIZED signature table: the stored
     * (id, sig) layout is built incrementally (base write + append — each
@@ -2260,7 +2257,7 @@ object Queries {
     // every layout file (the append-accumulated small files make the opens,
     // not the bytes, the cost). One parallel materialization, then all
     // references hit the cache. In-query only — each invocation re-reads.
-    val sigs = materializedOnce(s.read.parquet(sigLayout(s, dir)))
+    val sigs = materializedOnce(storedSigs(s, dir))
     Dedup.minHashCandidates(s, sigs, bands = 16, minEstJaccard = 0.7)
       .select(col("id1"), col("id2"))
   }
@@ -2278,7 +2275,7 @@ object Queries {
   def q77MinHashIncremental(s: SparkSession, dir: String): DataFrame = {
     // one parallel read of the stored layout shared by every reference
     // (all-side banding, new-side banding, both estimate joins) — see q75
-    val all = materializedOnce(s.read.parquet(sigLayout(s, dir)))
+    val all = materializedOnce(storedSigs(s, dir))
     val newSigs = all.filter(col("id") % 2 =!= 0)
     Dedup.minHashCandidatesIncremental(s, all, newSigs, bands = 16, minEstJaccard = 0.7)
       .select(col("id1"), col("id2"))
@@ -2531,7 +2528,7 @@ object Queries {
       after: String => Unit): String = {
     val p = layoutPath(kind, dir, srcTable = "documents")
     ensureLayout(p) {
-      val sigs = s.read.parquet(sigLayout(s, dir))
+      val sigs = storedSigs(s, dir)
       Dedup.writeBandLayout(s, sigs.filter(col("id") % 2 === 0), p)
       Dedup.appendBandLayout(s, sigs.filter(col("id") % 2 =!= 0), p)
       after(p)
@@ -2542,7 +2539,7 @@ object Queries {
     * the compacted one): odd-id batch pruned against the given band layout.
     */
   private def storedPrunedOver(s: SparkSession, dir: String, layout: String): DataFrame = {
-    val all = s.read.parquet(sigLayout(s, dir))
+    val all = storedSigs(s, dir)
     Dedup.minHashCandidatesStoredPruned(
       s, layout, all, all.filter(col("id") % 2 =!= 0),
       bands = 16, nBuckets = 256, minEstJaccard = 0.7)
@@ -2706,7 +2703,7 @@ object Queries {
   def q89Sql: String = q25Sql
 
   /** Incremental EMBEDDING near-dup (q90): the planted copies ARE the
-    * append — `Ann.nearDupPairsIncremental` bands only the new batch
+    * append — `Dedup.nearDupPairsIncremental` bands only the new batch
     * against the full corpus's keys and must recover every planted pair,
     * which is exactly q38's oracle (every near-dup pair in this corpus
     * touches a planted vector). Closes the incremental loop for the
@@ -2714,7 +2711,7 @@ object Queries {
     */
   def q90EmbedNearDupIncr(s: SparkSession, dir: String): DataFrame = {
     val (emb, planted) = plantedEmb(s, dir)
-    Ann.nearDupPairsIncremental(
+    Dedup.nearDupPairsIncremental(
       s, emb.unionByName(planted), planted, "vec_id", "embedding", minCosine = 0.95)
       .select(col("id1"), col("id2"))
   }

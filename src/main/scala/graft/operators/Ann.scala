@@ -7,38 +7,17 @@ import org.apache.spark.sql.expressions.Window
 import graft.functions.Sketches
 import graft.sources.Tables
 
-/** Similarity search over an embedding column (`Array[Float]`).
+/** Vector search over an embedding column (`Array[Float]`). Embedding
+  * near-dup pairs are a near-dup family, in Dedup.
   *
   *  - bruteForceTopK: exact cosine top-k against one query vector — a single
   *    narrow map + TakeOrderedAndProject; the baseline and the verifier.
-  *  - nearDupPairs: embedding-cosine near-duplicate detection via the same
-  *    bucket join shape as Dedup.minHashCandidates.
   *  - VectorLayout: every ANN index (IVF, LSH, int8, PQ, IVF-PQ) as one
-  *    description — partitioning × stored encoding — served by one
-  *    lifecycle: writeLayout / appendLayout, topK for one query,
-  *    multiQueryTopK for a batch.
+  *    description — partitioning × stored encoding — stored through the
+  *    Tables layout lifecycle (writeLayout / appendLayout / stored) and
+  *    served by topK for one query, multiQueryTopK for a batch.
   */
 object Ann {
-
-  /** Deterministic random hyperplanes (seeded), dim × nPlanes. */
-  def hyperplanes(dim: Int, nPlanes: Int): Array[Array[Double]] = {
-    val rng = new scala.util.Random(7)
-    Array.fill(nPlanes)(Array.fill(dim)(rng.nextGaussian()))
-  }
-
-  def signBits(v: Array[Float], planes: Array[Array[Double]]): Long = {
-    var bits = 0L
-    var p = 0
-    while (p < planes.length) {
-      var dot = 0.0
-      var i = 0
-      val pl = planes(p)
-      while (i < v.length && i < pl.length) { dot += v(i) * pl(i); i += 1 }
-      if (dot >= 0) bits |= (1L << p)
-      p += 1
-    }
-    bits
-  }
 
   /** Exact top-k by cosine against `query`. Deterministic tiebreak on id.
     * The per-row score is a narrow map; ordering uses scaled-integer cosine
@@ -61,148 +40,6 @@ object Ann {
       .toDF("id", "cosine")
       .orderBy(col("cosine").desc, col("id").asc)
       .limit(k)
-  }
-
-  /** Embedding-cosine near-duplicate pairs, banded like Dedup.simHashPairs.
-    *
-    * The hyperplane signature is split into `bands` independent bands of
-    * `bandBits` bits; a pair is a candidate if ANY band matches. Per-bit
-    * agreement for angle θ is 1−θ/π, so at cosine 0.95 (θ≈0.318 rad,
-    * p≈0.899) recall is 1−(1−p^4)^6 ≈ 0.998 with the defaults — vs ≈28%
-    * for the single 12-plane bucket this replaces. Only (id, band, key)
-    * rides the bucket self-join and pair-dedup shuffles; the float vectors
-    * are joined back once per SURVIVING candidate pair for exact cosine
-    * verification (the ids-only discipline of Dedup.minHashCandidates) — at
-    * 100 TB the wide ops move ~24 B/row instead of the embedding payload.
-    * Empty input returns an empty frame instead of failing the dim probe.
-    */
-  def nearDupPairs(
-      spark: SparkSession,
-      embeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      minCosine: Double = 0.95,
-      bands: Int = 6,
-      bandBits: Int = 4
-  ): DataFrame = {
-    import spark.implicits._
-    require(bands * bandBits <= 64, "signature must fit in a Long")
-    val ids = embeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val firstVec = ids.select(col("v")).as[Array[Float]].take(1)
-    if (firstVec.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("id1", "id2", "cosine")
-    val planes = spark.sparkContext.broadcast(hyperplanes(firstVec.head.length, bands * bandBits))
-    val banded = hyperBandKeys(spark, ids, planes, bands, bandBits)
-    val l = banded.select(col("band"), col("bkey"), col("id").as("id1"))
-    val r = banded.select(col("band"), col("bkey"), col("id").as("id2"))
-    val pairs = l.join(r, Seq("band", "bkey"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"))
-      // width-controlled pair-dedup exchange (the Dedup.minHashCandidates
-      // discipline): keeps the CPU-bound cosine-verify stage core-parallel
-      // instead of byte-coalesced, at the same single exchange
-      .transform(Dedup.pairParallelism(spark, _))
-      .dropDuplicates("id1", "id2")
-    cosineVerified(spark, ids, pairs, minCosine)
-  }
-
-  /** Banded (id, band, bkey) rows over the hyperplane signature — shared by
-    * the full and incremental near-dup paths (the Dedup.banded twin for the
-    * embedding family).
-    */
-  private def hyperBandKeys(
-      spark: SparkSession,
-      ids: DataFrame,
-      planes: org.apache.spark.broadcast.Broadcast[Array[Array[Double]]],
-      bands: Int,
-      bandBits: Int
-  ): DataFrame = {
-    import spark.implicits._
-    val mask = (1L << bandBits) - 1
-    ids
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        val bits = signBits(v, planes.value)
-        (0 until bands).map(b => (id, b, (bits >>> (b * bandBits)) & mask))
-      }
-      .toDF("id", "band", "bkey")
-  }
-
-  /** The exact-cosine verification tail shared by both near-dup paths:
-    * vectors join back ONLY for surviving candidate pairs.
-    */
-  private def cosineVerified(
-      spark: SparkSession,
-      ids: DataFrame,
-      pairs: DataFrame,
-      minCosine: Double
-  ): DataFrame = {
-    val v1 = ids.select(col("id").as("id1"), col("v").as("v1"))
-    val v2 = ids.select(col("id").as("id2"), col("v").as("v2"))
-    // exact cosine as a NATIVE codegen expression over columnar ArrayData
-    // (graft.plans.CosineExpr — the SigAgreeExpr discipline): the typed
-    // .map deserialized both float vectors per surviving pair through an
-    // object fence; this keeps join → score → filter one codegen span with
-    // zero per-pair allocation. Bit-identical to Sketches.cosine
-    // (CosineExprSpec; q38/q90 oracle hashes pin it end-to-end).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_fast",
-      exprs => graft.plans.CosineExpr(exprs.head, exprs(1)),
-      "built-in")
-    pairs
-      .join(v1, Seq("id1"))
-      .join(v2, Seq("id2"))
-      .select(col("id1"), col("id2"), expr("cosine_fast(v1, v2)").as("cosine"))
-      .filter(col("cosine") >= minCosine)
-  }
-
-  /** Incremental embedding near-dup after a corpus append — the
-    * `minHashCandidatesIncremental` contract for the embedding family: band
-    * ONLY the new batch against the full corpus's band keys and emit
-    * (cosine-verified) pairs touching at least one new vector; old-old
-    * pairs were produced by earlier runs. union(previous pairs, this) ==
-    * nearDupPairs over the full corpus.
-    *
-    * Cost honesty (the minhash path's caveat applies here too): what this
-    * makes append-bounded is the PAIR/VERIFY volume (bounded by the
-    * append's collision surface, never all-pairs). The corpus side still
-    * recomputes signBits signatures from the raw vectors each run — a
-    * corpus-linear narrow pass. When that matters, materialize the band
-    * keys once and append per batch (the `Dedup.writeBandLayout` pattern —
-    * same (id, band, bkey) shape, so the bucket-partitioned layout and its
-    * file pruning carry over unchanged); the spec's equality contract is
-    * the same either way.
-    */
-  def nearDupPairsIncremental(
-      spark: SparkSession,
-      allEmbeddings: DataFrame,
-      newEmbeddings: DataFrame,
-      idCol: String,
-      vecCol: String,
-      minCosine: Double = 0.95,
-      bands: Int = 6,
-      bandBits: Int = 4
-  ): DataFrame = {
-    import spark.implicits._
-    require(bands * bandBits <= 64, "signature must fit in a Long")
-    val all = allEmbeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val nw = newEmbeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
-    val firstVec = all.select(col("v")).as[Array[Float]].take(1)
-    if (firstVec.isEmpty)
-      return spark.emptyDataset[(Long, Long, Double)].toDF("id1", "id2", "cosine")
-    val planes = spark.sparkContext.broadcast(hyperplanes(firstVec.head.length, bands * bandBits))
-    val bNew = hyperBandKeys(spark, nw, planes, bands, bandBits)
-      .select(col("band"), col("bkey"), col("id").as("idn"))
-    val bAll = hyperBandKeys(spark, all, planes, bands, bandBits)
-      .select(col("band"), col("bkey"), col("id").as("ida"))
-    val pairs = bNew.join(bAll, Seq("band", "bkey"))
-      .filter(col("idn") =!= col("ida"))
-      .select(
-        least(col("idn"), col("ida")).as("id1"),
-        greatest(col("idn"), col("ida")).as("id2"))
-      .transform(Dedup.pairParallelism(spark, _))
-      .dropDuplicates("id1", "id2")
-    cosineVerified(spark, all, pairs, minCosine)
   }
 
   // ------------------------------------------------- closed-form constants
@@ -464,13 +301,13 @@ object Ann {
     * multiQueryTopK serve every value.
     */
   private[graft] final case class VectorLayout(part: Partitioning, enc: Encoding) {
-    /** The layout's parameters are PART of the layout (the band-layout
-      * rule): a probe ranking cells against different centroids, or an ADC
-      * table built from different codebooks, silently returns wrong top-k —
-      * so they are persisted under `<path>/_meta` and validated on every
-      * append and probe.
+    /** The layout's stored contract. Its parameters are PART of the layout
+      * (the band-layout rule): a probe ranking cells against different
+      * centroids, or an ADC table built from different codebooks, silently
+      * returns wrong top-k — so they are persisted under `<path>/_meta` and
+      * validated on every append and probe.
       */
-    def meta: Seq[(String, Int)] = (part match {
+    def table: Tables.Layout = Tables.Layout((part match {
       case Cells(nCells, _) => Seq("n_cells" -> nCells)
       case Buckets(nPlanes) => Seq("n_planes" -> nPlanes)
       case Unpartitioned    => Nil
@@ -478,7 +315,7 @@ object Ann {
       case Pq(m, kw) => Seq("m" -> m, "kw" -> kw)
       case Int8      => Seq("int8_scale" -> 127)
       case Float32   => Nil
-    })
+    }), partCol)
 
     def partCol: Option[String] = part match {
       case _: Cells      => Some("cell")
@@ -641,12 +478,11 @@ object Ann {
       .map(v => encoded(spark, layout, batch, idCol, vecCol, v.length))
   }
 
-  /** Materialize a layout: the data (overwrite — which also clears any
-    * previous `_meta`, so the data goes first), then the `_meta` contract,
-    * then one lineage row. Partition assignment is a narrow map (each write
-    * task writes its rows into the partition dirs it holds); the layout is
-    * deterministic from the source table, so rebuild-vs-reuse is a pure
-    * cost decision.
+  /** Materialize a layout through the Tables lifecycle (data, `_meta`,
+    * lineage); an empty corpus writes nothing. Partition assignment is a
+    * narrow map (each write task writes its rows into the partition dirs it
+    * holds); the layout is deterministic from the source table, so
+    * rebuild-vs-reuse is a pure cost decision.
     */
   private[graft] def writeLayout(
       spark: SparkSession,
@@ -655,21 +491,16 @@ object Ann {
       idCol: String,
       vecCol: String,
       path: String
-  ): Unit = {
-    encodedBatch(spark, layout, embeddings, idCol, vecCol).foreach { df =>
-      layout.partCol.fold(Tables.format.write(df, path))(Tables.format.writePartitioned(df, path, _))
-      Tables.writeLayoutMeta(spark, path, layout.meta: _*)
-      Tables.recordLayoutLineage(path, "build", embeddings, idCol)
-    }
-  }
+  ): Unit =
+    encodedBatch(spark, layout, embeddings, idCol, vecCol).foreach(
+      Tables.writeLayout(spark, layout.table, path, _, embeddings, idCol))
 
-  /** Incremental refresh: check the `_meta` contract FIRST (an empty batch
-    * against a mismatched layout still fails), then encode the new vectors
-    * with the same closed-form constants — appended rows are byte-identical
-    * to what a full rebuild would write, in the partitions it would put
-    * them in — append their files, and record the batch's lineage row.
-    * Existing files are untouched and probes prune exactly as before: the
-    * daily-growth lifecycle of a 100 TB index without a rebuild.
+  /** Incremental refresh: after the `_meta` check, the new vectors are
+    * encoded with the same closed-form constants — appended rows are
+    * byte-identical to what a full rebuild would write, in the partitions
+    * it would put them in. Existing files are untouched and probes prune
+    * exactly as before: the daily-growth lifecycle of a 100 TB index
+    * without a rebuild.
     */
   private[graft] def appendLayout(
       spark: SparkSession,
@@ -678,19 +509,13 @@ object Ann {
       idCol: String,
       vecCol: String,
       path: String
-  ): Unit = {
-    Tables.requireLayoutMeta(spark, path, layout.meta: _*)
-    encodedBatch(spark, layout, newVectors, idCol, vecCol).foreach { df =>
-      layout.partCol.fold(Tables.format.append(df, path))(Tables.format.appendPartitioned(df, path, _))
-      Tables.recordLayoutLineage(path, "append", newVectors, idCol)
-    }
-  }
+  ): Unit =
+    Tables.appendLayout(spark, layout.table, path, newVectors, idCol)(
+      encodedBatch(spark, layout, newVectors, idCol, vecCol))
 
   /** A written layout's rows, after validating its `_meta` contract. */
-  private[graft] def stored(spark: SparkSession, layout: VectorLayout, path: String): DataFrame = {
-    Tables.requireLayoutMeta(spark, path, layout.meta: _*)
-    spark.read.parquet(path)
-  }
+  private[graft] def stored(spark: SparkSession, layout: VectorLayout, path: String): DataFrame =
+    Tables.readLayout(spark, layout.table, path)
 
   /** Keep only the rows in the probed partitions: over a stored layout
     * this is a PARTITION filter, so the scan lists and reads only those

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Sketches
+import graft.sources.Tables
 
 /** Deduplication operators for the training-data pipeline, from exact to
   * near-dup. Each has a distinct scale profile:
@@ -11,13 +13,17 @@ import graft.functions.Sketches
   *  - exact:     one hash-aggregate shuffle on a 16-byte digest — the digest
   *               (not the document body) is the shuffle key, so 100 TB of
   *               text shuffles only ~rows × ~50 B.
-  *  - minhashLSH: docs → signatures (narrow) → explode band keys → shuffle
-  *               on band key → pairs within buckets. Candidate generation is
-  *               linear in docs, never all-pairs.
-  *  - simhash:   64-bit sketch per doc, near-dup = small hamming distance
-  *               within band buckets.
+  *  - near-dup:  MinHash (signature band slices), SimHash (64-bit sketch
+  *               chunks, small Hamming distance) and embedding (hyperplane
+  *               sign-bit bands, high cosine) share ONE candidate path:
+  *               sketch (narrow) → (id, band, bkey) keys → one bucket-pair
+  *               join over band keys and ids → ids-only join-back of the
+  *               sketch → the family's own score and filter. Full and
+  *               incremental (new batch vs all) runs differ only in the
+  *               pair predicate; the MinHash signature and band-key tables
+  *               are stored through the Tables layout lifecycle.
   *  - ngramJaccard: exact verification joined onto LSH candidates only.
-  *  - embedding near-dup lives in Ann.scala (same bucket-join shape).
+  *  - components: connected components over verified pairs → survivors.
   */
 object Dedup {
 
@@ -93,37 +99,51 @@ object Dedup {
       .toDF("id", "sig")
   }
 
-  /** LSH candidate pairs: explode band keys, self-join inside buckets
-    * (id1 < id2), dedup pairs, then estimate Jaccard from signatures.
-    * The band-key shuffle is the only wide op; bucket sizes are bounded by
-    * similarity structure, with AQE skew-join as backstop for degenerate
-    * buckets (e.g. empty docs).
+  // ------------------------------------------------ near-dup candidate path
+  //
+  // Every near-dup family (MinHash, SimHash, embedding) runs ONE shape:
+  //   sketch → (id, band, bkey) keys (`banded`, given the family's per-row
+  //   key function) → bucket pairs (`bucketPairs`: the only wide join, over
+  //   band keys and ids) → ids-only join-back of the sketch (`joinedBack`)
+  //   → the family's own score and filter.
+  // Candidate generation is linear in docs, never all-pairs; the band-key
+  // shuffle is the only wide op on the key side, bucket sizes are bounded
+  // by similarity structure, with AQE skew-join as backstop for degenerate
+  // buckets (e.g. empty docs). A new family is a key function and a verify
+  // tail.
+
+  /** The bander: (id, payload) rows → (id, band, bkey) rows, one per band
+    * key of the row's payload. One narrow flatMap.
     */
-  def minHashCandidates(
-      spark: SparkSession,
-      sigs0: DataFrame,
-      bands: Int = 16,
-      minEstJaccard: Double = 0.5
-  ): DataFrame = {
-    val sigs = sizeJustifiedCoalesce(sigs0)
-    // band the ids only — the bucket self-join and pair-dedup shuffles move
-    // 16-byte pairs, not 8 KB signature arrays (64 hashes × 8 B × 16 bands);
-    // signatures are joined back once per surviving pair
-    val keys = banded(spark, sigs, bands)
-    val l = keys.select(col("band"), col("bkey"), col("id").as("id1"))
-    val r = keys.select(col("band"), col("bkey"), col("id").as("id2"))
-    val pairs = l.join(r, Seq("band", "bkey"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"))
-      .transform(pairParallelism(spark, _))
-      .dropDuplicates("id1", "id2")
-    estimatePairs(spark, sigs, pairs, minEstJaccard)
+  private def banded[P: TypeTag](rows: DataFrame, keys: P => Array[(Int, Long)]): DataFrame = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows
+      .as[(Long, P)]
+      .flatMap { case (id, p) => keys(p).map { case (b, k) => (id, b, k) } }
+      .toDF("id", "band", "bkey")
   }
+
+  /** Bucket pairs: rows of `l` and `r` sharing a (band, bkey)
+    * whose ids satisfy `keep`, oriented (min, max) and deduplicated. The
+    * full path joins one key frame with itself under `<`; the incremental
+    * path joins the new batch's keys with all keys under `=!=`, which emits
+    * exactly the pairs touching at least one new id. Only band keys and ids
+    * ride the join and the pair-dedup shuffle — sketches and vectors are
+    * joined back once per surviving pair.
+    */
+  private def bucketPairs(l: DataFrame, r: DataFrame, keep: (Column, Column) => Column): DataFrame =
+    l.select(col("band"), col("bkey"), col("id").as("id1"))
+      .join(r.select(col("band"), col("bkey"), col("id").as("id2")), Seq("band", "bkey"))
+      .filter(keep(col("id1"), col("id2")))
+      .select(least(col("id1"), col("id2")).as("id1"), greatest(col("id1"), col("id2")).as("id2"))
+      .transform(pairParallelism)
+      .dropDuplicates("id1", "id2")
 
   /** The pair-dedup exchange, width-controlled: dropDuplicates alone
     * shuffles at `spark.sql.shuffle.partitions` and AQE then coalesces the
     * READ side by byte size — correct for IO-bound stages, but the stage
-    * consuming these pairs (the signature-estimate map) is CPU-bound per
+    * consuming these pairs (the join-back and score) is CPU-bound per
     * row, so byte-based coalescing serializes it (measured: the whole
     * candidate tail collapsed to one task at sf0.1). An EXPLICIT
     * repartition on the dedup key keeps the same single exchange
@@ -133,20 +153,52 @@ object Dedup {
     * which AQE respects because user-specified repartitions are never
     * coalesced.
     */
-  private[operators] def pairParallelism(spark: SparkSession, pairs: DataFrame): DataFrame =
-    pairs.repartition(spark.sparkContext.defaultParallelism, col("id1"), col("id2"))
+  private def pairParallelism(pairs: DataFrame): DataFrame =
+    pairs.repartition(pairs.sparkSession.sparkContext.defaultParallelism, col("id1"), col("id2"))
 
-  /** The shared candidate tail: join signatures back per surviving pair and
-    * keep pairs whose signature-estimated Jaccard clears the bar.
+  /** The join-back: (id1, id2, p1, p2) — each endpoint's payload from an
+    * (id, payload) frame, joined once per surviving pair.
     */
-  private def estimatePairs(
+  private def joinedBack(pairs: DataFrame, payload: DataFrame): DataFrame = {
+    val Array(id, p) = payload.columns
+    pairs
+      .join(payload.select(col(id).as("id1"), col(p).as("p1")), Seq("id1"))
+      .join(payload.select(col(id).as("id2"), col(p).as("p2")), Seq("id2"))
+  }
+
+  /** `bands` band keys of a Long signature: its `width`-bit chunks, low
+    * chunk first (SimHash chunks, embedding sign-bit bands).
+    */
+  private def chunkKeys(bands: Int, width: Int): Long => Array[(Int, Long)] = {
+    val mask = (1L << width) - 1
+    bits => Array.tabulate(bands)(b => (b, (bits >>> (b * width)) & mask))
+  }
+
+  // ------------------------------------------------------------ MinHash
+
+  /** The MinHash key function: one fnv1a key per signature band slice. */
+  private def minHashKeys(bands: Int): Array[Long] => Array[(Int, Long)] =
+    Sketches.bandKeys(_, bands)
+
+  /** LSH candidate pairs: band the signatures, pair ids inside buckets,
+    * then estimate Jaccard from the signatures joined back per pair.
+    */
+  def minHashCandidates(
       spark: SparkSession,
-      sigs: DataFrame,
-      pairs: DataFrame,
-      minEstJaccard: Double
+      sigs0: DataFrame,
+      bands: Int = 16,
+      minEstJaccard: Double = 0.5
   ): DataFrame = {
-    val s1 = sigs.select(col("id").as("id1"), col("sig").as("sig1"))
-    val s2 = sigs.select(col("id").as("id2"), col("sig").as("sig2"))
+    val sigs = sizeJustifiedCoalesce(sigs0)
+    val keys = banded(sigs, minHashKeys(bands))
+    estimatePairs(spark, sigs, bucketPairs(keys, keys, _ < _), minEstJaccard)
+  }
+
+  /** The MinHash verify tail: keep pairs whose signature-estimated Jaccard
+    * clears the bar.
+    */
+  private def estimatePairs(spark: SparkSession, sigs: DataFrame, pairs: DataFrame,
+      minEstJaccard: Double): DataFrame = {
     // the agreement count as a NATIVE codegen expression over columnar
     // ArrayData (graft.plans.SigAgreeExpr): zero per-pair allocation.
     // Measured alternatives at sf0.1 candidate volume: the typed .map
@@ -157,39 +209,59 @@ object Dedup {
       "sig_agree_fast",
       exprs => graft.plans.SigAgreeExpr(exprs.head, exprs(1)),
       "built-in")
-    val eq = expr("sig_agree_fast(sig1, sig2)")
-    pairs
-      .join(s1, Seq("id1"))
-      .join(s2, Seq("id2"))
+    joinedBack(pairs, sigs)
       .select(col("id1"), col("id2"),
-        (eq.cast("double") / size(col("sig1"))).as("est_jaccard"))
+        (expr("sig_agree_fast(p1, p2)").cast("double") / size(col("p1"))).as("est_jaccard"))
       .filter(col("est_jaccard") >= minEstJaccard)
   }
 
-  /** Diagnostics-only accessor for `banded` (graft.BenchExtra stage
-    * isolation — not a query path).
+  /** Incremental candidate generation after a corpus append: band the NEW
+    * batch's signatures against the full stored table and emit only pairs
+    * touching at least one new doc (old–old pairs were produced by earlier
+    * runs — re-emitting them would redo the whole corpus's pair work every
+    * day). Union(previous candidates, this) == candidates over the full
+    * corpus — the invariant the spec proves.
+    *
+    * Cost honesty: what this makes append-linear is the EXPENSIVE per-doc
+    * work — sketching (the dominant CPU; never recomputed for old docs)
+    * and the pair/estimate volume (bounded by buckets the new batch
+    * touches). The join's right side still scans and bands the full stored
+    * table (corpus-linear IO of the compact sig rows, not of text); when
+    * that matters too, `writeBandLayout` + `minHashCandidatesStoredPruned`
+    * below materialize the banded keys bucket-partitioned so the new
+    * batch's bucket set PRUNES the stored scan at the file level.
     */
-  private[graft] def bandedForDiagnostics(
-      spark: SparkSession, sigs: DataFrame, bands: Int): DataFrame =
-    banded(spark, sigs, bands)
-
-  /** Banded (id, band, bkey) rows of a signature table — the LSH key
-    * explode shared by the full and incremental candidate paths.
-    */
-  private def banded(spark: SparkSession, sigs: DataFrame, bands: Int): DataFrame = {
-    import spark.implicits._
-    sigs
-      .as[(Long, Array[Long])]
-      .flatMap { case (id, sig) =>
-        Sketches.bandKeys(sig, bands).map { case (b, k) => (id, b, k) }
-      }
-      .toDF("id", "band", "bkey")
+  def minHashCandidatesIncremental(
+      spark: SparkSession,
+      allSigs0: DataFrame,
+      newSigs0: DataFrame,
+      bands: Int = 16,
+      minEstJaccard: Double = 0.5
+  ): DataFrame = {
+    val allSigs = sizeJustifiedCoalesce(allSigs0)
+    val newSigs = sizeJustifiedCoalesce(newSigs0)
+    estimatePairs(spark, allSigs,
+      bucketPairs(banded(newSigs, minHashKeys(bands)), banded(allSigs, minHashKeys(bands)), _ =!= _),
+      minEstJaccard)
   }
 
-  // -------------------------------------------- materialized signature table
+  // -------------------------------------------- materialized MinHash layouts
 
-  /** Materialize the (id, sig) MinHash signature table through the table-
-    * format seam — the layout that makes 100 TB dedup re-runnable daily:
+  /** The (id, sig) signature layout's contract: band slices depend on the
+    * hash count and the shingles on n, so an append or read with other
+    * values would silently lose cross-batch pairs.
+    */
+  private def signatureLayout(numHashes: Int, shingleN: Int): Tables.Layout =
+    Tables.Layout(Seq("num_hashes" -> numHashes, "shingle_n" -> shingleN))
+
+  /** The band-key layout's contract: (id, band, bkey) rows partitioned by
+    * `bucket` = a hash bucket of the band key.
+    */
+  private def bandLayout(bands: Int, nBuckets: Int): Tables.Layout =
+    Tables.Layout(Seq("bands" -> bands, "n_buckets" -> nBuckets), Some("bucket"))
+
+  /** Materialize the (id, sig) MinHash signature table through the layout
+    * lifecycle — the layout that makes 100 TB dedup re-runnable daily:
     * signatures are computed ONCE per document ever; a corpus append
     * computes signatures for the NEW batch only (appendSignatureLayout) and
     * bands them against the stored table (minHashCandidatesIncremental),
@@ -204,11 +276,9 @@ object Dedup {
       path: String,
       numHashes: Int = 64,
       shingleN: Int = 5
-  ): Unit = {
-    graft.sources.Tables.format.write(
-      minHashSignatures(spark, docs, idCol, textCol, numHashes, shingleN), path)
-    graft.sources.Tables.recordLayoutLineage(path, "build", docs, idCol)
-  }
+  ): Unit =
+    Tables.writeLayout(spark, signatureLayout(numHashes, shingleN), path,
+      minHashSignatures(spark, docs, idCol, textCol, numHashes, shingleN), docs, idCol)
 
   /** Incremental refresh: sketch ONLY the new batch, append. The hash
     * family is closed-form, so appended signatures are identical to what a
@@ -222,11 +292,16 @@ object Dedup {
       path: String,
       numHashes: Int = 64,
       shingleN: Int = 5
-  ): Unit = {
-    graft.sources.Tables.format.append(
-      minHashSignatures(spark, newDocs, idCol, textCol, numHashes, shingleN), path)
-    graft.sources.Tables.recordLayoutLineage(path, "append", newDocs, idCol)
-  }
+  ): Unit =
+    Tables.appendLayout(spark, signatureLayout(numHashes, shingleN), path, newDocs, idCol)(
+      Some(minHashSignatures(spark, newDocs, idCol, textCol, numHashes, shingleN)))
+
+  /** A written signature layout's (id, sig) rows, after validating its
+    * `_meta` contract.
+    */
+  def storedSignatures(spark: SparkSession, path: String, numHashes: Int = 64,
+      shingleN: Int = 5): DataFrame =
+    Tables.readLayout(spark, signatureLayout(numHashes, shingleN), path)
 
   /** Materialize the BANDED keys (id, band, bkey) partitioned by a hash
     * bucket of the band key — the layout that makes the stored side of
@@ -244,24 +319,14 @@ object Dedup {
       path: String,
       bands: Int = 16,
       nBuckets: Int = 256
-  ): Unit = {
-    graft.sources.Tables.format.writePartitioned(
-      bandBucketed(spark, sigs, bands, nBuckets), path, "bucket")
-    // the layout's parameters are PART of the layout: a reader pruning with
-    // different bands/nBuckets than the writer would silently drop pairs,
-    // so they are persisted under the path (underscore dir — invisible to
-    // the data scan) and validated on every append and pruned read
-    graft.sources.Tables.writeLayoutMeta(spark, path, "bands" -> bands, "n_buckets" -> nBuckets)
-    graft.sources.Tables.recordLayoutLineage(path, "build", sigs, "id")
-  }
+  ): Unit =
+    Tables.writeLayout(spark, bandLayout(bands, nBuckets), path,
+      banded(sigs, minHashKeys(bands))
+        .withColumn("bucket", Tables.format.bucket(col("bkey"), nBuckets)),
+      sigs, "id")
 
-  private def requireBandParams(spark: SparkSession, path: String, bands: Int, nBuckets: Int): Unit =
-    graft.sources.Tables.requireLayoutMeta(spark, path,
-      "bands" -> bands, "n_buckets" -> nBuckets)
-
-  /** Incremental refresh of the banded-key layout (append the new batch's
-    * keys into their bucket partitions; parameters validated against the
-    * layout's stored meta).
+  /** Incremental refresh of the banded-key layout: append the new batch's
+    * keys into their bucket partitions.
     */
   def appendBandLayout(
       spark: SparkSession,
@@ -269,21 +334,10 @@ object Dedup {
       path: String,
       bands: Int = 16,
       nBuckets: Int = 256
-  ): Unit = {
-    requireBandParams(spark, path, bands, nBuckets)
-    graft.sources.Tables.format.appendPartitioned(
-      bandBucketed(spark, newSigs, bands, nBuckets), path, "bucket")
-    graft.sources.Tables.recordLayoutLineage(path, "append", newSigs, "id")
-  }
-
-  private def bandBucketed(
-      spark: SparkSession,
-      sigs: DataFrame,
-      bands: Int,
-      nBuckets: Int
-  ): DataFrame =
-    banded(spark, sigs, bands)
-      .withColumn("bucket", graft.sources.Tables.format.bucket(col("bkey"), nBuckets))
+  ): Unit =
+    Tables.appendLayout(spark, bandLayout(bands, nBuckets), path, newSigs, "id")(Some(
+      banded(newSigs, minHashKeys(bands))
+        .withColumn("bucket", Tables.format.bucket(col("bkey"), nBuckets))))
 
   /** Incremental candidates with the stored side PRUNED: the new batch's
     * band keys determine a bucket set (≤ nBuckets, usually far fewer for a
@@ -310,65 +364,23 @@ object Dedup {
       nBuckets: Int = 256,
       minEstJaccard: Double = 0.5
   ): DataFrame = {
-    requireBandParams(spark, bandLayoutPath, bands, nBuckets)
+    val stored = Tables.readLayout(spark, bandLayout(bands, nBuckets), bandLayoutPath)
     require(
-      graft.sources.Tables.auditLayoutLineage(spark, bandLayoutPath, allSigs, "id"),
+      Tables.auditLayoutLineage(spark, bandLayoutPath, allSigs, "id"),
       s"band layout at $bandLayoutPath does not cover allSigs - " +
         "appendBandLayout the new batch BEFORE querying the pruned path, " +
         "or new-vs-new collision pairs would be silently dropped")
-    val newKeys = bandBucketed(spark, sizeJustifiedCoalesce(newSigs), bands, nBuckets)
-    // the bucket set is bounded by nBuckets (a few hundred Ints) — safe to
+    val newKeys = banded(sizeJustifiedCoalesce(newSigs), minHashKeys(bands))
+    // the bucket set is bounded by nBuckets (a few hundred Longs) — safe to
     // collect and inline as a partition-pruning predicate
-    val buckets = newKeys.select(col("bucket")).distinct()
+    val buckets = newKeys.select(Tables.format.bucket(col("bkey"), nBuckets)).distinct()
       .collect().map(_.getLong(0))
-    val stored = spark.read.parquet(bandLayoutPath)
-      .filter(col("bucket").isin(buckets.map(Long.box): _*))
-    estimatePairs(spark, allSigs, newVsAllPairs(newKeys, stored), minEstJaccard)
-  }
-
-  /** Canonical new-vs-all pair set — join on band keys, drop self-pairs,
-    * orient (min, max), dedup: the shared tail of both incremental
-    * candidate paths, so pair canonicalization cannot drift between them.
-    */
-  private def newVsAllPairs(newKeys: DataFrame, allKeys: DataFrame): DataFrame =
-    newKeys.select(col("band"), col("bkey"), col("id").as("idn"))
-      .join(allKeys.select(col("band"), col("bkey"), col("id").as("ida")), Seq("band", "bkey"))
-      .filter(col("idn") =!= col("ida"))
-      .select(
-        least(col("idn"), col("ida")).as("id1"),
-        greatest(col("idn"), col("ida")).as("id2"))
-      .transform(pairParallelism(newKeys.sparkSession, _))
-      .dropDuplicates("id1", "id2")
-
-  /** Incremental candidate generation after a corpus append: band the NEW
-    * batch's signatures against the full stored table and emit only pairs
-    * touching at least one new doc (old–old pairs were produced by earlier
-    * runs — re-emitting them would redo the whole corpus's pair work every
-    * day). Union(previous candidates, this) == candidates over the full
-    * corpus — the invariant the spec proves.
-    *
-    * Cost honesty: what this makes append-linear is the EXPENSIVE per-doc
-    * work — sketching (the dominant CPU; never recomputed for old docs)
-    * and the pair/estimate volume (bounded by buckets the new batch
-    * touches). The join's right side still scans and bands the full stored
-    * table (corpus-linear IO of the compact sig rows, not of text); when
-    * that matters too, `writeBandLayout` + `minHashCandidatesStoredPruned`
-    * above materialize the banded keys bucket-partitioned so the new
-    * batch's bucket set PRUNES the stored scan at the file level.
-    */
-  def minHashCandidatesIncremental(
-      spark: SparkSession,
-      allSigs0: DataFrame,
-      newSigs0: DataFrame,
-      bands: Int = 16,
-      minEstJaccard: Double = 0.5
-  ): DataFrame = {
-    val allSigs = sizeJustifiedCoalesce(allSigs0)
-    val newSigs = sizeJustifiedCoalesce(newSigs0)
     estimatePairs(spark, allSigs,
-      newVsAllPairs(banded(spark, newSigs, bands), banded(spark, allSigs, bands)),
+      bucketPairs(newKeys, stored.filter(col("bucket").isin(buckets.toSeq.map(Long.box): _*)), _ =!= _),
       minEstJaccard)
   }
+
+  // ------------------------------------------------------------ SimHash
 
   /** SimHash sketches (id, simhash). */
   def simHashes(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -393,40 +405,16 @@ object Dedup {
       chunkBits: Int = 16
   ): DataFrame = {
     val hashes = sizeJustifiedCoalesce(hashes0)
-    val banded = simBanded(spark, hashes, chunks, chunkBits)
-    val l = banded.select(col("band"), col("chunk"), col("id").as("id1"), col("h").as("h1"))
-    val r = banded.select(col("band"), col("chunk"), col("id").as("id2"), col("h").as("h2"))
-    val pairs = l.join(r, Seq("band", "chunk"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"), col("h1"), col("h2"))
-      .transform(pairParallelism(spark, _))
-      .dropDuplicates("id1", "id2")
-    hammingVerified(spark, pairs, maxHamming)
+    val keys = banded(hashes, chunkKeys(chunks, chunkBits))
+    hammingVerified(hashes, bucketPairs(keys, keys, _ < _), maxHamming)
   }
 
-  /** Chunk-banded (band, chunk, id, h) rows — shared by the full and
-    * incremental SimHash paths.
+  /** The SimHash verify tail: exact Hamming distance of the sketches joined
+    * back per pair, as a codegen'd bit_count(xor) built-in.
     */
-  private def simBanded(
-      spark: SparkSession, hashes: DataFrame, chunks: Int, chunkBits: Int): DataFrame = {
-    import spark.implicits._
-    val mask = (1L << chunkBits) - 1
-    hashes
-      .as[(Long, Long)]
-      .flatMap { case (id, h) =>
-        (0 until chunks).map(b => (b, (h >>> (b * chunkBits)) & mask, id, h))
-      }
-      .toDF("band", "chunk", "id", "h")
-  }
-
-  /** Exact-Hamming verification tail over (id1, id2, h1, h2) pair rows.
-    * bit_count(xor) as a codegen'd built-in — the former typed map
-    * deserialized every candidate pair row into a Tuple4 (guide §4).
-    */
-  private def hammingVerified(spark: SparkSession, pairs: DataFrame, maxHamming: Int): DataFrame =
-    pairs
-      .select(col("id1"), col("id2"),
-        bit_count(col("h1").bitwiseXOR(col("h2"))).as("hamming"))
+  private def hammingVerified(hashes: DataFrame, pairs: DataFrame, maxHamming: Int): DataFrame =
+    joinedBack(pairs, hashes)
+      .select(col("id1"), col("id2"), bit_count(col("p1").bitwiseXOR(col("p2"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
 
   /** Incremental SimHash near-dup after a corpus append — the
@@ -445,20 +433,121 @@ object Dedup {
   ): DataFrame = {
     val allHashes = sizeJustifiedCoalesce(allHashes0)
     val newHashes = sizeJustifiedCoalesce(newHashes0)
-    val bNew = simBanded(spark, newHashes, chunks, chunkBits)
-      .select(col("band"), col("chunk"), col("id").as("idn"), col("h").as("hn"))
-    val bAll = simBanded(spark, allHashes, chunks, chunkBits)
-      .select(col("band"), col("chunk"), col("id").as("ida"), col("h").as("ha"))
-    val pairs = bNew.join(bAll, Seq("band", "chunk"))
-      .filter(col("idn") =!= col("ida"))
-      .select(
-        least(col("idn"), col("ida")).as("id1"),
-        greatest(col("idn"), col("ida")).as("id2"),
-        when(col("idn") < col("ida"), col("hn")).otherwise(col("ha")).as("h1"),
-        when(col("idn") < col("ida"), col("ha")).otherwise(col("hn")).as("h2"))
-      .transform(pairParallelism(spark, _))
-      .dropDuplicates("id1", "id2")
-    hammingVerified(spark, pairs, maxHamming)
+    val keys = chunkKeys(chunks, chunkBits)
+    hammingVerified(allHashes,
+      bucketPairs(banded(newHashes, keys), banded(allHashes, keys), _ =!= _), maxHamming)
+  }
+
+  // ---------------------------------------------------------- embedding
+
+  /** Deterministic random hyperplanes (seeded), dim × nPlanes. */
+  def hyperplanes(dim: Int, nPlanes: Int): Array[Array[Double]] = {
+    val rng = new scala.util.Random(7)
+    Array.fill(nPlanes)(Array.fill(dim)(rng.nextGaussian()))
+  }
+
+  def signBits(v: Array[Float], planes: Array[Array[Double]]): Long = {
+    var bits = 0L
+    var p = 0
+    while (p < planes.length) {
+      var dot = 0.0
+      var i = 0
+      val pl = planes(p)
+      while (i < v.length && i < pl.length) { dot += v(i) * pl(i); i += 1 }
+      if (dot >= 0) bits |= (1L << p)
+      p += 1
+    }
+    bits
+  }
+
+  /** The embedding key function: the hyperplane sign-bit signature at the
+    * corpus's dimension (probed from one vector; an empty corpus has no
+    * rows to key, so dimension 0 serves), in `bands` bands of `bandBits`
+    * bits.
+    */
+  private def hyperplaneKeys(spark: SparkSession, vectors: DataFrame, bands: Int,
+      bandBits: Int): Array[Float] => Array[(Int, Long)] = {
+    import spark.implicits._
+    require(bands * bandBits <= 64, "signature must fit in a Long")
+    val dim = vectors.select(col("v")).as[Array[Float]].take(1).headOption.fold(0)(_.length)
+    val planes = spark.sparkContext.broadcast(hyperplanes(dim, bands * bandBits))
+    val chunked = chunkKeys(bands, bandBits)
+    v => chunked(signBits(v, planes.value))
+  }
+
+  /** Embedding-cosine near-duplicate pairs. The hyperplane signature is
+    * split into `bands` independent bands of `bandBits` bits; a pair is a
+    * candidate if ANY band matches. Per-bit agreement for angle θ is 1−θ/π,
+    * so at cosine 0.95 (θ≈0.318 rad, p≈0.899) recall is 1−(1−p^4)^6 ≈
+    * 0.998 with the defaults — vs ≈28% for a single 12-plane bucket. At
+    * 100 TB the wide ops move ~24 B/row instead of the embedding payload.
+    * Empty input returns an empty frame.
+    */
+  def nearDupPairs(
+      spark: SparkSession,
+      embeddings: DataFrame,
+      idCol: String,
+      vecCol: String,
+      minCosine: Double = 0.95,
+      bands: Int = 6,
+      bandBits: Int = 4
+  ): DataFrame = {
+    val vectors = embeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+    val keys = banded(vectors, hyperplaneKeys(spark, vectors, bands, bandBits))
+    cosineVerified(spark, vectors, bucketPairs(keys, keys, _ < _), minCosine)
+  }
+
+  /** The embedding verify tail: exact cosine of the vectors joined back per
+    * pair.
+    */
+  private def cosineVerified(spark: SparkSession, vectors: DataFrame, pairs: DataFrame,
+      minCosine: Double): DataFrame = {
+    // exact cosine as a NATIVE codegen expression over columnar ArrayData
+    // (graft.plans.CosineExpr — the SigAgreeExpr discipline): the typed
+    // .map deserialized both float vectors per surviving pair through an
+    // object fence; this keeps join → score → filter one codegen span with
+    // zero per-pair allocation. Bit-identical to Sketches.cosine
+    // (CosineExprSpec; q38/q90 oracle hashes pin it end-to-end).
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "cosine_fast",
+      exprs => graft.plans.CosineExpr(exprs.head, exprs(1)),
+      "built-in")
+    joinedBack(pairs, vectors)
+      .select(col("id1"), col("id2"), expr("cosine_fast(p1, p2)").as("cosine"))
+      .filter(col("cosine") >= minCosine)
+  }
+
+  /** Incremental embedding near-dup after a corpus append — the
+    * `minHashCandidatesIncremental` contract for the embedding family: band
+    * ONLY the new batch against the full corpus's band keys and emit
+    * (cosine-verified) pairs touching at least one new vector; old-old
+    * pairs were produced by earlier runs. union(previous pairs, this) ==
+    * nearDupPairs over the full corpus.
+    *
+    * Cost honesty (the minhash path's caveat applies here too): what this
+    * makes append-bounded is the PAIR/VERIFY volume (bounded by the
+    * append's collision surface, never all-pairs). The corpus side still
+    * recomputes signBits signatures from the raw vectors each run — a
+    * corpus-linear narrow pass. When that matters, materialize the band
+    * keys once and append per batch (the `writeBandLayout` pattern — same
+    * (id, band, bkey) shape, so the bucket-partitioned layout and its file
+    * pruning carry over unchanged); the spec's equality contract is the
+    * same either way.
+    */
+  def nearDupPairsIncremental(
+      spark: SparkSession,
+      allEmbeddings: DataFrame,
+      newEmbeddings: DataFrame,
+      idCol: String,
+      vecCol: String,
+      minCosine: Double = 0.95,
+      bands: Int = 6,
+      bandBits: Int = 4
+  ): DataFrame = {
+    val all = allEmbeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+    val nw = newEmbeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+    val keys = hyperplaneKeys(spark, all, bands, bandBits)
+    cosineVerified(spark, all, bucketPairs(banded(nw, keys), banded(all, keys), _ =!= _), minCosine)
   }
 
   /** Corpus-level boilerplate removal (the CCNet-style paragraph dedup a

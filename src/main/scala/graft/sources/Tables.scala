@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Page
@@ -33,27 +34,21 @@ trait TableFormat {
     */
   def overwritePartitions(df: DataFrame, path: String, partCol: String): Unit
 
-  /** Append rows (the manifest log write; an Iceberg table append). */
-  def append(df: DataFrame, path: String): Unit
-
-  /** Unpartitioned full-table overwrite (the int8/PQ/signature layout
-    * builds) — kept on the seam so the build and append halves of the same
-    * layout always target the same physical format.
+  /** Full-table overwrite, optionally partitioned by an EXPLICIT semantic
+    * column (IVF cell, LSH bucket) — the layout builds — kept on the seam
+    * so the build and append halves of the same layout always target the
+    * same physical format.
     */
-  def write(df: DataFrame, path: String): Unit
+  def write(df: DataFrame, path: String, partCol: Option[String] = None): Unit
 
-  /** Full-table layout build partitioned by an EXPLICIT semantic column
-    * (IVF cell, LSH bucket) — overwrite semantics.
+  /** Append rows (the manifest log write; an Iceberg table append). With a
+    * partition column, new files land inside the partition dirs their rows
+    * belong to, existing files untouched — Iceberg's append on a
+    * partitioned table, the incremental-refresh primitive for
+    * write-once-query-many layouts (a corpus grows daily; rebuilding a
+    * 100 TB index for 0.1% new vectors is not a plan).
     */
-  def writePartitioned(df: DataFrame, path: String, partCol: String): Unit
-
-  /** Append rows INTO an existing partitioned layout: new files land inside
-    * the partition dirs their rows belong to, existing files untouched —
-    * Iceberg's append on a partitioned table. This is the incremental-
-    * refresh primitive for write-once-query-many layouts (a corpus grows
-    * daily; rebuilding a 100 TB index for 0.1% new vectors is not a plan).
-    */
-  def appendPartitioned(df: DataFrame, path: String, partCol: String): Unit
+  def append(df: DataFrame, path: String, partCol: Option[String] = None): Unit
 }
 
 object ParquetFormat extends TableFormat {
@@ -73,23 +68,19 @@ object ParquetFormat extends TableFormat {
     df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(path)
 
-  def append(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
+  def write(df: DataFrame, path: String, partCol: Option[String] = None): Unit =
+    partCol.fold(df.write.mode("overwrite"))(df.write.mode("overwrite")
+      .option("partitionOverwriteMode", "static").partitionBy(_)).parquet(path)
 
-  def write(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
-  def writePartitioned(df: DataFrame, path: String, partCol: String): Unit =
-    df.write.mode("overwrite").option("partitionOverwriteMode", "static")
-      .partitionBy(partCol).parquet(path)
-
-  def appendPartitioned(df: DataFrame, path: String, partCol: String): Unit =
-    df.write.mode("append").partitionBy(partCol).parquet(path)
+  def append(df: DataFrame, path: String, partCol: Option[String] = None): Unit =
+    partCol.fold(df.write.mode("append"))(df.write.mode("append").partitionBy(_)).parquet(path)
 }
 
 /** Thin IO layer for the named input tables. Keeps every read channel in
   * one place so scans stay pruned/pushed (verify via `.explain`:
-  * PushedFilters + ReadSchema).
+  * PushedFilters + ReadSchema). Also the one lifecycle of the stored
+  * layouts — `writeLayout` / `appendLayout` / `readLayout`, their `_meta`
+  * parameter contract, lineage log and compaction.
   */
 object Tables {
 
@@ -161,7 +152,7 @@ object Tables {
     spark.read.parquet(s"$path/_lineage")
 
   /** COMPACTION — the missing lifecycle op of append-accumulating layouts:
-    * every `appendPartitioned` lands new small files inside the partition
+    * every partitioned `append` lands new small files inside the partition
     * dirs, and at daily-append cadence a year of appends is hundreds of
     * files per partition — file-listing and open-cost dominate the very
     * scans the layout exists to prune. Compact rewrites the layout's DATA
@@ -214,12 +205,12 @@ object Tables {
       s"layout at $path is partitioned by [${dirCols.mkString(",")}] but compaction " +
         s"was asked to partition by $partCol")
     val data = spark.read.parquet(path).repartition(col(partCol))
-    format.writePartitioned(data, tmp, partCol)
+    format.write(data, tmp, Some(partCol))
     // carry every `_` sidecar byte-for-byte: _meta keeps parameter
     // validation alive, _GRAFT_COMPLETE keeps build-once gates satisfied,
     // _lineage keeps the audit AND per-key supersedability intact
     listNames(path).filter(n => n.startsWith("_") && n != "_SUCCESS").foreach(n =>
-      copyRecursively(Paths.get(path, n), Paths.get(tmp, n)))
+      FileUtils.copyToDirectory(new java.io.File(path, n), new java.io.File(tmp)))
     Files.move(Paths.get(path), Paths.get(trash), StandardCopyOption.ATOMIC_MOVE)
     Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
     deleteRecursively(trash)
@@ -229,56 +220,59 @@ object Tables {
     validatedMeta.removeIf(_.startsWith(path + "|"))
   }
 
-  /** Top-level entry names of a local directory (stream closed). */
-  private def listNames(dir: String): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    val entries = Files.list(Paths.get(dir))
-    try {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      entries.forEach(p => buf += p.getFileName.toString)
-      buf.toSeq
-    } finally entries.close()
-  }
+  /** Top-level entry names of a local directory. */
+  private def listNames(dir: String): Seq[String] = new java.io.File(dir).list().toSeq
 
-  private def deleteRecursively(p: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(p)
-    if (Files.exists(root)) {
-      val walk = Files.walk(root)
-      try walk.sorted(java.util.Comparator.reverseOrder()).forEach(f => Files.delete(f))
-      finally walk.close()
-    }
-  }
+  private def deleteRecursively(p: String): Unit = FileUtils.deleteDirectory(new java.io.File(p))
 
-  private def copyRecursively(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val walk = Files.walk(src)
-    try walk.forEach { p =>
-      val target = dst.resolve(src.relativize(p).toString)
-      if (Files.isDirectory(p)) Files.createDirectories(target)
-      else {
-        Files.createDirectories(target.getParent)
-        Files.copy(p, target, StandardCopyOption.REPLACE_EXISTING)
-      }
-    } finally walk.close()
-  }
-
-  /** Persist a layout's integer parameters under `<path>/_meta` (overwrite
-    * — the meta IS the layout's current contract). Every layout whose
-    * physical partitioning or encoding bakes in constants writes this
-    * alongside the build, because a reader probing with DIFFERENT constants
-    * is silently wrong (drops candidate pairs, mis-probes cells, mis-ranks
-    * buckets) — the failure mode must be an error, not a wrong answer.
+  /** A stored layout as its lifecycle sees it: the integer parameters its
+    * rows bake in, recorded under `<path>/_meta`, and its partition column,
+    * if any. Every write-once-read-many layout (the ANN vector layouts, the
+    * MinHash signature table, the band-key table) is one value of this. The
+    * parameters are PART of the layout: a reader probing with DIFFERENT
+    * constants is silently wrong (drops candidate pairs, mis-probes cells,
+    * mis-ranks buckets), so every append and read validates them — the
+    * failure mode must be an error, not a wrong answer.
     */
-  def writeLayoutMeta(spark: SparkSession, path: String, params: (String, Int)*): Unit = {
-    format.write(
-      spark.range(1).select(params.map { case (n, v) => lit(v).as(n) }: _*),
+  final case class Layout(meta: Seq[(String, Int)], partCol: Option[String] = None)
+
+  /** Build a layout: the data (overwrite — which also clears any previous
+    * `_meta`, so the data goes first), then the `_meta` record (overwrite —
+    * the meta IS the layout's current contract), then one lineage row for
+    * `batch`, the source rows the data was derived from.
+    */
+  def writeLayout(spark: SparkSession, layout: Layout, path: String, rows: DataFrame,
+      batch: DataFrame, idCol: String): Unit = {
+    format.write(rows, path, layout.partCol)
+    format.write(spark.range(1).select(layout.meta.map { case (n, v) => lit(v).as(n) }: _*),
       s"$path/_meta")
     // a rewrite-in-place changes the layout's contract: drop every memoized
     // validation for this path so a probe that matched the OLD parameters
     // re-reads _meta and fails — otherwise the memo would silently disable
     // the guard for exactly the rebuild case it exists to catch
     validatedMeta.removeIf(_.startsWith(path + "|"))
+    recordLayoutLineage(path, "build", batch, idCol)
+  }
+
+  /** Append a batch to a built layout: the `_meta` check FIRST — so an empty
+    * batch against a mismatched layout still fails — then the batch's rows
+    * (None: nothing to append, and no lineage row), then its lineage row.
+    * New files land inside the partition dirs their rows belong to;
+    * existing files are untouched.
+    */
+  def appendLayout(spark: SparkSession, layout: Layout, path: String, batch: DataFrame,
+      idCol: String)(rows: => Option[DataFrame]): Unit = {
+    requireLayoutMeta(spark, path, layout.meta: _*)
+    rows.foreach { df =>
+      format.append(df, path, layout.partCol)
+      recordLayoutLineage(path, "append", batch, idCol)
+    }
+  }
+
+  /** A built layout's rows, after validating its `_meta` contract. */
+  def readLayout(spark: SparkSession, layout: Layout, path: String): DataFrame = {
+    requireLayoutMeta(spark, path, layout.meta: _*)
+    spark.read.parquet(path)
   }
 
   /** Validate a layout's recorded parameters BY NAME with a single-row
@@ -290,14 +284,14 @@ object Tables {
     * every query (a driver-side file read inside the query's latency).
     * Sound because (a) a MISMATCHED query never enters the memo — wrong
     * parameters always re-check and throw; (b) a same-JVM rebuild-in-place
-    * goes through `writeLayoutMeta`, which drops the path's memo entries;
+    * goes through `writeLayout`, which drops the path's memo entries;
     * and (c) cross-JVM rebuilds are excluded by the engine's convention
     * that layout paths are content-stamped and rebuilt under a NEW tag.
     */
   private val validatedMeta =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  def requireLayoutMeta(spark: SparkSession, path: String, params: (String, Int)*): Unit = {
+  private def requireLayoutMeta(spark: SparkSession, path: String, params: (String, Int)*): Unit = {
     val memoKey = path + "|" + params.map { case (n, v) => s"$n=$v" }.mkString(",")
     if (validatedMeta.contains(memoKey)) return
     val rows = spark.read.parquet(s"$path/_meta").collect()

@@ -249,20 +249,27 @@ class PlanSpec extends SparkSpec {
     assert(initialPlan(df).toString.contains("scaled_dot_fast"))
   }
 
+  // covers every near-dup family (MinHash, SimHash, embedding) — they share
+  // one bucket-pair join; the name is kept as the test's stable id
   test("embedding near-dup: the bucket self-join shuffles band keys + ids only, never vectors") {
-    val df = operators.Ann.nearDupPairs(
-      spark, Tables.read(spark, sfDir, "embeddings"), "vec_id", "embedding")
-    val plan = initialPlan(df)
-    val joins = plan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
-    assert(joins.nonEmpty, plan.toString)
-    // the candidate-pair join is the one keyed on (band, bkey) — whatever
-    // physical strategy the planner picks, its inputs/outputs must not carry
-    // the float vectors (ids-only discipline; vectors join back per pair)
-    val pairJoins = joins.filter(_.leftKeys.size == 2)
-    assert(pairJoins.nonEmpty, plan.toString)
-    pairJoins.foreach { j =>
-      val carried = j.output.map(_.dataType.simpleString)
-      assert(!carried.exists(_.contains("array")), s"vectors ride the pair join: $carried")
+    val families = Seq(
+      "minhash" -> Queries.q26MinHashPairs(spark, sfDir),
+      "simhash" -> Queries.q27SimHashGate(spark, sfDir),
+      "embedding" -> operators.Dedup.nearDupPairs(
+        spark, Tables.read(spark, sfDir, "embeddings"), "vec_id", "embedding"))
+    families.foreach { case (family, df) =>
+      val plan = initialPlan(df)
+      val joins = plan.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+      // the candidate-pair join is the one keyed on (band, bkey) — whatever
+      // physical strategy the planner picks, it must carry nothing but the
+      // band key and the ids (signatures, sketches and vectors join back
+      // per surviving pair)
+      val pairJoins = joins.filter(_.leftKeys.size == 2)
+      assert(pairJoins.nonEmpty, s"$family: $plan")
+      pairJoins.foreach { j =>
+        val carried = j.output.map(_.name)
+        assert(carried.forall(Set("band", "bkey", "id1", "id2")), s"$family pair join carries $carried")
+      }
     }
   }
 

@@ -420,12 +420,12 @@ class OperatorsSpec extends SparkSpec {
       (100L + i, v.map(x => x * 1.0005f + 0.0001f))
     }
     val emb = (base ++ planted).toDF("vec_id", "embedding")
-    val pairs = Ann.nearDupPairs(spark, emb, "vec_id", "embedding", minCosine = 0.95)
+    val pairs = Dedup.nearDupPairs(spark, emb, "vec_id", "embedding", minCosine = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == (0L until 10L).map(i => (i, 100L + i)).toSet)
 
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    assert(Ann.nearDupPairs(spark, empty, "vec_id", "embedding").count() == 0)
+    assert(Dedup.nearDupPairs(spark, empty, "vec_id", "embedding").count() == 0)
   }
 
   test("multimodal metadata: real PNG decode over binary column") {
@@ -525,9 +525,9 @@ class OperatorsSpec extends SparkSpec {
     val newBatch = planted.filter(col("vec_id") % 2 === 0)
     val oldCorpus = emb.unionByName(planted.filter(col("vec_id") % 2 =!= 0))
     val all = emb.unionByName(planted)
-    val oldPairs = pairSet(Ann.nearDupPairs(spark, oldCorpus, "vec_id", "embedding"))
-    val incr = pairSet(Ann.nearDupPairsIncremental(spark, all, newBatch, "vec_id", "embedding"))
-    val full = pairSet(Ann.nearDupPairs(spark, all, "vec_id", "embedding"))
+    val oldPairs = pairSet(Dedup.nearDupPairs(spark, oldCorpus, "vec_id", "embedding"))
+    val incr = pairSet(Dedup.nearDupPairsIncremental(spark, all, newBatch, "vec_id", "embedding"))
+    val full = pairSet(Dedup.nearDupPairs(spark, all, "vec_id", "embedding"))
     assert(oldPairs.nonEmpty && incr.nonEmpty, s"old=${oldPairs.size} incr=${incr.size}")
     assert((oldPairs ++ incr) == full, s"union=${(oldPairs ++ incr).size} full=${full.size}")
   }
@@ -631,7 +631,34 @@ class OperatorsSpec extends SparkSpec {
       assert(probe(layout, p, qv, 20).collect().nonEmpty, kind)
     }
 
-    // rebuild-in-place flips the layout's contract: writeLayoutMeta must
+    // the MinHash signature and band-key layouts ride the same lifecycle: a
+    // 32-hash append onto a 64-hash signature table would slice different
+    // bands per batch and silently lose every cross-batch pair
+    val docs = Tables.read(spark, sfDir, "documents")
+    val sigs = Dedup.minHashSignatures(spark, docs, "doc_id", "text")
+    val (sigPath, bandPath) = (s"$tmp/sigs", s"$tmp/bands")
+    Dedup.writeSignatureLayout(spark, docs, "doc_id", "text", sigPath)
+    Dedup.writeBandLayout(spark, sigs, bandPath)
+    val minHashKinds = Seq[(String, String, () => Any, org.apache.spark.sql.DataFrame => Unit)](
+      ("signature", "num_hashes",
+        () => Dedup.storedSignatures(spark, sigPath, numHashes = 32),
+        b => Dedup.appendSignatureLayout(spark, b, "doc_id", "text", sigPath, numHashes = 32)),
+      ("band", "n_buckets",
+        () => Dedup.minHashCandidatesStoredPruned(spark, bandPath, sigs, sigs, nBuckets = 128),
+        b => Dedup.appendBandLayout(spark,
+          Dedup.minHashSignatures(spark, b, "doc_id", "text"), bandPath, nBuckets = 128)))
+    minHashKinds.foreach { case (kind, param, read, append) =>
+      val e1 = intercept[IllegalArgumentException](read())
+      assert(e1.getMessage.contains(param), s"$kind read: ${e1.getMessage}")
+      Seq(docs.limit(1), docs.limit(0)).foreach { batch =>
+        val e2 = intercept[IllegalArgumentException](append(batch))
+        assert(e2.getMessage.contains(param), s"$kind append: ${e2.getMessage}")
+      }
+    }
+    assert(Dedup.storedSignatures(spark, sigPath).count() == docs.count())
+    assert(Tables.auditLayoutLineage(spark, bandPath, sigs, "id"))
+
+    // rebuild-in-place flips the layout's contract: the layout write must
     // DROP the memoized validation of the old parameters, so a probe that
     // matched before the rebuild fails after it (instead of the memo
     // silently disabling the guard for exactly the rebuild case)
