@@ -4,34 +4,27 @@ import org.apache.spark.sql.SparkSession
 /** Dev diagnostic: prints shuffle/broadcast counts of the physical plan per
   * query — the quick "is this the plan I'd want at 100×" audit loop
   * (PlanSpec pins the load-bearing shapes in CI; this main is for eyeballing
-  * new queries before choosing what to pin). Audited 2026-08-16: q51 1/0,
-  * q54 3/2, q55 6/2, q56 1/3 (fact side shuffles once, dims broadcast),
-  * q57 0/0, q27-gate 3/1.
+  * new queries before choosing what to pin). Queries are named by their
+  * `SparkEntry.queries` keys. Audited 2026-08-16: q51_ann_multi 1/0,
+  * q54_boilerplate 3/2, q55_nodes 6/2, q56_embed_link 1/3 (fact side
+  * shuffles once, dims broadcast), q57_pii_redact 0/0, q27_simhash_pairs
+  * 3/1 (1/3 when re-audited at sf0.001 on 2026-10-18).
   */
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 object PlanAudit {
   def main(args: Array[String]): Unit = {
+    // optional args: audit specific registry queries by name (default:
+    // every registered query); with SPARK_GRAFT_AUDIT_TIME=1, also run each
+    // query twice (warm + timed) and report wall + task-seconds — the quick
+    // "where does the time go" loop without a full bench run
+    val picked = PlanDump.named(args.toSeq)
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    // optional arg: audit specific queries by name (default: the historical
-    // eyeball set); with SPARK_GRAFT_AUDIT_TIME=1, also run each query
-    // twice (warm + timed) and report wall + task-seconds — the quick
-    // "where does the time go" loop without a full bench run
-    val all: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] = Seq(
-      "q51" -> (Queries.q51AnnMulti _), "q54" -> (Queries.q54Boilerplate _),
-      "q55" -> (Queries.q55Nodes _), "q56" -> (Queries.q56EmbedLink _),
-      "q57" -> (Queries.q57PiiRedact _), "q27g" -> (Queries.q27SimHashGate _),
-      "q26" -> (Queries.q26MinHashPairs _), "q75" -> (Queries.q75MinHashStored _),
-      "q49" -> (Queries.q49Components _), "q67" -> (Queries.q67CurateCorpus _))
-    val picked = if (args.isEmpty) all.take(6) else all.filter(q => args.contains(q._1))
-    val unknown = args.filterNot(all.map(_._1).contains)
-    require(unknown.isEmpty,
-      s"unknown audit queries: ${unknown.mkString(", ")} (known: ${all.map(_._1).mkString(", ")})")
     val timeIt = sys.env.get("SPARK_GRAFT_AUDIT_TIME").contains("1")
     val taskMs = new java.util.concurrent.atomic.AtomicLong(0)
     if (timeIt) spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

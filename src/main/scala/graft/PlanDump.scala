@@ -9,50 +9,29 @@ import org.apache.spark.sql.execution.ExplainMode
   * dumped plans are the plans the bench actually runs.
   *
   * Usage: runMain graft.PlanDump <suffix> [query names...]
+  *   names are `SparkEntry.queries` keys (e.g. q26_minhash_pairs); none =
+  *   every registered query;
   *   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench;
   *   SPARK_GRAFT_PLAN_DIR overrides the output dir (default plans/r07).
   */
 object PlanDump {
 
-  def all: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
-    "q03_agg" -> (Queries.q03Agg _),
-    "q04_join_regions" -> (Queries.q04JoinRegions _),
-    "q09_window_topk" -> (Queries.q09WindowTopK _),
-    "q17_extract_text" -> (Queries.q17ExtractText _),
-    "q18_mentions" -> (Queries.q18Mentions _),
-    "q20_triples" -> (Queries.q20Triples _),
-    "q23_triple_diff" -> (Queries.q23TripleDiff _),
-    "q25_dedup_docs" -> (Queries.q25DedupDocs _),
-    "q26_minhash_pairs" -> (Queries.q26MinHashPairs _),
-    "q29_ann_brute" -> (Queries.q29AnnBrute _),
-    "q39_sessionize" -> (Queries.q39Sessionize _),
-    "q40_pipeline" -> (Queries.q40Pipeline _),
-    "q44_diff_html" -> (Queries.q44DiffHtml _),
-    "q49_components" -> (Queries.q49Components _),
-    "q51_ann_multi" -> (Queries.q51AnnMulti _),
-    "q61_ann_ivf_part" -> (Queries.q61AnnIvfPart _),
-    "q62_ann_pq" -> (Queries.q62AnnPq _),
-    "q67_curate_corpus" -> (Queries.q67CurateCorpus _),
-    "q73_ann_ivfpq" -> (Queries.q73AnnIvfPq _),
-    "q74_quality_clf" -> (Queries.q74QualityClassifier _),
-    "q75_minhash_stored" -> (Queries.q75MinHashStored _),
-    "q77_minhash_incr" -> (Queries.q77MinHashIncremental _),
-    "q84_bpe_tokens" -> (Queries.q84BpeTokens _),
-    "q91_simhash_incr" -> (Queries.q91SimHashIncr _),
-    "q55_nodes" -> (Queries.q55Nodes _),
-    "q28_jaccard_verify" -> (Queries.q28JaccardVerify _),
-    "q19_link_top1" -> (Queries.q19LinkTop1 _),
-    "q54_boilerplate" -> (Queries.q54Boilerplate _),
-    "q58_dedup_e2e" -> (Queries.q58DedupE2E _),
-    "q65_decontaminate" -> (Queries.q65Decontaminate _),
-    "q38_embed_neardup" -> (Queries.q38EmbedNearDup _),
-    "q90_embed_neardup_incr" -> (Queries.q90EmbedNearDupIncr _)
-  )
+  /** Registry queries (`SparkEntry.queries`) by name, in the order given;
+    * no names = every registered query, sorted. An unknown name fails and
+    * lists the known ones.
+    */
+  def named(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = SparkEntry.queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")} " +
+      s"(known: ${all.keys.toSeq.sorted.mkString(", ")})")
+    (if (names.isEmpty) all.keys.toSeq.sorted else names).map(n => n -> all(n))
+  }
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanDump <suffix> [query names...]")
     val suffix = args.head
-    val picked = if (args.length > 1) all.filter(q => args.tail.contains(q._1)) else all
+    val picked = named(args.tail.toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r07")

@@ -1615,7 +1615,9 @@ object Queries {
   // v5: the int8 layout records its quantizer scale in _meta, LSH buckets
   // are Int partition keys, and every ANN layout is split-built
   // v6: the MinHash signature layout records num_hashes/shingle_n in _meta
-  private val LayoutVersion = "v6"
+  // v7: layout lineage rows are Manifest log rows (the per-key overwrite
+  // dirs are gone), and the resume fingerprint covers every input column
+  private val LayoutVersion = "v7"
 
   /** `kind` must encode every layout PARAMETER (cell/plane/codebook counts)
     * — e.g. "ivfcells_c16" — so a parameter change misses the cache instead

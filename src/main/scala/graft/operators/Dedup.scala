@@ -352,7 +352,7 @@ object Dedup {
     * otherwise new-vs-new collision pairs would silently vanish. Rather
     * than trusting the caller, the lineage audit below checks that the
     * layout's recorded batches cover `allSigs` exactly (one tiny aggregate
-    * over the lineage log + one column-pruned id aggregate — zero IO
+    * over the lineage log's latest rows + one column-pruned id aggregate — zero IO
     * against the layout's data files) and throws on a gap.
     */
   def minHashCandidatesStoredPruned(

@@ -271,11 +271,10 @@ object KgPipeline {
     val out = dedupTriples(triples(spark, pages)).withColumn("batch", lit(batchId))
     Tables.format.overwritePartitions(out, path, "batch")
     // idempotency key = the batch: the data write REPLACES the batch
-    // partition, so a re-landing must supersede its lineage row, not
-    // double-append it (a doubled row would fail the audit forever on
-    // byte-correct data)
-    Tables.recordLayoutLineage(path, s"batch=$batchId", pages.toDF(), "url",
-      idempotencyKey = Some(s"batch$batchId"))
+    // partition, so a re-landing's lineage row must supersede the batch's
+    // earlier row, not count next to it (a doubled row would fail the
+    // audit forever on byte-correct data)
+    Tables.recordLayoutLineage(path, "batch", pages.toDF(), "url", idempotencyKey = Some(batchId))
   }
 
   /** Incremental node-table maintenance — the aggregate-update half of the

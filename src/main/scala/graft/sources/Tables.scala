@@ -4,6 +4,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Page
+import graft.pipeline.Manifest
 import graft.text.HtmlCodec
 
 /** The table-FORMAT seam (SURVEY.md §7.0): every writer shape the engine
@@ -80,7 +81,8 @@ object ParquetFormat extends TableFormat {
   * one place so scans stay pruned/pushed (verify via `.explain`:
   * PushedFilters + ReadSchema). Also the one lifecycle of the stored
   * layouts — `writeLayout` / `appendLayout` / `readLayout`, their `_meta`
-  * parameter contract, lineage log and compaction.
+  * parameter contract, their rows in the engine's one lineage log
+  * (`Manifest`) and compaction.
   */
 object Tables {
 
@@ -90,66 +92,38 @@ object Tables {
   def read(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Layout lineage: one row recorded per layout mutation, under
-    * `<layoutPath>/_lineage` (the underscore prefix keeps it invisible to
-    * the layout's data scan): (op, rows, id_fp, run_seq). `id_fp` is the
-    * Manifest family's order-independent xor fingerprint of the batch's
-    * ids, so an auditor can answer "which source batches are IN this
-    * layout, and does the union still match the source?" without listing
-    * data files. One tiny aggregate over the (column-pruned) batch ids.
+  /** Layout lineage: one row per layout mutation in the engine's one
+    * lineage log (`Manifest`'s schema, writer and latest-row reader) under
+    * `<layoutPath>/_lineage` — the underscore prefix keeps it invisible to
+    * the layout's data scan. `stage` is the op (`build`, `append`,
+    * `batch`); `input_fingerprint` and `rows_in` are `Manifest.fingerprint`
+    * and the row count of the batch's ids, so an auditor can answer "which
+    * source batches are IN this layout, and does the union still match the
+    * source?" without listing data files. One tiny aggregate over the
+    * (column-pruned) batch ids.
     *
-    * `idempotencyKey`: pass it when the DATA write is idempotent per batch
-    * (dynamic partition overwrite — re-landing a day replaces that day's
-    * files). The lineage row then lands in `_lineage/key=<k>` with
-    * OVERWRITE, so a crash-driven or routine re-run supersedes its own
-    * lineage row instead of double-appending it — without this, a re-landed
-    * batch would fail `auditLayoutLineage` forever on byte-correct data.
-    * Append-only layouts (where a re-run really does add rows twice) keep
-    * the default append so the audit correctly flags the duplication.
+    * `part_key` is the row's supersession key. Pass `idempotencyKey` when
+    * the DATA write is idempotent per batch (dynamic partition overwrite —
+    * re-landing a day replaces that day's files): a re-run's row then
+    * supersedes its own earlier row instead of double-counting it, which
+    * would fail `auditLayoutLineage` forever on byte-correct data. Without
+    * it the key is the row's own run_seq, so every append counts — a
+    * layout where a re-run really does add rows twice gets flagged by the
+    * audit.
     */
   def recordLayoutLineage(path: String, op: String, batch: DataFrame, idCol: String,
-      idempotencyKey: Option[String] = None): Unit = {
-    val row = batch
+      idempotencyKey: Option[Long] = None): Unit = {
+    val runSeq = Manifest.nextRunSeq()
+    Manifest.append(s"$path/_lineage", op, "ok", runSeq, batch
       .agg(
-        count(lit(1)).as("rows"),
-        // xor over zero rows is NULL — pin the empty-batch fingerprint to 0
-        // so lineage consumers can getLong/xor-combine without null checks
-        coalesce(
-          graft.pipeline.Manifest.fingerprintCol(Seq(col(idCol))), lit(0L)).as("id_fp"))
-      .select(
-        lit(op).as("op"),
-        col("rows"),
-        col("id_fp"),
-        // the Manifest family's collision-resistant sequence, not bare
-        // millis: two appends in the same millisecond stay ordered
-        lit(graft.pipeline.Manifest.nextRunSeq()).as("run_seq"))
-    // style guard: a layout must not mix keyed (key=<k> partition dirs) and
-    // plain-append lineage rows — Spark's partition discovery throws
-    // 'conflicting directory structures' on the MIXED log, which would break
-    // the audit forever on byte-correct data. Reject the write that would
-    // introduce the mix instead.
-    val linDir = new java.io.File(s"$path/_lineage")
-    if (linDir.isDirectory) {
-      val names = linDir.listFiles().map(_.getName)
-      val hasKeyed = names.exists(_.startsWith("key="))
-      val hasPlain = names.exists(n => n.endsWith(".parquet"))
-      val wantKeyed = idempotencyKey.isDefined
-      require(!(wantKeyed && hasPlain) && !(!wantKeyed && hasKeyed),
-        s"layout lineage at $path/_lineage already uses the " +
-          s"${if (hasKeyed) "idempotency-keyed" else "plain-append"} style; " +
-          "mixing styles breaks partition discovery for every later audit")
-    }
-    idempotencyKey match {
-      // key=<k> is partition-style naming, so readLayoutLineage's parquet
-      // read discovers `key` as a partition column — audit aggregates are
-      // key-agnostic either way
-      case Some(k) => format.write(row, s"$path/_lineage/key=$k")
-      case None    => format.append(row, s"$path/_lineage")
-    }
+        Manifest.fingerprint(Seq(col(idCol))).as("input_fingerprint"),
+        count(lit(1)).as("rows_in"))
+      .withColumn("part_key", lit(idempotencyKey.getOrElse(runSeq))))
   }
 
+  /** The latest lineage row per key of the layout at `path`. */
   def readLayoutLineage(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/_lineage")
+    Manifest.latestRows(spark, s"$path/_lineage")
 
   /** COMPACTION — the missing lifecycle op of append-accumulating layouts:
     * every partitioned `append` lands new small files inside the partition
@@ -159,11 +133,11 @@ object Tables {
     * with ~one file per partition (repartition on the partition column
     * before the partitioned write) and carries EVERY `_`-sidecar over
     * byte-for-byte — the parameter record, the completion marker, AND the
-    * lineage log UNCHANGED: the log is batch-sized (tiny) and its
-    * structure is load-bearing — idempotency-keyed rows must stay
-    * individually supersedable by later re-lands, which collapsing the log
-    * into an aggregated row would break. The coverage audit therefore
-    * holds before and after trivially, and probes prune exactly as before
+    * lineage log UNCHANGED: the log is batch-sized (tiny) and its rows are
+    * load-bearing — an idempotency-keyed row must stay individually
+    * supersedable by a later re-land, which collapsing the log into an
+    * aggregated row would break. The coverage audit therefore holds before
+    * and after trivially, and probes prune exactly as before
     * (spec-asserted).
     *
     * Swap discipline on local parquet: write to `<path>.compacting`, then
@@ -308,26 +282,22 @@ object Tables {
 
   /** Audit a layout's LINEAGE LOG against its source WITHOUT reading the
     * layout's data files: xor fingerprints over DISJOINT batches compose
-    * (xor of the batch id_fps == the id_fp of their union), so the lineage
-    * log alone predicts the source table's (count, fingerprint) — one
-    * column-pruned aggregate over the source ids, zero IO against the
-    * layout. Returns true iff the RECORDED batches cover the source exactly
-    * once. It vouches for the log, not the data files: a data file lost or
-    * corrupted AFTER a recorded append still passes (a scrub that re-reads
-    * the layout is the stronger, IO-paying check).
+    * (xor of the batch fingerprints == the fingerprint of their union), so
+    * the latest lineage rows alone predict the source table's (count,
+    * fingerprint) — one column-pruned aggregate over the source ids, zero
+    * IO against the layout. Returns true iff the RECORDED batches cover the
+    * source exactly once. It vouches for the log, not the data files: a
+    * data file lost or corrupted AFTER a recorded append still passes (a
+    * scrub that re-reads the layout is the stronger, IO-paying check).
     */
   def auditLayoutLineage(spark: SparkSession, path: String,
       source: DataFrame, idCol: String): Boolean = {
     val lin = readLayoutLineage(spark, path)
-      .agg(sum(col("rows")), expr("bit_xor(id_fp)")).head()
+      .agg(sum(col("rows_in")), bit_xor(col("input_fingerprint"))).head()
     if (lin.isNullAt(0)) return false // no lineage rows ⇒ nothing vouched for
-    val src = source.agg(
-      count(lit(1)),
-      coalesce(graft.pipeline.Manifest.fingerprintCol(Seq(col(idCol))), lit(0L))).head()
-    lin.getLong(0) == src.getLong(0) &&
-      (if (lin.isNullAt(1)) 0L else lin.getLong(1)) == src.getLong(1)
+    val src = source.agg(count(lit(1)), Manifest.fingerprint(Seq(col(idCol)))).head()
+    lin.getLong(0) == src.getLong(0) && lin.getLong(1) == src.getLong(1)
   }
-
 
   /** The pipeline's input page table in BASELINE.json input_hint shape
     * (url, warc_ts, html, text, lang), synthesized deterministically from the

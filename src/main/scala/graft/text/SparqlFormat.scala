@@ -56,23 +56,6 @@ object SparqlFormat {
     "http://www.wikidata.org/value/" -> "v"
   )
 
-  /** Static predicate blacklist (ttl_compare.py:84-99). Only the `/owl#`
-    * substring rule is applied by the reference's hot path; the list is kept
-    * for the explicit-blacklist filter operator.
-    */
-  val predicateBlacklist: Vector[String] = Vector(
-    "http://creativecommons.org/ns#license",
-    "http://schema.org/softwareVersion",
-    "http://www.w3.org/2002/07/owl#complementOf",
-    "http://www.w3.org/2002/07/owl#disjointUnionOf",
-    "http://www.w3.org/2002/07/owl#members",
-    "http://www.w3.org/2002/07/owl#onProperty",
-    "http://www.w3.org/2002/07/owl#someValuesFrom",
-    "http://www.w3.org/2002/07/owl#unionOf",
-    "http://www.w3.org/2002/07/owl#versionIRI",
-    "http://www.w3.org/2002/07/owl#Restriction"
-  )
-
   /** The 20-line PREFIX preamble written ahead of every output file
     * (sparql_updates.py:35-99; sample_result.txt:1-20).
     */

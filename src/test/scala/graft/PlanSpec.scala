@@ -358,8 +358,8 @@ class PlanSpec extends SparkSpec {
         }
         // lineage: build + append rows cover every vector exactly once
         val lin = Tables.readLayoutLineage(spark, pSplit).collect()
-        assert(lin.map(_.getAs[String]("op")).sorted.toSeq == Seq("append", "build"), kind)
-        assert(lin.map(_.getAs[Long]("rows")).sum == emb.count(), kind)
+        assert(lin.map(_.getAs[String]("stage")).sorted.toSeq == Seq("append", "build"), kind)
+        assert(lin.map(_.getAs[Long]("rows_in")).sum == emb.count(), kind)
       }
   }
 

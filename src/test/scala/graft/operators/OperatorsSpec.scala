@@ -886,8 +886,8 @@ class OperatorsSpec extends SparkSpec {
     assert(inc.exists { case (a, b) => a % 2 != b % 2 }, "no cross-batch pair found")
     // lineage recorded both mutations and accounts for every doc
     val lin = Tables.readLayoutLineage(spark, path).collect()
-    assert(lin.map(_.getAs[String]("op")).sorted.toSeq == Seq("append", "build"))
-    assert(lin.map(_.getAs[Long]("rows")).sum == docs.count())
+    assert(lin.map(_.getAs[String]("stage")).sorted.toSeq == Seq("append", "build"))
+    assert(lin.map(_.getAs[Long]("rows_in")).sum == docs.count())
   }
 
   test("lineage audit: xor fingerprints compose across disjoint batches; a dropped batch is detected") {

@@ -165,6 +165,26 @@ class PipelineSpec extends SparkSpec {
     // superseded fingerprint row is ignored) — a 4th run computes nothing
     val n4 = Manifest.runStage(spark, input2, "url", 8, "tokenize", s"$tmp/out", s"$tmp/manifest")(stageFn)
     assert(n4 == 0)
+
+    // the fingerprint covers page CONTENT, not just urls: one page's text
+    // edited under the same url recomputes, and the landed row is the new one
+    def run1(df: org.apache.spark.sql.DataFrame) =
+      Manifest.runStage(spark, df, "url", 1, "tokenize", s"$tmp/out1", s"$tmp/manifest1")(stageFn)
+    def landed(url: String) = spark.read.parquet(s"$tmp/out1").filter(col("url") === url)
+      .select("text").collect().map(_.getString(0)).toSeq
+    val u = input2.select("url").head().getString(0)
+    assert(run1(input2) == 1)
+    val edited = input2.withColumn("text",
+      when(col("url") === u, concat(col("text"), lit(" edited"))).otherwise(col("text")))
+    assert(run1(edited) == 1)
+    assert(landed(u).size == 1 && landed(u).head.endsWith(" edited"))
+    // two IDENTICAL rows under a new url cancel in the xor fingerprint;
+    // the row count still marks the partition stale, and both rows land
+    val nu = "https://example.org/new/doc"
+    val twoNew = edited.union(spark.range(2).select(lit(nu).as("url"), lit("a b").as("text"), lit("en").as("lang")))
+    assert(run1(twoNew) == 1)
+    assert(landed(nu) == Seq("a b", "a b"))
+    assert(run1(twoNew) == 0)
   }
 
   test("manifest: empty recompute clears stale partition files; vanished keys are orphaned") {
