@@ -185,10 +185,7 @@ object Queries {
     * expression's equivalence on real data.
     */
   def q11PrefixReplace(s: SparkSession, dir: String): DataFrame = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "replace_prefixes_fast",
-      exprs => graft.plans.PrefixReplaceExpr(exprs.head),
-      "built-in")
+    graft.plans.NativeKernels.ensure(s)
     t(s, dir, "part")
       .select(
         col("p_partkey"),
@@ -1528,15 +1525,12 @@ object Queries {
     * the scaled-integer dot of (doc context vector, entity vector). Doc
     * vectors join by doc key (a co-partitionable big-big join at scale);
     * entity vectors ride a broadcast (the entity dict is small). Scoring
-    * composes the native codegen ScaledDotExpr; top-1 per (url, surface)
+    * composes the native codegen `scaled_dot_fast`; top-1 per (url, surface)
     * with a qid tiebreak. Entity→vector assignment is the deterministic
     * qid-number mod |corpus| so the oracle reproduces it.
     */
   def q56EmbedLink(s: SparkSession, dir: String): DataFrame = {
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "scaled_dot_fast",
-      exprs => graft.plans.ScaledDotExpr(exprs.head, exprs(1)),
-      "built-in")
+    graft.plans.NativeKernels.ensure(s)
     val emb = t(s, dir, "embeddings")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
     val n = emb.count()
@@ -2894,7 +2888,7 @@ object Queries {
     "q93_paradf_incr" -> ((q93BoilerplateDfIncr _, q93Sql))
   )
 
-  /** ANN scoring via the native codegen expression (plans.ScaledDotExpr):
+  /** ANN scoring via the native codegen kernel `scaled_dot_fast`:
     * same semantics as q29's typed form but with no object ser/deser fence —
     * scan → score → TakeOrderedAndProject is one fused codegen stage. The
     * oracle is the same SQL as q29, so the custom expression is
@@ -2902,10 +2896,7 @@ object Queries {
     */
   def q48AnnNative(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "scaled_dot_fast",
-      exprs => graft.plans.ScaledDotExpr(exprs.head, exprs(1)),
-      "built-in")
+    graft.plans.NativeKernels.ensure(s)
     val emb = t(s, dir, "embeddings")
     val query = emb.filter(col("vec_id") === 0)
       .select(col("embedding")).as[Array[Float]].head()

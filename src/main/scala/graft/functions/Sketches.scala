@@ -185,18 +185,6 @@ object Sketches {
     out
   }
 
-  /** Signature agreement fraction — `estJaccard` without the per-position
-    * tuple boxing (the candidate-estimate hot loop). Same formula: equal
-    * positions over min(length) divided by s1.length.
-    */
-  def estJaccardFast(s1: Array[Long], s2: Array[Long]): Double = {
-    val n = math.min(s1.length, s2.length)
-    var eq = 0
-    var i = 0
-    while (i < n) { if (s1(i) == s2(i)) eq += 1; i += 1 }
-    eq.toDouble / s1.length
-  }
-
   /** LSH band keys: signature split into `bands` bands of `rows` rows; key =
     * (bandIdx, hash of the band slice). Near-dup candidates = pairs sharing
     * any band key — the shuffle key of the distributed join.

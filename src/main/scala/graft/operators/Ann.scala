@@ -1,10 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Sketches
+import graft.plans.NativeKernels
 import graft.sources.Tables
 
 /** Vector search over an embedding column (`Array[Float]`). Embedding
@@ -411,23 +411,14 @@ object Ann {
       * q60); ADC is a UDF over the binary codes with the query table
       * inlined.
       */
-    def scoreColumn(spark: SparkSession, q: Array[Float], stored: Column): Column = layout.enc match {
-      case Float32 =>
-        register(spark, "scaled_dot_fast", graft.plans.ScaledDotExpr(_, _))
-        call_function("scaled_dot_fast", stored, typedLit(q))
-      case Int8 =>
-        register(spark, "int8_dot_fast", graft.plans.Int8DotExpr(_, _))
-        call_function("int8_dot_fast", stored, lit(quantizeInt8(q)))
+    def scoreColumn(q: Array[Float], stored: Column): Column = layout.enc match {
+      case Float32 => call_function("scaled_dot_fast", stored, typedLit(q))
+      case Int8    => call_function("int8_dot_fast", stored, lit(quantizeInt8(q)))
       case _: Pq =>
         val qtab = pqQueryTable(q, books)
         udf((codes: Array[Byte]) => adcScore(qtab, codes)).apply(stored)
     }
   }
-
-  private def register(spark: SparkSession, name: String,
-      mk: (Expression, Expression) => Expression): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => mk(exprs.head, exprs(1)), "built-in")
 
   /** One typed score of a stored row against a prepared query — the
     * multi-query combine's form of Codec.scoreColumn.
@@ -539,10 +530,11 @@ object Ann {
       k: Int
   ): DataFrame = {
     val codec = new Codec(layout, query.length)
+    NativeKernels.ensure(spark)
     probed(layout, rows, codec.probes(query))
       .select(
         col(idCol).cast("long").as(idCol),
-        codec.scoreColumn(spark, query, col(layout.storedCol(vecCol))).as(layout.scoreName))
+        codec.scoreColumn(query, col(layout.storedCol(vecCol))).as(layout.scoreName))
       .orderBy(col(layout.scoreName).desc, col(idCol).asc)
       .limit(k)
   }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.Sketches
+import graft.plans.NativeKernels
 import graft.sources.Tables
 
 /** Deduplication operators for the training-data pipeline, from exact to
@@ -200,15 +201,12 @@ object Dedup {
   private def estimatePairs(spark: SparkSession, sigs: DataFrame, pairs: DataFrame,
       minEstJaccard: Double): DataFrame = {
     // the agreement count as a NATIVE codegen expression over columnar
-    // ArrayData (graft.plans.SigAgreeExpr): zero per-pair allocation.
-    // Measured alternatives at sf0.1 candidate volume: the typed .map
-    // deserialized two 64-long arrays per pair (GC-heavy serial tail); the
-    // zip_with/aggregate HOF form is interpreted, ~2.5× slower than the
+    // ArrayData (sig_agree_fast, graft.plans.SigAgreeExpr): zero per-pair
+    // allocation. Measured alternatives at sf0.1 candidate volume: the typed
+    // .map deserialized two 64-long arrays per pair (GC-heavy serial tail);
+    // the zip_with/aggregate HOF form is interpreted, ~2.5× slower than the
     // map. Division mirrors estJaccard exactly: eq.toDouble / s1.length.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sig_agree_fast",
-      exprs => graft.plans.SigAgreeExpr(exprs.head, exprs(1)),
-      "built-in")
+    NativeKernels.ensure(spark)
     joinedBack(pairs, sigs)
       .select(col("id1"), col("id2"),
         (expr("sig_agree_fast(p1, p2)").cast("double") / size(col("p1"))).as("est_jaccard"))
@@ -503,15 +501,12 @@ object Dedup {
   private def cosineVerified(spark: SparkSession, vectors: DataFrame, pairs: DataFrame,
       minCosine: Double): DataFrame = {
     // exact cosine as a NATIVE codegen expression over columnar ArrayData
-    // (graft.plans.CosineExpr — the SigAgreeExpr discipline): the typed
-    // .map deserialized both float vectors per surviving pair through an
-    // object fence; this keeps join → score → filter one codegen span with
-    // zero per-pair allocation. Bit-identical to Sketches.cosine
+    // (cosine_fast, graft.plans.CosineExpr — the sig_agree_fast discipline):
+    // the typed .map deserialized both float vectors per surviving pair
+    // through an object fence; this keeps join → score → filter one codegen
+    // span with zero per-pair allocation. Bit-identical to Sketches.cosine
     // (CosineExprSpec; q38/q90 oracle hashes pin it end-to-end).
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_fast",
-      exprs => graft.plans.CosineExpr(exprs.head, exprs(1)),
-      "built-in")
+    NativeKernels.ensure(spark)
     joinedBack(pairs, vectors)
       .select(col("id1"), col("id2"), expr("cosine_fast(p1, p2)").as("cosine"))
       .filter(col("cosine") >= minCosine)

@@ -1,18 +1,16 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 
-/** Native Catalyst expression for exact cosine similarity over two
-  * `array<float>` columns — the verification kernel of the embedding
-  * near-dup family (Ann.cosineVerified), inside whole-stage codegen.
+/** `cosine_fast`: exact cosine similarity over two `array<float>` columns —
+  * the verification kernel of the embedding near-dup family
+  * (Dedup.cosineVerified), inside whole-stage codegen (run by
+  * BinaryKernelExpr).
   *
   * The typed-Dataset form deserialized BOTH float arrays per surviving
   * candidate pair through a DeserializeToObject/Serialize fence (the same
-  * disease SigAgreeExpr cured for the minhash estimate tail); this reads
+  * disease sig_agree_fast cured for the minhash estimate tail); this reads
   * the columnar ArrayData in place with zero per-pair allocation.
   *
   * Arithmetic mirrors graft.functions.Sketches.cosine EXACTLY — same
@@ -21,35 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * typed form (CosineExprSpec asserts this on adversarial inputs; the
   * q38/q90 oracle hashes pin it end-to-end).
   */
-case class CosineExpr(left: Expression, right: Expression) extends BinaryExpression {
+object CosineExpr extends BinaryKernel("cosine_fast", ArrayType(FloatType), DoubleType) {
+  def eval(a: Any, b: Any): Any = compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  private def isFloatArray(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isFloatArray(left.dataType) && isFloatArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<float> arguments, got ${left.dataType}, ${right.dataType}")
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "cosine_fast"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    CosineExpr.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.CosineExpr.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object CosineExpr {
   /** Same arithmetic as Sketches.cosine, over columnar ArrayData. */
   def compute(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())

@@ -1,11 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.unsafe.types.UTF8String
 import graft.text.PrefixTrie
 
@@ -15,9 +13,10 @@ import graft.text.PrefixTrie
   * magnitude less copying on the canonicalization hot path, and still fully
   * inside whole-stage codegen via a static call.
   *
-  * This is the one place profiling justified dropping below the public
+  * This was the first place profiling justified dropping below the public
   * Column API (SURVEY.md §4 "revisit only if the prefix-replace chain
-  * dominates"); everything else in the engine stays on built-ins.
+  * dominates"). Unary, so it is its own class; it is registered through
+  * `NativeKernels.table` like the binary kernels.
   */
 case class PrefixReplaceExpr(child: Expression) extends UnaryExpression {
 
@@ -26,7 +25,7 @@ case class PrefixReplaceExpr(child: Expression) extends UnaryExpression {
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires a string argument, got ${child.dataType}")
   override def dataType: DataType = StringType
-  override def prettyName: String = "replace_prefixes_fast"
+  override def prettyName: String = PrefixReplaceExpr.name
 
   override protected def nullSafeEval(input: Any): Any =
     PrefixTrie.replaceAllUTF8(input.asInstanceOf[UTF8String])
@@ -38,34 +37,6 @@ case class PrefixReplaceExpr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Session extension registering the engine's native expressions; enable
-  * with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-  * (works on a plain `spark-submit`/`spark-sql` deployment with this jar on
-  * the classpath — no code changes in the consuming application) and use as
-  * `replace_prefixes_fast(col)` / `scaled_dot_fast(vec, query)` in SQL.
-  * ExtensionsSpec drives both through a config-built session.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("replace_prefixes_fast"),
-      new ExpressionInfo(classOf[PrefixReplaceExpr].getName, "replace_prefixes_fast"),
-      (children: Seq[Expression]) => PrefixReplaceExpr(children.head)
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("scaled_dot_fast"),
-      new ExpressionInfo(classOf[ScaledDotExpr].getName, "scaled_dot_fast"),
-      (children: Seq[Expression]) => ScaledDotExpr(children.head, children(1))
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("int8_dot_fast"),
-      new ExpressionInfo(classOf[Int8DotExpr].getName, "int8_dot_fast"),
-      (children: Seq[Expression]) => Int8DotExpr(children.head, children(1))
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_fast"),
-      new ExpressionInfo(classOf[CosineExpr].getName, "cosine_fast"),
-      (children: Seq[Expression]) => CosineExpr(children.head, children(1))
-    ))
-  }
+object PrefixReplaceExpr {
+  val name = "replace_prefixes_fast"
 }

@@ -1,51 +1,22 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
 
-/** Native Catalyst expression for the ANN scoring kernel: the
-  * scaled-integer dot product (per-component floor to milli-units, exact
-  * BIGINT accumulation — graft.functions.Sketches.scaledDot) over two
-  * `array<float>` columns, fully inside whole-stage codegen.
+/** `scaled_dot_fast`, the ANN scoring kernel: the scaled-integer dot
+  * product (per-component floor to milli-units, exact BIGINT accumulation —
+  * graft.functions.Sketches.scaledDot) over two `array<float>` columns,
+  * fully inside whole-stage codegen (run by BinaryKernelExpr).
   *
   * The typed-Dataset form (q29) pays a DeserializeToObject/Serialize
   * boundary per row — correct but it fences codegen around the scan; this
-  * expression reads the columnar ArrayData in place, so scan → score →
+  * kernel reads the columnar ArrayData in place, so scan → score →
   * TakeOrderedAndProject stays one fused stage. Oracle-proven equivalent to
   * the typed form by q48 (same DuckDB SQL as q29).
   */
-case class ScaledDotExpr(left: Expression, right: Expression) extends BinaryExpression {
+object ScaledDotExpr extends BinaryKernel("scaled_dot_fast", ArrayType(FloatType), LongType) {
+  def eval(a: Any, b: Any): Any = compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  private def isFloatArray(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isFloatArray(left.dataType) && isFloatArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<float> arguments, got ${left.dataType}, ${right.dataType}")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "scaled_dot_fast"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    ScaledDotExpr.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.ScaledDotExpr.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ScaledDotExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object ScaledDotExpr {
   /** Same arithmetic as Sketches.scaledDot, over columnar ArrayData. */
   def compute(a: ArrayData, b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())

@@ -1,53 +1,25 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
-/** Native Catalyst expression for the MinHash estimate kernel: the number of
-  * agreeing positions of two `array<bigint>` signatures (the numerator of
-  * `Sketches.estJaccard`), fully inside whole-stage codegen.
+/** `sig_agree_fast`, the MinHash estimate kernel: the number of agreeing
+  * positions of two `array<bigint>` signatures (the numerator of
+  * `Sketches.estJaccard`), fully inside whole-stage codegen (run by
+  * BinaryKernelExpr).
   *
   * The typed-Dataset form deserializes two 64-long arrays into JVM objects
   * PER CANDIDATE PAIR — on an LSH-collision-heavy corpus that is orders of
   * magnitude more rows than surviving pairs and was the GC-heavy serial
   * tail of every candidates query (guide §4: built-ins/native expressions
-  * over closures on the hot path; the ScaledDotExpr precedent). Reads the
+  * over closures on the hot path; the scaled_dot_fast precedent). Reads the
   * columnar ArrayData in place: zero per-row allocation. Equivalence with
-  * the Scala kernel is asserted in MinHashFastSpec and by the unchanged
-  * q26/q75/q77 oracle hashes.
+  * `Sketches.estJaccard` is asserted in MinHashFastSpec and by the
+  * unchanged q26/q75/q77 oracle hashes.
   */
-case class SigAgreeExpr(left: Expression, right: Expression) extends BinaryExpression {
+object SigAgreeExpr extends BinaryKernel("sig_agree_fast", ArrayType(LongType), IntegerType) {
+  def eval(a: Any, b: Any): Any = compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  private def isLongArray(dt: DataType): Boolean = dt match {
-    case ArrayType(LongType, _) => true
-    case _                      => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (isLongArray(left.dataType) && isLongArray(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires two array<bigint> arguments, got ${left.dataType}, ${right.dataType}")
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sig_agree_fast"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    SigAgreeExpr.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.plans.SigAgreeExpr.compute($a, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SigAgreeExpr =
-    copy(left = newLeft, right = newRight)
-}
-
-object SigAgreeExpr {
   /** Equal positions over min(length) — the estJaccard numerator (the
     * divisor, s1.length, stays in the calling plan so the division exactly
     * matches `eq.toDouble / s1.length`).

@@ -1,12 +1,16 @@
 package graft.functions
 
+import graft.plans.SigAgreeExpr
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r07 fast sketch path must be bit-identical to the original
   * Set[String]-based path: shingleHashValues(text, n) must carry exactly the
   * distinct values of abs(fnv1a(shingle)) % p over shingles(text, n), and
   * minHashFromHashes over them must equal minHash over the shingle set —
-  * on adversarial normalization inputs and a seeded random sweep.
+  * on adversarial normalization inputs and a seeded random sweep. The
+  * candidate estimate's native kernel (sig_agree_fast) must equal
+  * estJaccard.
   */
 class MinHashFastSpec extends AnyFunSuite {
 
@@ -68,12 +72,16 @@ class MinHashFastSpec extends AnyFunSuite {
     }
   }
 
-  test("estJaccardFast equals estJaccard") {
+  test("sig_agree_fast kernel equals estJaccard") {
+    // the candidate estimate divides the kernel's agreement count by
+    // s1.length in the plan (Dedup.estimatePairs); that must be estJaccard
+    def viaKernel(s1: Array[Long], s2: Array[Long]): Double =
+      SigAgreeExpr.compute(ArrayData.toArrayData(s1), ArrayData.toArrayData(s2)).toDouble / s1.length
     val rng = new scala.util.Random(99)
-    (0 until 200).foreach { _ =>
-      val s1 = Array.fill(64)(rng.nextLong() % 4)
-      val s2 = Array.fill(64)(rng.nextLong() % 4)
-      assert(Sketches.estJaccardFast(s1, s2) == Sketches.estJaccard(s1, s2))
+    val pairs = Seq.fill(200)((Array.fill(64)(rng.nextLong() % 4), Array.fill(64)(rng.nextLong() % 4))) :+
+      ((Array.fill(64)(rng.nextLong() % 4), Array.fill(48)(rng.nextLong() % 4))) // unequal lengths
+    pairs.foreach { case (s1, s2) =>
+      assert(viaKernel(s1, s2) == Sketches.estJaccard(s1, s2))
     }
   }
 }
