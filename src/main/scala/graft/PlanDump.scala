@@ -13,8 +13,19 @@ import org.apache.spark.sql.execution.ExplainMode
   *   every registered query;
   *   SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench;
   *   SPARK_GRAFT_PLAN_DIR overrides the output dir (default plans/r07).
+  * Tokens that change from run to run are masked (`mask`), so two dumps of
+  * one commit are byte-equal and a diff across commits shows plan changes
+  * only.
   */
 object PlanDump {
+
+  /** `plan` with run-to-run tokens masked and the data dir shown as `<dir>`. */
+  def mask(plan: String, dir: String): String =
+    plan.replace(dir, "<dir>")
+      .replaceAll("""#\d+""", "#N") // expression ids
+      .replaceAll("""\$Lambda(\$\d+)?/0x[0-9a-f]+@[0-9a-f]+""", """\$Lambda""") // JVM lambda identities
+      .replaceAll("""plan_id=\d+""", "plan_id=N")
+      .replaceAll("""(\w+RDD)\[\d+\]""", "$1[N]") // MapPartitionsRDD[n]
 
   /** Registry queries (`SparkEntry.queries`) by name, in the order given;
     * no names = every registered query, sorted. An unknown name fails and
@@ -48,7 +59,7 @@ object PlanDump {
     picked.foreach { case (name, fn) =>
       try {
         val df = fn(spark, dir)
-        val plan = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+        val plan = mask(df.queryExecution.explainString(ExplainMode.fromString("formatted")), dir)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"${name}_$suffix.txt"),
           plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))

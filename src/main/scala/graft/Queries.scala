@@ -1048,10 +1048,12 @@ object Queries {
     """SELECT CAST(vec_id AS BIGINT) AS id1, CAST(vec_id + 1000000 AS BIGINT) AS id2
       |FROM embeddings""".stripMargin
 
-  /** Full KG pipeline output — the flagship, oracle-gated end-to-end: the
-    * word-bounded mention scan is re-expressed in SQL as a generate_series
-    * position probe, then the same top-1 link window, adjacency lead window,
-    * and (subj,pred,obj,url) min-ts dedup as the Spark plan.
+  /** Full KG pipeline output — the flagship, oracle-gated end-to-end. The
+    * SQL states the page-local kernel relationally: the word-bounded
+    * mention scan as a generate_series position probe, then a top-1 link
+    * window, an adjacency lead window and the (subj,pred,obj,url) min-ts
+    * dedup. Every url here is one document, so it equals the Spark plan's
+    * per-page fold.
     */
   def q40Pipeline(s: SparkSession, dir: String): DataFrame =
     KgPipeline.run(s, dir, numPartitions = s.sparkContext.defaultParallelism)
@@ -1611,7 +1613,10 @@ object Queries {
   // v6: the MinHash signature layout records num_hashes/shingle_n in _meta
   // v7: layout lineage rows are Manifest log rows (the per-key overwrite
   // dirs are gone), and the resume fingerprint covers every input column
-  private val LayoutVersion = "v7"
+  // v9: the kg layouts are built by the page-local triple kernel (v8 is
+  // skipped: uncommitted builds used it, and their layouts may still sit
+  // in java.io.tmpdir)
+  private val LayoutVersion = "v9"
 
   /** `kind` must encode every layout PARAMETER (cell/plane/codebook counts)
     * — e.g. "ivfcells_c16" — so a parameter change misses the cache instead

@@ -1,141 +1,114 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.util.LongAccumulator
 import graft.model.{Dict, Page}
-import graft.operators.{Linking, Mentions}
 import graft.functions.SparqlColumns
-import graft.text.HtmlCodec
+import graft.text.{AhoCorasick, HtmlCodec}
 
 /** The flagship end-to-end KG-construction pipeline (north_star): pages →
-  * per-partition HTML→text extraction (byte-identity checked) → Aho-Corasick
-  * mention scan over the broadcast dictionary → entity linking (broadcast
-  * join + top-1 window) → triple emission (about + adjacency) → QID/PID
-  * canonicalization → windowed distinct over (subj, pred, obj, url) →
-  * SPARQL command rendering.
+  * the page-local triple kernel (HTML→text extraction, byte-identity
+  * checked → Aho-Corasick mention scan over the broadcast dictionary →
+  * top-1 entity link → aboutness + adjacency → within-page distinct) → one
+  * url repartition → map-side dedup over (subj, pred, obj, url) → SPARQL
+  * command rendering.
   *
   * Physical shape (verify with .explain("formatted")):
-  *  - ONE explicit url-hash repartition before extraction (north_rule);
-  *    extraction + scan + linking-join are then narrow / broadcast — no
-  *    further shuffle until the top-1 window (keyed by high-cardinality
-  *    (url, begin), skew-free) and the final dedup aggregate.
-  *  - the html binary column is dropped immediately after extraction so
-  *    shuffles move only small strings.
+  *  - the kernel is one narrow flatMap per page; the dictionary trie and
+  *    the top-1 alias table travel as SparkContext broadcasts, so the plan
+  *    has no join, window or sort;
+  *  - ONE url-hash repartition of the emitted triples; the dedup aggregate
+  *    clusters on a superset of url and adds no exchange (`run` adds the
+  *    page-balance repartition in front: two shuffles in all);
+  *  - the html binary column never crosses a shuffle.
   */
 object KgPipeline {
 
   final case class ExtractedPage(url: String, warc_ts: java.sql.Timestamp, text: String, lang: String)
 
-  /** Extraction stage with the per-row byte-identity invariant
-    * (BASELINE.json input_hint): extract(html) must equal the text column.
-    * Violations are counted in the `extract_mismatches` accumulator rather
-    * than thrown, matching the reference's skip-on-error posture
-    * (/root/reference/src/wikidata_update/ttl_compare.py:177-178).
+  /** Extracted text of one page, checked against its stored `text` (the
+    * per-row byte-identity invariant, BASELINE.json input_hint): a mismatch
+    * is counted rather than thrown, matching the reference's skip-on-error
+    * posture (ttl_compare.py:177-178).
     */
+  private def extracted(p: Page, mismatches: LongAccumulator): String = {
+    val text = HtmlCodec.extract(p.html)
+    if (text != p.text) mismatches.add(1)
+    text
+  }
+
+  /** Extraction stage alone, counting into `extract_mismatches`. */
   def extractText(spark: SparkSession, pages: Dataset[Page]): Dataset[ExtractedPage] = {
     import spark.implicits._
     val mismatches = spark.sparkContext.longAccumulator("extract_mismatches")
-    pages.mapPartitions(_.map { p =>
-      val extracted = HtmlCodec.extract(p.html)
-      if (extracted != p.text) mismatches.add(1)
-      ExtractedPage(p.url, p.warc_ts, extracted, p.lang)
-    })
+    pages.mapPartitions(_.map(p => ExtractedPage(p.url, p.warc_ts, extracted(p, mismatches), p.lang)))
   }
 
-  /** Linked top-1 entities per mention occurrence, with warc_ts carried
-    * through the scan — one pass over the pages, html touched exactly once
-    * (no join back to the page table, which would rescan the binary column).
-    *
-    * Shuffle discipline: exactly ONE exchange — the explicit
-    * `repartition(url)` on the raw mentions. Everything downstream is
-    * partitioning-compatible: the broadcast join streams, the top-1 window
-    * clusters by (url, surface, begin) ⊇ {url} so HashPartitioning(url)
-    * already satisfies it (sort only, no exchange), and the same holds for
-    * the adjacency window and the final dedup aggregate in `triples`.
+  /** THE per-page step: the word-bounded Aho-Corasick scan of `text`, each
+    * mention linked to its top-1 QID by `best` (a surface without alias
+    * drops), as (begin, surface, qid) sorted by (begin, surface).
+    */
+  private def links(trie: AhoCorasick, best: Map[String, String], text: String): Seq[(Int, String, String)] =
+    trie.scan(text, wordBounds = true).sortBy(m => (m.begin, m.pattern))
+      .flatMap(m => best.get(m.pattern).map(q => (m.begin, m.pattern, q)))
+
+  /** `emit` over every page's links; the trie and the alias table are
+    * broadcast once per call, mismatches counted into `extract_mismatches`.
+    */
+  private def perPage[T: Encoder](spark: SparkSession, pages: Dataset[Page])(
+      emit: (Page, Seq[(Int, String, String)]) => Seq[T]): Dataset[T] = {
+    val trie = spark.sparkContext.broadcast(AhoCorasick.build(Dict.surfaces))
+    val best = spark.sparkContext.broadcast(aliasBest)
+    val mismatches = spark.sparkContext.longAccumulator("extract_mismatches")
+    pages.flatMap(p => emit(p, links(trie.value, best.value, extracted(p, mismatches))))
+  }
+
+  /** The pipeline's one wide op: a url-hash repartition; an explicit width
+    * (run() passes its numPartitions) bounds the map-tasks ×
+    * shuffle-partitions file count — None keeps the session's shuffle width
+    * (the scaling job's measured configuration).
+    */
+  private def byUrl(df: DataFrame, urlParts: Option[Int]): DataFrame = urlParts match {
+    case Some(n) => df.repartition(n, col("url"))
+    case None    => df.repartition(col("url"))
+  }
+
+  /** Linked top-1 entity per mention occurrence of each page row —
+    * (url, warc_ts, surface, begin, qid), url-partitioned.
     */
   def linkedMentions(
       spark: SparkSession, pages: Dataset[Page], urlParts: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    val trie = spark.sparkContext.broadcast(graft.text.AhoCorasick.build(Dict.surfaces))
-    val mismatches = spark.sparkContext.longAccumulator("extract_mismatches")
-    val raw = pages
-      .flatMap { p =>
-        val text = HtmlCodec.extract(p.html)
-        if (text != p.text) mismatches.add(1)
-        trie.value.scan(text, wordBounds = true).map { m =>
-          (p.url, p.warc_ts, m.pattern, m.begin)
-        }
-      }
-      .toDF("url", "warc_ts", "surface", "begin")
-    // the pipeline's one wide op (mentions, not html bytes); an explicit
-    // width (run() passes its numPartitions) bounds the map-tasks ×
-    // shuffle-partitions file count of this exchange — None keeps the
-    // session's shuffle width (the scaling job's measured configuration)
-    val mentions = urlParts match {
-      case Some(n) => raw.repartition(n, col("url"))
-      case None    => raw.repartition(col("url"))
-    }
-    import org.apache.spark.sql.functions.broadcast
-    val cands = mentions
-      .join(broadcast(Dict.aliases.toDF()), Seq("surface"))
-      .select(col("url"), col("warc_ts"), col("surface"), col("begin"),
-        col("qid"), col("prior").as("score"))
-    Linking.topK(cands, 1)
+    val linked = perPage(spark, pages)((p, ls) => ls.map { case (b, s, q) => (p.url, p.warc_ts, s, b, q) })
+    byUrl(linked.toDF("url", "warc_ts", "surface", "begin", "qid"), urlParts)
   }
 
-  /** Triples from linked mentions:
-    *  - page-aboutness: (data:<url>, schema:about, wd:Q…) — the analogue of
-    *    the reference's schema-level rows (sample_result.txt:25-27);
-    *  - adjacency: consecutive mentions within `maxGap` chars emit
-    *    (wd:Q1, wdt:P1002, wd:Q2) (followed_by, Dict.properties).
-    * Output columns: subj, pred, obj, url, ts.
-    *
-    * Both triple kinds come out of ONE pass over the linked mentions (lead
-    * window + explode of a 2-element struct array) instead of a union of two
-    * recomputed branches — the source is scanned once and, given the
-    * url-partitioning from linkedMentions, no further shuffle occurs here.
+  /** The page-local kernel over a page Dataset, batch or streaming: the
+    * `pageTriples` rows of every page row, in no particular partitioning.
+    */
+  private[graft] def tripleRows(
+      spark: SparkSession, pages: Dataset[Page], maxGap: Int = 30): Dataset[TripleRow] = {
+    import spark.implicits._
+    perPage(spark, pages)((p, ls) => fold(p, ls, maxGap))
+  }
+
+  /** Triples of every page row (`pageTriples`), url-partitioned: columns
+    * subj, pred, obj, url, ts. A url crawled more than once yields each
+    * crawl's triples; `dedupTriples` then keeps each triple's earliest ts.
     */
   def triples(
       spark: SparkSession, pages: Dataset[Page], maxGap: Int = 30,
-      urlParts: Option[Int] = None): DataFrame = {
-    val linked = linkedMentions(spark, pages, urlParts)
-    val w = Window.partitionBy(col("url")).orderBy(col("begin").asc, col("surface").asc)
-    val adjOk =
-      col("next_qid").isNotNull &&
-        col("next_begin") - col("begin") <= maxGap &&
-        col("qid") =!= col("next_qid")
-    linked
-      .withColumn("next_qid", lead(col("qid"), 1).over(w))
-      .withColumn("next_begin", lead(col("begin"), 1).over(w))
-      .select(
-        col("url"),
-        col("warc_ts").as("ts"),
-        explode(array(
-          struct(
-            concat(lit("data:"), col("url")).as("subj"),
-            lit("schema:about").as("pred"),
-            concat(lit("wd:"), col("qid")).as("obj")
-          ),
-          struct(
-            when(adjOk, concat(lit("wd:"), col("qid"))).as("subj"),
-            lit("wdt:" + Dict.properties("followed_by")).as("pred"),
-            when(adjOk, concat(lit("wd:"), col("next_qid"))).as("obj")
-          )
-        )).as("t")
-      )
-      .filter(col("t.subj").isNotNull)
-      .select(col("t.subj").as("subj"), col("t.pred").as("pred"),
-        col("t.obj").as("obj"), col("url"), col("ts"))
-  }
+      urlParts: Option[Int] = None): DataFrame =
+    byUrl(tripleRows(spark, pages, maxGap).toDF(), urlParts)
 
   /** Windowed distinct over (subj, pred, obj, url) with earliest-ts survivor
     * (north_rule A4). Expressed as an aggregate (min over the only non-key
     * column) rather than a row_number window: identical rows out, but the
     * hash aggregate combines map-side, so the shuffle moves one row per key
-    * instead of one per duplicate — the difference between shuffling ~N
-    * mentions and ~N/dup-factor triples at 100 TB. (The general survivor
-    * pick for arbitrary payload columns is Dedup.windowedDistinct.)
+    * instead of one per duplicate. On `triples`' url partitioning it adds no
+    * exchange. (The general survivor pick for arbitrary payload columns is
+    * Dedup.windowedDistinct.)
     */
   def dedupTriples(t: DataFrame): DataFrame =
     t.groupBy(col("subj"), col("pred"), col("obj"), col("url"))
@@ -145,36 +118,36 @@ object KgPipeline {
       ts: java.sql.Timestamp)
 
   /** Best QID per surface under the pipeline's top-1 rule (prior desc, qid
-    * asc) — the page-local equivalent of the broadcast-join + window.
+    * asc).
     */
   def aliasBest: Map[String, String] =
     Dict.aliases.groupBy(_.surface).map { case (s, as) =>
       s -> as.minBy(a => (-a.prior, a.qid)).qid
     }
 
-  /** Page-local form of the whole triple kernel: extraction → scan → top-1
-    * link → aboutness + adjacency → within-page distinct, inside ONE pure
-    * function. Valid because every pipeline triple is a function of its own
-    * page only (the dedup key includes url; the adjacency window partitions
-    * by url), so the distributed plan and this local fold are provably the
-    * same row set (asserted in StreamingSpec against `run`). This is the
-    * streaming-safe form — no window or stateful operator, so it runs
-    * unchanged under Structured Streaming (StreamIngest.streamTriples) —
-    * and the unit of Manifest partition recompute.
+  /** THE triple kernel, on one page: extraction → scan → top-1 link →
+    * aboutness + adjacency → within-page distinct.
+    *  - page-aboutness: (data:<url>, schema:about, wd:Q…) — the analogue of
+    *    the reference's schema-level rows (sample_result.txt:25-27);
+    *  - adjacency: consecutive linked mentions within `maxGap` chars emit
+    *    (wd:Q1, wdt:P1002, wd:Q2) (followed_by, Dict.properties).
+    * Every triple is a function of its own page only, so batch (`triples`),
+    * resume (`runResumable`), landing (`writeTriplesBatch`) and streaming
+    * (StreamIngest.streamTriples) all run this one function, and a
+    * Manifest partition recomputes exactly its own pages.
     */
   def pageTriples(
-      trie: graft.text.AhoCorasick,
+      trie: AhoCorasick,
       best: Map[String, String],
       p: Page,
       maxGap: Int = 30
-  ): Seq[TripleRow] = {
-    val text = HtmlCodec.extract(p.html)
-    val ms = trie.scan(text, wordBounds = true).sortBy(m => (m.begin, m.pattern))
-    val linked = ms.flatMap(m => best.get(m.pattern).map(q => (m.begin, q)))
+  ): Seq[TripleRow] = fold(p, links(trie, best, HtmlCodec.extract(p.html)), maxGap)
+
+  private def fold(p: Page, linked: Seq[(Int, String, String)], maxGap: Int): Seq[TripleRow] = {
     val out = scala.collection.mutable.LinkedHashSet[(String, String, String)]()
-    linked.foreach { case (_, q) => out += (("data:" + p.url, "schema:about", "wd:" + q)) }
+    linked.foreach { case (_, _, q) => out += (("data:" + p.url, "schema:about", "wd:" + q)) }
     linked.sliding(2).foreach {
-      case Seq((b1, q1), (b2, q2)) if b2 - b1 <= maxGap && q1 != q2 =>
+      case Seq((b1, _, q1), (b2, _, q2)) if b2 - b1 <= maxGap && q1 != q2 =>
         out += (("wd:" + q1, "wdt:" + Dict.properties("followed_by"), "wd:" + q2))
       case _ => ()
     }
@@ -220,13 +193,9 @@ object KgPipeline {
   }
 
   /** Resumable form of the full pipeline (north_rule: checkpoint/resume with
-    * per-partition lineage + metrics). Every triple is a function of its own
-    * page only (aboutness + within-page adjacency; dedup key includes url),
-    * so the pipeline is url-partition-local and `Manifest.runStage` resume
-    * semantics apply directly: on restart, only partitions whose input
-    * fingerprint is missing/stale recompute; outputs land with dynamic
-    * partition overwrite; lineage rows carry (rows_in, rows_out, wall_ms).
-    * Returns the number of partitions actually computed this invocation.
+    * per-partition lineage + metrics): the kernel is page-local, so
+    * `Manifest.runStage` recomputes only url partitions whose input lineage
+    * is missing or stale. Returns the number of partitions computed.
     */
   def runResumable(
       spark: SparkSession,
@@ -246,9 +215,8 @@ object KgPipeline {
     * primitive for the KG itself (the q80 pattern applied to the engine's
     * flagship, reference E1 sparql_updates.py:336-462): process ONE page
     * batch alone and land it in its own `batch` partition of the stored
-    * triple layout. Valid because every pipeline triple is a function of its
-    * own page (aboutness + within-page adjacency; the dedup key includes
-    * url) and each url lives in exactly one batch — so per-batch
+    * triple layout. Valid because the kernel is page-local and each url
+    * lives in exactly one batch — so per-batch
     * `dedupTriples` emits exactly the full recompute's rows for that batch's
     * urls, and the MERGED layout is byte-identical to a one-shot run over
     * all pages (q81 gates this on the flagship's own oracle, q40's SQL

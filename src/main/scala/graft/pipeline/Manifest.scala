@@ -12,15 +12,16 @@ import org.apache.spark.sql.types.StructType
   * window per invocation and forgets everything).
   *
   * THE lineage log of the engine: one append-only table of rows
-  * (stage, part_key, input_fingerprint, rows_in, rows_out, wall_ms, status,
-  * run_seq), written by `append` and read by `latestRows` — the newest
-  * run_seq per (stage, part_key) supersedes every earlier row of that key.
+  * (stage, part_key, input_fingerprint, input_sum, rows_in, rows_out,
+  * wall_ms, status, run_seq), written by `append` and read by `latestRows`
+  * — the newest run_seq per (stage, part_key) supersedes every earlier row
+  * of that key.
   * Two kinds of writer share it:
   *  - resumable stages (`runStage`): each stage's output is written
   *    partitioned by `part_key` (pmod(xxhash64(url), nParts)); after the
   *    pending partitions land, one row per partition is appended. Resume =
-  *    compare the input's per-partition lineage (content fingerprint +
-  *    row count) with the latest `ok` rows and recompute only the
+  *    compare the input's per-partition lineage (content fingerprint, sum
+  *    lane, row count) with the latest `ok` rows and recompute only the
   *    missing/stale partitions — idempotent because every stage is a
   *    deterministic function of its input partition + broadcast dims, and
   *    writes are overwrite-by-partition;
@@ -36,7 +37,7 @@ import org.apache.spark.sql.types.StructType
 object Manifest {
 
   val schema: StructType = StructType.fromDDL(
-    "stage STRING, part_key BIGINT, input_fingerprint BIGINT, rows_in BIGINT, " +
+    "stage STRING, part_key BIGINT, input_fingerprint BIGINT, input_sum BIGINT, rows_in BIGINT, " +
       "rows_out BIGINT, wall_ms BIGINT, status STRING, run_seq BIGINT")
 
   val schemaCols: Seq[String] = schema.fieldNames.toSeq
@@ -52,20 +53,27 @@ object Manifest {
     * xxhash64 over `cols` — commutative (stable under any scan order),
     * overflow-free under ANSI mode unlike a sum, composable over disjoint
     * batches, and 0 for no rows. Two identical rows cancel, so a consumer
-    * compares it together with the row count.
+    * compares it together with the row count (and, for stages, the sum
+    * lane of `lineage`).
     */
   def fingerprint(cols: Seq[Column]): Column = coalesce(bit_xor(xxhash64(cols: _*)), lit(0L))
 
   /** Per-partition lineage of a stage input, keyed by part_key: the
     * fingerprint of EVERY column (an edited page under an unchanged url
-    * changes it) and the row count.
+    * changes it), the row count, and `input_sum`: the sum of a non-negative
+    * 31-bit slice of the same per-row hash, which sees the multiset changes
+    * the xor cancels (two identical rows replaced by two other identical
+    * rows) and cannot overflow below 2^32 rows per partition.
     */
-  def lineage(input: DataFrame, urlCol: String, nParts: Int): DataFrame =
+  def lineage(input: DataFrame, urlCol: String, nParts: Int): DataFrame = {
+    val cols = input.columns.toSeq.map(col)
     input
       .groupBy(partKey(col(urlCol), nParts).as("part_key"))
       .agg(
-        fingerprint(input.columns.toSeq.map(col)).as("input_fingerprint"),
+        fingerprint(cols).as("input_fingerprint"),
+        coalesce(sum(pmod(xxhash64(cols: _*), lit(1L << 31))), lit(0L)).as("input_sum"),
         count(lit(1)).as("rows_in"))
+  }
 
   /** THE reader: the latest row per (stage, part_key) of the log at `path`.
     * The log is append-only (recomputes, orphanings and layout re-lands
@@ -73,10 +81,11 @@ object Manifest {
     * authoritative — comparing against every historical row would keep a
     * recomputed partition pending forever. An absent log reads as an empty
     * frame of the shared schema; existence goes through the path's Hadoop
-    * FileSystem, so an object-store log is seen too.
+    * FileSystem, so an object-store log is seen too. The log is read with
+    * the shared schema, so a column an older log lacks reads as null.
     */
   def latestRows(spark: SparkSession, path: String): DataFrame =
-    if (exists(spark, new Path(path))) latest(spark.read.parquet(path))
+    if (exists(spark, new Path(path))) latest(spark.read.schema(schema).parquet(path))
     else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** One stage's latest rows of an already-read log frame. */
@@ -153,7 +162,8 @@ object Manifest {
     * The input's lineage (≤ nParts rows) is aggregated ONCE per call; the
     * orphan set and the pending set both derive from it. A partition is
     * pending when its latest row is missing or not `ok`, or records a
-    * different fingerprint or row count.
+    * different fingerprint, sum lane or row count (a row without a sum lane,
+    * written before the lane existed, recomputes once).
     *
     * Correctness-of-overwrite details (dynamic partition overwrite only
     * rewrites partitions PRESENT in the transform output):
@@ -176,7 +186,7 @@ object Manifest {
       manifestPath: String
   )(transform: DataFrame => DataFrame): Long = {
     import spark.implicits._
-    val lin = lineage(input, urlCol, nParts).as[(Long, Long, Long)].collect()
+    val lin = lineage(input, urlCol, nParts).as[(Long, Long, Long, Long)].collect()
     val runSeq = nextRunSeq()
 
     // ---- orphan reconciliation: on-disk partitions with no input key left
@@ -188,8 +198,10 @@ object Manifest {
     }
 
     val done = latestRows(spark, manifestPath)
-      .filter(col("stage") === stage && col("status") === "ok") // orphaned/failed ⇒ not done
-      .select("part_key", "input_fingerprint", "rows_in").as[(Long, Long, Long)].collect().toSet
+      // orphaned/failed ⇒ not done; no sum lane ⇒ written before it existed
+      .filter(col("stage") === stage && col("status") === "ok" && col("input_sum").isNotNull)
+      .select("part_key", "input_fingerprint", "input_sum", "rows_in")
+      .as[(Long, Long, Long, Long)].collect().toSet
     val pending = lin.filterNot(done)
     if (pending.isEmpty) return 0L
 
@@ -220,8 +232,8 @@ object Manifest {
 
     val wallMs = (System.nanoTime() - t0) / 1000000
     append(manifestPath, stage, "ok", runSeq,
-      pending.toSeq.map { case (k, fp, n) => (k, fp, n, rowsOut.getOrElse(k, 0L), wallMs) }
-        .toDF("part_key", "input_fingerprint", "rows_in", "rows_out", "wall_ms"))
+      pending.toSeq.map { case (k, fp, sm, n) => (k, fp, sm, n, rowsOut.getOrElse(k, 0L), wallMs) }
+        .toDF("part_key", "input_fingerprint", "input_sum", "rows_in", "rows_out", "wall_ms"))
     keyLit.size.toLong
   }
 }

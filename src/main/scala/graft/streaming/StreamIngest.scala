@@ -43,26 +43,20 @@ object StreamIngest {
       )
 
   /** Streaming form of the KG-construction pipeline: a file-source stream of
-    * page rows → the page-local triple kernel (KgPipeline.pageTriples:
-    * extraction → scan → link → aboutness+adjacency → within-page distinct)
-    * → append sink. Every triple is a function of its own page, so the
-    * streaming plan needs NO window or stateful operator — batch and stream
-    * produce identical row sets (StreamingSpec asserts equality against
-    * KgPipeline.run), and a crashed drain resumes from checkpointed offsets
-    * with no duplicate or lost pages.
+    * page rows → the page-local triple kernel the batch pipeline runs
+    * (KgPipeline.tripleRows) → append sink. Every triple is a function of
+    * its own page, so the streaming plan needs NO window or stateful
+    * operator — batch and stream produce identical row sets (StreamingSpec
+    * asserts equality against KgPipeline.run), and a crashed drain resumes
+    * from checkpointed offsets with no duplicate or lost pages.
     */
   def streamTriples(spark: SparkSession, pagesDir: String): DataFrame = {
     import spark.implicits._
     import graft.model.Page
-    import graft.pipeline.KgPipeline
-    val trie = spark.sparkContext.broadcast(graft.text.AhoCorasick.build(graft.model.Dict.surfaces))
-    val best = spark.sparkContext.broadcast(KgPipeline.aliasBest)
-    spark.readStream
+    graft.pipeline.KgPipeline.tripleRows(spark, spark.readStream
       .schema("url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING")
       .parquet(pagesDir)
-      .as[Page]
-      .flatMap(p => KgPipeline.pageTriples(trie.value, best.value, p))
-      .toDF()
+      .as[Page]).toDF()
   }
 
   /** Streaming KG LANDING — the ingest loop a production KG actually runs,

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 
 /** Physical-plan regression guards: the scale properties argued in README
-  * ("one mention shuffle", broadcast joins, pruned scans) asserted against
+  * ("one url shuffle", broadcast joins, pruned scans) asserted against
   * the actual planner output, so a refactor that silently adds an exchange
   * or widens a scan fails CI.
   */
@@ -26,10 +26,12 @@ class PlanSpec extends SparkSpec {
   private def countBroadcasts(df: DataFrame): Int =
     initialPlan(df).collect { case e: BroadcastExchangeLike => e }.size
 
-  test("flagship pipeline: exactly 2 shuffles (page balance + mention repartition), 1 broadcast, no more") {
+  test("flagship pipeline: exactly 2 shuffles (page balance + triple repartition), no broadcast, no window") {
     val df = pipeline.KgPipeline.run(spark, sfDir, numPartitions = 4)
     assert(countShuffles(df) == 2, initialPlan(df).toString)
-    assert(countBroadcasts(df) == 1, initialPlan(df).toString)
+    assert(countBroadcasts(df) == 0, initialPlan(df).toString)
+    assert(initialPlan(df).collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty,
+      initialPlan(df).toString)
   }
 
   test("dedupTriples adds no exchange on url-partitioned input (map-side combining aggregate)") {
