@@ -7,7 +7,8 @@ import graft.model.Dict
 import graft.sources.Tables
 import graft.functions.{SparqlColumns, TextAnalysis, Sketches}
 import graft.operators._
-import graft.pipeline.KgPipeline
+import graft.pipeline.{KgPipeline, Manifest}
+import org.apache.hadoop.fs.Path
 
 /** Every operator from SURVEY.md §2 (plus the training-data additions) as a
   * named query over /root/testdata tables, each paired with DuckDB-equivalent
@@ -854,23 +855,6 @@ object Queries {
 
   val q26Sql: String = jaccardPairsSql(0.6)
 
-  /** SimHash near-dup pairs, fnv1a production form (spec-gated:
-    * planted-dup recall + Hamming bound; fnv1a is a per-char loop no DuckDB
-    * scalar expresses).
-    */
-  def q27SimHashPairs(s: SparkSession, dir: String): DataFrame = {
-    // sketch once: both sides of the chunk-band self-join reference this
-    // table; materializedOnce so neither re-runs the sketch map
-    val hashes = materializedOnce(
-      Dedup.simHashes(s, t(s, dir, "documents"), "doc_id", "text"))
-    Dedup.simHashPairs(s, hashes, maxHamming = 3).select(col("id1"), col("id2"), col("hamming"))
-  }
-
-  /** SimHash, ORACLE-GATED: per-word hash = first 12 hex chars of md5(word)
-    * (Sketches.simHash48), so sketch construction (majority vote), the
-    * 4×12-bit banding, and the exact Hamming verify are all reproducible in
-    * DuckDB — closing the last rows-only query. Same plan shape as q27.
-    */
   /** The md5-family 48-bit sketch table — shared by q27 and q91. `pred`
     * filters the DOCUMENTS before the sketch map: a filter placed after
     * the typed map cannot push through it, so a batch-restricted sketch
@@ -891,6 +875,11 @@ object Queries {
       .toDF("id", "simhash")
   }
 
+  /** SimHash near-dup pairs, ORACLE-GATED: per-word hash = first 12 hex
+    * chars of md5(word) (Sketches.simHash48), so sketch construction
+    * (majority vote), the 4×12-bit banding and the exact Hamming verify are
+    * all reproducible in DuckDB.
+    */
   def q27SimHashGate(s: SparkSession, dir: String): DataFrame = {
     // sketch once (the md5 vote is the dominant CPU; the self-join
     // references the table twice) — materializedOnce, per-invocation only
@@ -1596,59 +1585,36 @@ object Queries {
   // embeddings table (cell-partitioned / int8-quantized / PQ codes) — the
   // write-once-query-many shape a 100 TB vector corpus actually ships. The
   // layouts are deterministic functions of the source table, built on first
-  // use under tmpdir (repo and testdata are read-only contracts), keyed by a
-  // fingerprint of the source files so a regenerated testdata set can never
-  // serve a stale layout.
+  // use in this JVM's layout root (repo and testdata are read-only contracts
+  // within one process) and removed with it at exit, so a layout is only
+  // ever served to the code that built it.
 
-  /** Bump whenever any layout-generating formula changes (gate centroids,
-    * integer planes, PQ codebooks, the int8 quantizer, partition naming):
-    * the version participates in the cache key, so a formula edit can never
-    * be served a layout built by the previous formula.
+  /** This JVM's layout root: a fresh directory under `java.io.tmpdir`,
+    * created on first use and marked delete-on-exit on its Hadoop
+    * `FileSystem` (removed when the FileSystem cache closes at JVM exit).
     */
-  // v4: every parametric layout (ivf cells, lsh buckets, pq codes, ivfpq,
-  // band keys) now records its parameters in _meta, validated on every
-  // probe/append — earlier cached layouts lack the record and must rebuild
-  // v5: the int8 layout records its quantizer scale in _meta, LSH buckets
-  // are Int partition keys, and every ANN layout is split-built
-  // v6: the MinHash signature layout records num_hashes/shingle_n in _meta
-  // v7: layout lineage rows are Manifest log rows (the per-key overwrite
-  // dirs are gone), and the resume fingerprint covers every input column
-  // v9: the kg layouts are built by the page-local triple kernel (v8 is
-  // skipped: uncommitted builds used it, and their layouts may still sit
-  // in java.io.tmpdir)
-  private val LayoutVersion = "v9"
+  private lazy val layoutRoot: String = {
+    val root = new Path(sys.props("java.io.tmpdir"), s"graft_layouts_${java.util.UUID.randomUUID}")
+    val fs = Manifest.fs(SparkSession.active, root)
+    require(fs.mkdirs(root) && fs.deleteOnExit(root), s"cannot create layout root $root")
+    root.toString
+  }
 
   /** `kind` must encode every layout PARAMETER (cell/plane/codebook counts)
     * — e.g. "ivfcells_c16" — so a parameter change misses the cache instead
     * of probing a layout partitioned under different constants.
     */
-  private[graft] def layoutPath(kind: String, dir: String, srcTable: String = "embeddings"): String = {
-    val src = new java.io.File(s"$dir/$srcTable.parquet")
-    // stamp = name + length + MTIME per file: a regenerated source whose
-    // files happen to keep their byte sizes still changes mtime, so it can
-    // never be served the previous generation's layout
-    def stampOf(f: java.io.File) = s"${f.getName}:${f.length}:${f.lastModified}"
-    val stamp =
-      if (src.isDirectory) src.listFiles().map(stampOf).sorted.mkString(",")
-      else stampOf(src)
-    val tag = java.lang.Long.toHexString(
-      Sketches.fnv1a(dir + "|" + srcTable + "|" + stamp + "|" + LayoutVersion))
-    s"${sys.props("java.io.tmpdir")}/graft_layout_${kind}_$tag"
-  }
+  private[graft] def layoutPath(kind: String, dir: String, srcTable: String = "embeddings"): String =
+    s"$layoutRoot/${kind}_${java.lang.Long.toHexString(Sketches.fnv1a(dir + "|" + srcTable))}"
 
-  /** Build-once gate on an explicit completion marker (not parquet's
-    * _SUCCESS): layout builds are now MULTI-step (base write + incremental
-    * append, each a parquet job with its own _SUCCESS), so only a marker
-    * written after the LAST step can guarantee a half-built layout is
-    * rebuilt rather than served.
+  /** Layout paths built in this JVM. A build that throws adds no entry, so
+    * the next call redoes it from scratch (every build's first step
+    * overwrites its target): a half-built layout is never served.
     */
+  private val builtLayouts = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   private def ensureLayout(path: String)(build: => Unit): String = {
-    val marker = new java.io.File(path, "_GRAFT_COMPLETE")
-    if (!marker.exists()) {
-      build
-      marker.getParentFile.mkdirs()
-      marker.createNewFile()
-    }
+    if (!builtLayouts.contains(path)) { build; builtLayouts.add(path) }
     path
   }
 
@@ -2963,9 +2929,6 @@ object Queries {
        |ORDER BY scaled_dot DESC, e.vec_id LIMIT 20""".stripMargin
   }
 
-  /** Empty since round 3: every query is oracle-gated. The fnv1a simhash
-    * production form (q27SimHashPairs) remains spec-gated alongside its
-    * gate variant.
-    */
+  /** Empty since round 3: every query is oracle-gated. */
   val rowsOnly: Map[String, (SparkSession, String) => DataFrame] = Map.empty
 }

@@ -76,7 +76,7 @@ object TextAnalysis {
 
   /** Column-level langid: score = number of marker hits per language, argmax
     * with 'en' fallback. Expressed as a when-chain over greatest() so it
-    * stays codegen'd; mirrors langIdScala below.
+    * stays codegen'd.
     */
   def langId(text: Column): Column = {
     val padded = concat(lit(" "), lower(text), lit(" "))
@@ -93,18 +93,6 @@ object TextAnalysis {
     }
   }
 
-  /** Pure-Scala mirror of langId for typed-map stages and unit tests. */
-  def langIdScala(text: String): String = {
-    val padded = " " + text.toLowerCase + " "
-    val langs = Seq("en", "de", "fr", "es", "zh")
-    val scores = langs.map(l => l -> stopwords(l).count(padded.contains))
-    val best = scores.map(_._2).max
-    if (best == 0) "und" else scores.find(_._2 == best).get._1
-  }
-
-  /** Rolling polynomial hash (base 31, mod 2^61-1) of the normalized text —
-    * deterministic doc fingerprint usable for shingling.
-    */
   /** PII scrubbing for training text: emails → [EMAIL], North-American-style
     * phone numbers → [PHONE]. Pure `regexp_replace` chain (codegen'd, no
     * UDF); patterns stay inside the Java-regex ∩ RE2 common subset so the

@@ -133,7 +133,11 @@ object Manifest {
   private[graft] def nextRunSeq(): Long =
     (System.currentTimeMillis() << 20) | (jvmNonce << 10) | (seqCounter.incrementAndGet() & 0x3ffL)
 
-  private def fs(spark: SparkSession, path: Path) =
+  /** The Hadoop `FileSystem` of `path` — the one way engine code touches
+    * lineage logs and stored layouts, so a `file:` URI or an object-store
+    * path works wherever a local path does.
+    */
+  private[graft] def fs(spark: SparkSession, path: Path) =
     path.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def exists(spark: SparkSession, path: Path): Boolean = fs(spark, path).exists(path)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.commons.io.FileUtils
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Page
@@ -132,35 +132,39 @@ object Tables {
     * scans the layout exists to prune. Compact rewrites the layout's DATA
     * with ~one file per partition (repartition on the partition column
     * before the partitioned write) and carries EVERY `_`-sidecar over
-    * byte-for-byte — the parameter record, the completion marker, AND the
-    * lineage log UNCHANGED: the log is batch-sized (tiny) and its rows are
-    * load-bearing — an idempotency-keyed row must stay individually
-    * supersedable by a later re-land, which collapsing the log into an
-    * aggregated row would break. The coverage audit therefore holds before
-    * and after trivially, and probes prune exactly as before
-    * (spec-asserted).
+    * byte-for-byte — the parameter record AND the lineage log UNCHANGED:
+    * the log is batch-sized (tiny) and its rows are load-bearing — an
+    * idempotency-keyed row must stay individually supersedable by a later
+    * re-land, which collapsing the log into an aggregated row would break.
+    * The coverage audit therefore holds before and after trivially, and
+    * probes prune exactly as before (spec-asserted). Whether a layout is
+    * built is not stored in it (the oracle queries keep a per-JVM
+    * build-once set), so compaction never touches that state.
     *
-    * Swap discipline on local parquet: write to `<path>.compacting`, then
-    * two ATOMIC directory renames (old → `.pre_compact`, new → path) and a
-    * trash delete. A crash between the renames leaves path absent with the
-    * old layout complete at `.pre_compact` — the next invocation RESTORES
-    * it before touching anything, so re-running after any crash converges
-    * and never deletes the sole surviving copy. On Iceberg this whole
-    * operation is `rewrite_data_files` + snapshot expiry, one
-    * transactional call; the call-site shape is unchanged.
+    * Swap discipline, through the path's Hadoop `FileSystem` (a local path
+    * or a `file:` URI alike): write to `<path>.compacting`, then two
+    * directory renames (old → `.pre_compact`, new → path) and a trash
+    * delete. A crash between the renames leaves path absent with the old
+    * layout complete at `.pre_compact` — the next invocation RESTORES it
+    * before touching anything, so re-running after any crash converges and
+    * never deletes the sole surviving copy. On Iceberg this whole operation
+    * is `rewrite_data_files` + snapshot expiry, one transactional call; the
+    * call-site shape is unchanged.
     */
   def compactLayout(spark: SparkSession, path: String, partCol: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = path + ".compacting"
-    val trash = path + ".pre_compact"
+    val live = new Path(path)
+    val tmp = new Path(path + ".compacting")
+    val trash = new Path(path + ".pre_compact")
+    val fs = Manifest.fs(spark, live)
+    def rename(from: Path, to: Path): Unit = require(fs.rename(from, to), s"cannot rename $from to $to")
     // crash recovery FIRST: a previous compaction that died between the two
     // renames left path absent and the old layout at .pre_compact — restore
     // it and redo from scratch. Only then is clearing the work dirs safe
     // (they are never the sole surviving copy).
-    if (!Files.exists(Paths.get(path)) && Files.exists(Paths.get(trash)))
-      Files.move(Paths.get(trash), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
-    require(Files.exists(Paths.get(path)), s"no layout at $path to compact")
-    deleteRecursively(tmp); deleteRecursively(trash)
+    if (!fs.exists(live) && fs.exists(trash)) rename(trash, live)
+    require(fs.exists(live), s"no layout at $path to compact")
+    fs.delete(tmp, true); fs.delete(trash, true)
+    val entries = fs.listStatus(live).toSeq
     // the partition column is a PROPERTY of the layout — validate the
     // caller's claim against the on-disk partition dirs: a rewrite
     // partitioned by the wrong column would pass every data/audit check
@@ -169,9 +173,9 @@ object Tables {
     // DIRECTORIES only (a stray file with '=' in its name must not corrupt
     // the inference), and an empty partition-dir set gets its own message
     // rather than a misleading "partitioned by []" mismatch
-    val dirCols = listNames(path)
-      .filter(n => n.contains("=") && new java.io.File(path, n).isDirectory)
-      .map(_.split("=")(0)).toSet
+    val dirCols = entries
+      .filter(e => e.isDirectory && e.getPath.getName.contains("="))
+      .map(_.getPath.getName.split("=")(0)).toSet
     require(dirCols.nonEmpty,
       s"no partition directories at $path - nothing to compact " +
         "(empty or unpartitioned layout)")
@@ -179,25 +183,21 @@ object Tables {
       s"layout at $path is partitioned by [${dirCols.mkString(",")}] but compaction " +
         s"was asked to partition by $partCol")
     val data = spark.read.parquet(path).repartition(col(partCol))
-    format.write(data, tmp, Some(partCol))
+    format.write(data, tmp.toString, Some(partCol))
     // carry every `_` sidecar byte-for-byte: _meta keeps parameter
-    // validation alive, _GRAFT_COMPLETE keeps build-once gates satisfied,
-    // _lineage keeps the audit AND per-key supersedability intact
-    listNames(path).filter(n => n.startsWith("_") && n != "_SUCCESS").foreach(n =>
-      FileUtils.copyToDirectory(new java.io.File(path, n), new java.io.File(tmp)))
-    Files.move(Paths.get(path), Paths.get(trash), StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursively(trash)
+    // validation alive, _lineage keeps the audit AND per-key
+    // supersedability intact
+    entries.map(_.getPath).filter(p => p.getName.startsWith("_") && p.getName != "_SUCCESS")
+      .foreach(p => FileUtil.copy(fs, p, fs, new Path(tmp, p.getName), false,
+        spark.sparkContext.hadoopConfiguration))
+    rename(live, trash)
+    rename(tmp, live)
+    fs.delete(trash, true)
     // the path's identity is unchanged but its contents were rewritten:
     // drop memoized meta validations so the next probe re-reads the
     // (carried-over) record rather than trusting pre-compact state
     validatedMeta.removeIf(_.startsWith(path + "|"))
   }
-
-  /** Top-level entry names of a local directory. */
-  private def listNames(dir: String): Seq[String] = new java.io.File(dir).list().toSeq
-
-  private def deleteRecursively(p: String): Unit = FileUtils.deleteDirectory(new java.io.File(p))
 
   /** A stored layout as its lifecycle sees it: the integer parameters its
     * rows bake in, recorded under `<path>/_meta`, and its partition column,
@@ -259,8 +259,9 @@ object Tables {
     * Sound because (a) a MISMATCHED query never enters the memo — wrong
     * parameters always re-check and throw; (b) a same-JVM rebuild-in-place
     * goes through `writeLayout`, which drops the path's memo entries;
-    * and (c) cross-JVM rebuilds are excluded by the engine's convention
-    * that layout paths are content-stamped and rebuilt under a NEW tag.
+    * and (c) no layout is rebuilt by another JVM under this JVM's feet:
+    * the oracle queries' layouts live under a root that only the JVM
+    * which created it builds in, and it is deleted when that JVM exits.
     */
   private val validatedMeta =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()

@@ -334,13 +334,10 @@ object DiffHtml {
     sb.toString
   }
 
-  private def tdWithClass(row: Elem, cls: String): Option[Elem] =
-    row.find(e => e.name == "td" && e.hasClass(cls))
-
   /** Everything the per-row walk needs from one pre-order pass (same
     * document order as findAll/find, which visit a node before descending):
     * the row loop previously re-traversed each row's subtree ~6 times
-    * (three tdWithClass probes, the row-wide first <a>, the del/ins
+    * (three td-by-class probes, the row-wide first <a>, the del/ins
     * diffchange finds, the per-class td lists) — per-row traversal was the
     * walk's largest remaining cost after the hasClass/regex fixes.
     */

@@ -304,6 +304,33 @@ class PlanSpec extends SparkSpec {
       s"no file pruning: pruned=$filesPruned all=$filesAll")
   }
 
+  test("layout cache: a complete-looking layout dir this JVM did not build is never served") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.{col, transform}
+    val d = tempDir("graft_foreign_layout")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/embeddings.parquet"),
+      java.nio.file.Paths.get(s"$d/embeddings.parquet"))
+    // plant, at the path q61 reads, a layout with a valid ivf c16 _meta, a
+    // completion marker and lineage, holding the NEGATED vectors
+    val wrong = Tables.read(spark, d, "embeddings")
+      .withColumn("embedding", transform(col("embedding"), x => -x))
+    val p = Queries.layoutPath("ivfcells_c16", d)
+    operators.Ann.writeLayout(spark, operators.Ann.ivf(nCells = 16, nProbe = 4), wrong,
+      "vec_id", "embedding", p)
+    val marker = new Path(p, "_GRAFT_COMPLETE")
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration).create(marker).close()
+
+    val want = Queries.q47AnnIvfGate(spark, d).collect().toSeq
+    assert(Queries.q61AnnIvfPart(spark, d).collect().toSeq == want)
+    def lineage = Tables.readLayoutLineage(spark, p).select("stage", "run_seq")
+      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
+    val built = lineage
+    assert(built.map(_._1) == Seq("append", "build"), built)
+    // a second call serves the layout this JVM built, without rebuilding it
+    assert(Queries.q61AnnIvfPart(spark, d).collect().toSeq == want)
+    assert(lineage == built)
+  }
+
   test("q67: the curation flagship reads the corpus exactly ONCE (fused metrics + window survivor)") {
     val df = Queries.q67CurateCorpus(spark, sfDir)
     val scans = initialPlan(df).collect {
@@ -321,7 +348,7 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     import operators.Ann
-    val tmp = java.nio.file.Files.createTempDirectory("graft_layout_append").toFile.toString
+    val tmp = tempDir("graft_layout_append")
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
     // stored rows with binary columns compared by value

@@ -10,9 +10,20 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** A fresh directory for one test's files, under this test JVM's root. */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(SparkSpec.tempRoot, prefix).toString
 }
 
 object SparkSpec {
+  /** One temp root per test JVM, removed with everything under it at exit. */
+  private lazy val tempRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_spec")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    root
+  }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -475,7 +475,7 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_int8_spec").toString
+    val tmp = tempDir("graft_int8_spec")
     Ann.writeLayout(spark, Ann.int8, emb, "vec_id", "embedding", s"$tmp/int8")
     // float comparison table with the SAME columns-minus-quantization, so the
     // size ratio isolates the quantized column (the source table carries an
@@ -498,7 +498,7 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ivf_spec").toString
+    val tmp = tempDir("graft_ivf_spec")
     val ivf = Ann.ivf(nCells = 16, nProbe = 4)
     Ann.writeLayout(spark, ivf, emb, "vec_id", "embedding", s"$tmp/cells")
     val part = probe(ivf, s"$tmp/cells", qv, 20).collect().map(_.toSeq).toSeq
@@ -510,7 +510,7 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_lsh_spec").toString
+    val tmp = tempDir("graft_lsh_spec")
     val lsh = Ann.lsh(nPlanes = 5)
     Ann.writeLayout(spark, lsh, emb, "vec_id", "embedding", s"$tmp/buckets")
     val part = probe(lsh, s"$tmp/buckets", qv, 20).collect().map(_.toSeq).toSeq
@@ -533,52 +533,55 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("compactLayout: fewer files, identical rows, pruning/meta/audit all preserved") {
-    import spark.implicits._
     import org.apache.spark.sql.functions.input_file_name
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toFile.toString
-    val bandPath = s"$tmp/bands"
     val docs = Tables.read(spark, sfDir, "documents")
     val sigs = Dedup.minHashSignatures(spark, docs, "doc_id", "text")
-    // a base build + three daily appends: every bucket dir accumulates
-    // per-batch small files — the state compaction exists to fix
-    Dedup.writeBandLayout(spark, sigs.filter(col("id") % 4 === 0), bandPath)
-    (1 to 3).foreach(i =>
-      Dedup.appendBandLayout(spark, sigs.filter(col("id") % 4 === i), bandPath))
-    def rows = spark.read.parquet(bandPath)
-      .select("id", "band", "bkey", "bucket").collect().map(_.toSeq).toSet
-    def files = spark.read.parquet(bandPath)
-      .select(input_file_name()).distinct().count()
-    val rowsBefore = rows
-    val filesBefore = files
-    assert(Tables.auditLayoutLineage(spark, bandPath, sigs, "id"))
+    // the same lifecycle at a plain local path and at its `file:` URI (the
+    // layout path form a Hadoop FileSystem resolves but java.io cannot)
+    Seq[String => String](identity, "file://" + _).foreach { form =>
+      val local = s"${tempDir("graft_compact")}/bands"
+      val bandPath = form(local)
+      // a base build + three daily appends: every bucket dir accumulates
+      // per-batch small files — the state compaction exists to fix
+      Dedup.writeBandLayout(spark, sigs.filter(col("id") % 4 === 0), bandPath)
+      (1 to 3).foreach(i =>
+        Dedup.appendBandLayout(spark, sigs.filter(col("id") % 4 === i), bandPath))
+      def rows = spark.read.parquet(bandPath)
+        .select("id", "band", "bkey", "bucket").collect().map(_.toSeq).toSet
+      def files = spark.read.parquet(bandPath)
+        .select(input_file_name()).distinct().count()
+      val rowsBefore = rows
+      val filesBefore = files
+      assert(Tables.auditLayoutLineage(spark, bandPath, sigs, "id"))
 
-    Tables.compactLayout(spark, bandPath, "bucket")
+      Tables.compactLayout(spark, bandPath, "bucket")
 
-    assert(rows == rowsBefore, "compaction changed the data")
-    assert(files < filesBefore, s"no file reduction: ${files} !< $filesBefore")
-    // the single compact lineage row still vouches for the full source
-    assert(Tables.auditLayoutLineage(spark, bandPath, sigs, "id"))
-    // _meta survived AND the pruned path still equals the unpruned one
-    val newSigs = sigs.filter(col("id") % 4 === 3)
-    val pruned = pairSet(Dedup.minHashCandidatesStoredPruned(
-      spark, bandPath, sigs, newSigs, minEstJaccard = 0.7))
-    val unpruned = pairSet(Dedup.minHashCandidatesIncremental(
-      spark, sigs, newSigs, minEstJaccard = 0.7))
-    assert(pruned == unpruned, s"pruned=$pruned unpruned=$unpruned")
+      assert(rows == rowsBefore, s"compaction changed the data at $bandPath")
+      assert(files < filesBefore, s"no file reduction at $bandPath: ${files} !< $filesBefore")
+      // the single compact lineage row still vouches for the full source
+      assert(Tables.auditLayoutLineage(spark, bandPath, sigs, "id"))
+      // _meta survived AND the pruned path still equals the unpruned one
+      val newSigs = sigs.filter(col("id") % 4 === 3)
+      val pruned = pairSet(Dedup.minHashCandidatesStoredPruned(
+        spark, bandPath, sigs, newSigs, minEstJaccard = 0.7))
+      val unpruned = pairSet(Dedup.minHashCandidatesIncremental(
+        spark, sigs, newSigs, minEstJaccard = 0.7))
+      assert(pruned == unpruned, s"pruned=$pruned unpruned=$unpruned")
 
-    // crash recovery: simulate dying between the two swap renames (path
-    // absent, old layout stranded at .pre_compact) — the next invocation
-    // must RESTORE and converge, not delete the sole surviving copy
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(bandPath), java.nio.file.Paths.get(bandPath + ".pre_compact"))
-    Tables.compactLayout(spark, bandPath, "bucket")
-    assert(rows == rowsBefore, "crash-recovery compaction lost or changed data")
-    assert(Tables.auditLayoutLineage(spark, bandPath, sigs, "id"))
-    // a wrong partition column must error, never rewrite
-    val e = intercept[IllegalArgumentException] {
-      Tables.compactLayout(spark, bandPath, "band")
+      // crash recovery: simulate dying between the two swap renames (path
+      // absent, old layout stranded at .pre_compact) — the next invocation
+      // must RESTORE and converge, not delete the sole surviving copy
+      java.nio.file.Files.move(
+        java.nio.file.Paths.get(local), java.nio.file.Paths.get(local + ".pre_compact"))
+      Tables.compactLayout(spark, bandPath, "bucket")
+      assert(rows == rowsBefore, s"crash-recovery compaction lost or changed data at $bandPath")
+      assert(Tables.auditLayoutLineage(spark, bandPath, sigs, "id"))
+      // a wrong partition column must error, never rewrite
+      val e = intercept[IllegalArgumentException] {
+        Tables.compactLayout(spark, bandPath, "band")
+      }
+      assert(e.getMessage.contains("partitioned by"), e.getMessage)
     }
-    assert(e.getMessage.contains("partitioned by"), e.getMessage)
   }
 
   test("simhash incremental: union(old pairs, new-batch increment) == full corpus pairs") {
@@ -601,7 +604,7 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_meta_guard").toString
+    val tmp = tempDir("graft_meta_guard")
     // every layout kind: (written layout, a reader with mismatched constants,
     // the parameter the error must name). A 32-cell probe of a 16-cell
     // layout ranks cells against the wrong centroid family, an ADC table
@@ -677,7 +680,7 @@ class OperatorsSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])].collect().sortBy(_._1)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_mivf_spec").toString
+    val tmp = tempDir("graft_mivf_spec")
     val ivf = Ann.ivf(nCells = 16, nProbe = 4)
     Ann.writeLayout(spark, ivf, emb, "vec_id", "embedding", s"$tmp/cells")
     val batched = Ann.multiQueryTopK(
@@ -695,7 +698,7 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     val emb = Tables.read(spark, sfDir, "embeddings")
     val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Array[Float]].head()
-    val tmp = java.nio.file.Files.createTempDirectory("graft_pq_spec").toString
+    val tmp = tempDir("graft_pq_spec")
     Ann.writeLayout(spark, Ann.pq(m = 8, kw = 16), emb, "vec_id", "embedding", s"$tmp/codes")
     val stored = probe(Ann.pq(m = 8, kw = 16), s"$tmp/codes", qv, 20)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -864,7 +867,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("signature layout append: incremental candidates find cross-batch pairs; old ∪ incremental == full") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_sig_layout").toFile.toString + "/sigs"
+    val path = tempDir("graft_sig_layout") + "/sigs"
     val docs = Tables.read(spark, sfDir, "documents")
     val batchA = docs.filter(col("doc_id") % 2 === 0)
     val batchB = docs.filter(col("doc_id") % 2 =!= 0)
@@ -892,7 +895,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("lineage audit: xor fingerprints compose across disjoint batches; a dropped batch is detected") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_lin_audit").toFile.toString + "/sigs"
+    val path = tempDir("graft_lin_audit") + "/sigs"
     val docs = Tables.read(spark, sfDir, "documents")
     Dedup.writeSignatureLayout(spark, docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", path)
     // audit should FAIL while a batch is missing...
@@ -943,7 +946,7 @@ class OperatorsSpec extends SparkSpec {
   test("banded-key layout: pruned incremental candidates equal the unpruned path; small append prunes files") {
     import spark.implicits._
     import org.apache.spark.sql.functions.input_file_name
-    val tmp = java.nio.file.Files.createTempDirectory("graft_band_layout").toFile.toString
+    val tmp = tempDir("graft_band_layout")
     val bandPath = s"$tmp/bands"
     val docs = Tables.read(spark, sfDir, "documents")
     // "corpus" = everything but three docs; "append" = those three (33 and

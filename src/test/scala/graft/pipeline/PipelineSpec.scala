@@ -98,7 +98,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("materializeGraph: bucket-partitioned nodes/edges round-trip; degrees consistent") {
-    val tmp = Files.createTempDirectory("graft-graph").toString
+    val tmp = tempDir("graft-graph")
     val triples = KgPipeline.run(spark, sfDir, numPartitions = 4)
     KgPipeline.materializeGraph(triples, tmp, buckets = 8)
     // physical layout: hash-bucket partition dirs on both tables
@@ -123,7 +123,7 @@ class PipelineSpec extends SparkSpec {
 
   test("runResumable: full-pipeline resume — recompute only stale partitions, output equals direct run") {
     import org.apache.spark.sql.functions.col
-    val tmp = Files.createTempDirectory("graft-resume").toString
+    val tmp = tempDir("graft-resume")
     val n1 = KgPipeline.runResumable(spark, sfDir, s"$tmp/triples", s"$tmp/manifest", nParts = 8)
     assert(n1 == 8)
     val n2 = KgPipeline.runResumable(spark, sfDir, s"$tmp/triples", s"$tmp/manifest", nParts = 8)
@@ -166,7 +166,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("manifest: stage resumes — second run computes zero partitions, changed input invalidates") {
-    val tmp = Files.createTempDirectory("graft-manifest").toString
+    val tmp = tempDir("graft-manifest")
     val input = Tables.pages(spark, sfDir).toDF()
       .select(col("url"), col("text"), col("lang"))
     val stageFn: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -219,7 +219,7 @@ class PipelineSpec extends SparkSpec {
 
   test("manifest: two identical rows replaced by two other identical rows recompute their partition") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-manifest-multiset").toString
+    val tmp = tempDir("graft-manifest-multiset")
     val id: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = df => df
     def run(input: org.apache.spark.sql.DataFrame, manifest: String) =
       Manifest.runStage(spark, input, "url", 4, "s", s"$tmp/out", manifest)(id)
@@ -245,7 +245,7 @@ class PipelineSpec extends SparkSpec {
 
   test("manifest: empty recompute clears stale partition files; vanished keys are orphaned") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-manifest2").toString
+    val tmp = tempDir("graft-manifest2")
     def mkInput(urls: Seq[String]) = urls.toDF("url").withColumn("payload", length(col("url")))
     val urls = (0 until 64).map(i => s"https://example.org/u/$i")
     val id: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = df => df
@@ -284,7 +284,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("incremental KG landing: day-2 leaves day-1 files byte-untouched; merged equals one-shot; lineage audits; day re-run idempotent") {
-    val tmp = Files.createTempDirectory("graft-kg-incr").toString
+    val tmp = tempDir("graft-kg-incr")
     val p = s"$tmp/triples"
     val pagesA = Tables.pagesWhere(spark, sfDir, col("doc_id") % 2 === 0)
     val pagesB = Tables.pagesWhere(spark, sfDir, col("doc_id") % 2 === 1)
@@ -327,7 +327,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("compaction of a keyed-lineage layout: audit survives, and a later batch RE-LAND still supersedes cleanly") {
-    val tmp = Files.createTempDirectory("graft-kg-compact").toString
+    val tmp = tempDir("graft-kg-compact")
     val p = s"$tmp/triples"
     val pagesA = Tables.pagesWhere(spark, sfDir, col("doc_id") % 2 === 0)
     val pagesB = Tables.pagesWhere(spark, sfDir, col("doc_id") % 2 =!= 0)

@@ -3,12 +3,11 @@ package graft.streaming
 import graft.SparkSpec
 import graft.operators.Ann
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 
 class StreamingSpec extends SparkSpec {
 
   test("AvailableNow drain: windowed counts land in the sink and match batch") {
-    val tmp = Files.createTempDirectory("graft-stream").toString
+    val tmp = tempDir("graft-stream")
     val srcDir = s"$tmp/src"
     new java.io.File(srcDir).mkdirs()
     // stage the events parquet as the stream source dir
@@ -33,7 +32,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream interval join: full drain equals the batch interval join row for row") {
-    val tmp = Files.createTempDirectory("graft-ssjoin").toString
+    val tmp = tempDir("graft-ssjoin")
     val srcDir = s"$tmp/src"
     new java.io.File(srcDir).mkdirs()
     spark.read.parquet(s"$sfDir/events.parquet").write.mode("overwrite").parquet(srcDir)
@@ -50,7 +49,7 @@ class StreamingSpec extends SparkSpec {
 
   test("ANN serving drain: streamed top-k equals the batched IVF probe; re-drain appends nothing") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-annserve").toString
+    val tmp = tempDir("graft-annserve")
     val layout = s"$tmp/ivf"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     Ann.writeLayout(spark, Ann.ivf(nCells = 16), emb, "vec_id", "embedding", layout)
@@ -73,7 +72,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming KG landing: drained layout equals the batch pipeline; re-drain changes nothing; lineage audits") {
     import graft.sources.Tables
-    val tmp = Files.createTempDirectory("graft-kgland").toString
+    val tmp = tempDir("graft-kgland")
     val pages = Tables.pages(spark, sfDir).toDF()
     pages.write.mode("overwrite").parquet(s"$tmp/pages")
 
@@ -96,7 +95,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming CONTENT dedup: kept fingerprints equal batch exact-dedup survivors; replay drains nothing") {
-    val tmp = Files.createTempDirectory("graft-contentdedup").toString
+    val tmp = tempDir("graft-contentdedup")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     // plant replay duplicates: 20 docs re-delivered under new ids with
     // byte-different whitespace/case but identical NORMALIZED content — the
@@ -135,7 +134,7 @@ class StreamingSpec extends SparkSpec {
 
   test("ANN serving over the IVF-PQ layout: per-query rows equal independent ivfPqTopK probes; re-drain appends nothing") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-annserve-pq").toString
+    val tmp = tempDir("graft-annserve-pq")
     val layout = s"$tmp/ivfpq"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     Ann.writeLayout(spark, Ann.ivfPq(), emb, "vec_id", "embedding", layout)
@@ -165,7 +164,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming recipe (sample + upsample): drain equals the batch recipe row for row") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-recipe").toString
+    val tmp = tempDir("graft-recipe")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.write.mode("overwrite").parquet(s"$tmp/docs")
     val rate = lit(1000L) - lit(45L) * pmod(expr("cast(substr(source, 4) as bigint)"), lit(20L))
@@ -183,7 +182,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ANN serving: an oversized micro-batch fails fast on the query-collect bound") {
-    val tmp = Files.createTempDirectory("graft-annserve-guard").toString
+    val tmp = tempDir("graft-annserve-guard")
     val layout = s"$tmp/ivf"
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     Ann.writeLayout(spark, Ann.ivf(nCells = 16), emb, "vec_id", "embedding", layout)
@@ -226,7 +225,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming KG pipeline: AvailableNow drain produces exactly the batch triple set") {
-    val tmp = Files.createTempDirectory("graft-stream-kg").toString
+    val tmp = tempDir("graft-stream-kg")
     // stage the synthesized page table as the stream source
     graft.sources.Tables.pages(spark, sfDir).toDF()
       .write.mode("overwrite").parquet(s"$tmp/pages")
@@ -246,7 +245,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("mid-stream restart: files added between drains are picked up exactly once") {
-    val tmp = Files.createTempDirectory("graft-stream-restart").toString
+    val tmp = tempDir("graft-stream-restart")
     val src = s"$tmp/pages"
     val pages = graft.sources.Tables.pages(spark, sfDir).toDF()
     val first = pages.filter(pmod(xxhash64(col("url")), lit(2)) === 0)
@@ -280,7 +279,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming curation: AvailableNow drain equals the batch filter chain row for row") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-stream-curate").toString
+    val tmp = tempDir("graft-stream-curate")
     // canaried corpus (the q65/q67 fixture): eval docs (id%100==0) and the
     // id%10==3 train docs share an 8-word canary gram
     val canaried = graft.sources.Tables.read(spark, sfDir, "documents").select(
@@ -320,7 +319,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup: replayed duplicates within the watermark are dropped exactly once") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-stream-dedup").toString
+    val tmp = tempDir("graft-stream-dedup")
     val events = graft.sources.Tables.read(spark, sfDir, "events").limit(2000)
     events.write.mode("overwrite").parquet(s"$tmp/events")
     // a replaying upstream: half the events land AGAIN as a second file
