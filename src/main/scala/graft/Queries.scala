@@ -352,7 +352,7 @@ object Queries {
     */
   def q18Mentions(s: SparkSession, dir: String): DataFrame = {
     val pages = Tables.pages(s, dir)
-    Mentions.scan(s, pages, Dict.surfaces, wordBounds = false)
+    Mentions.scan(s, pages, Dict.surfaces)
       .groupBy(col("url"), col("surface"))
       .agg(count(lit(1)).as("n_mentions"))
   }
@@ -365,18 +365,14 @@ object Queries {
        |FROM docs d CROSS JOIN surfaces s
        |WHERE length(d.text) - length(replace(d.text, s.surface, '')) > 0""".stripMargin
 
-  /** Entity linking: surfaces present in a doc → top-1 QID by (prior, qid). */
-  def q19LinkTop1(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val pages = Tables.pages(s, dir)
-    val present = Mentions.scan(s, pages, Dict.surfaces, wordBounds = false)
-      .select(col("url"), col("surface")).distinct()
-    val cands = present.join(broadcast(Dict.aliases.toDF()), Seq("surface"))
-    val w = Window.partitionBy(col("url"), col("surface"))
-      .orderBy(col("prior").desc, col("qid").asc)
-    cands.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("url"), col("surface"), col("qid"))
-  }
+  /** Entity linking: surfaces present in a doc → top-1 QID by (prior, qid).
+    * The dictionary does not depend on url, so the top-1 per (url, surface)
+    * is the top-1 per surface: a lookup in `KgPipeline.aliasBest` gives the
+    * rows of the SQL's alias join + row_number window.
+    */
+  def q19LinkTop1(s: SparkSession, dir: String): DataFrame =
+    Mentions.present(s, Tables.pages(s, dir), Dict.surfaces)
+      .select(col("url"), col("surface"), Linking.top1(col("surface")).as("qid"))
 
   val q19Sql: String =
     s"""WITH $docsCte, $aliasesCte,
@@ -1269,18 +1265,16 @@ object Queries {
       |FROM documents""".stripMargin
 
   /** J-graft gate: the salted replicate-dim join must produce exactly the
-    * plain broadcast join's rows — same top-1 output as q19, so the oracle
-    * is q19's SQL with the salt folded out by construction.
+    * plain join's rows; filtered to the top-1 QID, they are q19's rows, so
+    * the oracle is q19's SQL with the salt folded out by construction. The
+    * filter keeps every joined row of the winning QID, so a salted join that
+    * duplicated rows would change the hash.
     */
   def q50SaltedLink(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = Tables.pages(s, dir)
-    val present = Mentions.scan(s, pages, Dict.surfaces, wordBounds = false)
-      .select(col("url"), col("surface")).distinct()
-    val cands = Linking.saltedJoin(present, Dict.aliases.toDF(), salt = 8)
-    val w = Window.partitionBy(col("url"), col("surface"))
-      .orderBy(col("prior").desc, col("qid").asc)
-    cands.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val present = Mentions.present(s, Tables.pages(s, dir), Dict.surfaces)
+    Linking.saltedJoin(present, Dict.aliases.toDF(), salt = 8)
+      .filter(col("qid") === Linking.top1(col("surface")))
       .select(col("url"), col("surface"), col("qid"))
   }
 
@@ -1323,9 +1317,7 @@ object Queries {
     */
   def q52Tfidf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pages = Tables.pages(s, dir)
-    val present = Mentions.scan(s, pages, Dict.surfaces, wordBounds = false)
-      .select(col("url"), col("surface")).distinct()
+    val present = Mentions.present(s, Tables.pages(s, dir), Dict.surfaces)
     val cands = present.join(broadcast(Dict.aliases.toDF()), Seq("surface"))
       .select(col("url"), col("surface"), col("qid"), col("prior").as("score"))
     val totalDocs = t(s, dir, "documents").count()
@@ -1525,9 +1517,7 @@ object Queries {
     val emb = t(s, dir, "embeddings")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
     val n = emb.count()
-    val pages = Tables.pages(s, dir)
-    val present = Mentions.scan(s, pages, Dict.surfaces, wordBounds = false)
-      .select(col("url"), col("surface")).distinct()
+    val present = Mentions.present(s, Tables.pages(s, dir), Dict.surfaces)
     import s.implicits._
     val cands = present.join(broadcast(Dict.aliases.toDF()), Seq("surface"))
       .withColumn("doc_id",

@@ -49,17 +49,6 @@ final case class Triple(
     objKind: String
 )
 
-/** A canonicalized triple attributed to its source page. Dedup key is
-  * (subj, pred, obj, url) per north_rule's windowed distinct.
-  */
-final case class CanonTriple(
-    subj: String,
-    pred: String,
-    obj: String,
-    url: String,
-    ts: Timestamp
-)
-
 /** A dictionary surface-form match inside one page. */
 final case class Mention(
     url: String,

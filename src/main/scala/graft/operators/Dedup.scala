@@ -854,7 +854,8 @@ object Dedup {
     * at least one `n`-word gram with any EVAL document (the standard
     * 8-gram-overlap rule of GPT-3/PaLM-style decontamination). Scale shape:
     * the eval set is SMALL by definition, so its gram set is collected once
-    * and broadcast; the corpus pass is then a narrow map — zero shuffles,
+    * (`Curation.evalGramSet`, which fails fast past `MaxEvalGrams`) and
+    * broadcast; the corpus pass is then a narrow map — zero shuffles,
     * the binary/text column is read exactly once. (At extreme eval sizes
     * the broadcast set becomes a Bloom filter + exact re-check join; the
     * call-site shape is unchanged.)
@@ -872,9 +873,7 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val base = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("text"), isEval.as("ev"))
-    val evalGrams = base.filter(col("ev")).select(col("text")).as[String]
-      .flatMap(wordGrams(_, n)).distinct().collect().toSet
-    val gramsB = spark.sparkContext.broadcast(evalGrams)
+    val gramsB = spark.sparkContext.broadcast(Curation.evalGramSet(base, "text", col("ev"), n))
     base.filter(!col("ev"))
       .select(col("id"), col("text"))
       .as[(Long, String)]

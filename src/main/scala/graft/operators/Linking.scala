@@ -1,47 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
-import graft.model.{Alias, Mention}
+import graft.pipeline.KgPipeline
 
-/** Entity linking: mention → ranked QID candidates via a broadcast hash join
-  * against the alias dim, top-k per mention by (prior, qid) — replacing the
-  * reference's per-surface href/title resolution
-  * (/root/reference/src/wikidata_update/get_updates.py:883-916) and its
-  * remote SPARQL lookups (806-881) with one local join.
+/** Entity linking over the (url, surface) rows of `Mentions.present`. The
+  * top-1 rule (prior desc, qid asc) is written once, in
+  * `KgPipeline.aliasBest`: the alias dictionary is small and local, so
+  * resolving a surface is a map lookup (`top1`), not a join and a window —
+  * the reference's per-surface href/title resolution
+  * (`get_updates.py:883-916`) without its remote SPARQL lookups (806-881).
   *
-  * Scale notes: the alias table is ≪ fact side ⇒ `broadcast()` hint (no
-  * shuffle on the fact side). The top-k window partitions by mention key —
-  * that IS a shuffle, but on the naturally high-cardinality (url, begin)
-  * key, so no skew: hot *surfaces* (e.g. "scan") do not concentrate because
-  * the partition key includes url. For dims too big to broadcast, use
-  * `saltedJoin` below.
+  * The rest is the candidate-set work that needs every QID of a
+  * surface: `saltedJoin`, the skew-resistant join for dims too big to
+  * broadcast, and `tfidfScored`, the two-pass corpus-statistic score.
   */
 object Linking {
 
-  def candidates(
-      spark: SparkSession,
-      mentions: Dataset[Mention],
-      aliases: Seq[Alias]
-  ): DataFrame = {
-    import spark.implicits._
-    val dim = aliases.toDF()
-    mentions
-      .join(broadcast(dim), Seq("surface"))
-      .select(col("url"), col("surface"), col("begin"), col("qid"), col("prior").as("score"))
-  }
-
-  /** Top-k candidates per mention occurrence; deterministic tiebreak on qid. */
-  def topK(cands: DataFrame, k: Int): DataFrame = {
-    val w = Window
-      .partitionBy(col("url"), col("surface"), col("begin"))
-      .orderBy(col("score").desc, col("qid").asc)
-    cands
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .drop("rank")
-  }
+  /** The top-1 QID of `surface` under `KgPipeline.aliasBest`; null for a
+    * surface without alias.
+    */
+  def top1(surface: Column): Column = element_at(typedLit(KgPipeline.aliasBest), surface)
 
   /** Skew-resistant variant for non-broadcastable dims (SURVEY.md §2.3 J-
     * graft): replicate each dim row SALT times with a salt column, salt the
@@ -52,51 +31,6 @@ object Linking {
     val saltedDim = dim.withColumn("salt", explode(array((0 until salt).map(lit): _*)))
     val saltedFacts = facts.withColumn("salt", pmod(hash(col("url")), lit(salt)))
     saltedFacts.join(saltedDim, Seq("surface", "salt")).drop("salt")
-  }
-
-  /** §2.9 — typed `Aggregator[IN, BUF, OUT]` form of per-mention top-k: a
-    * bounded best-first buffer (≤ k elements) that combines MAP-SIDE, so the
-    * shuffle moves at most k candidates per mention instead of every
-    * candidate row. The window form (`topK`) sorts and ships all rows; at
-    * 100 TB with hot surfaces this Aggregator is the fixed-memory,
-    * skew-immune alternative — same output, proven equal in OperatorsSpec,
-    * partial/final ObjectHashAggregate asserted in PlanSpec.
-    */
-  final case class ScoredQid(qid: String, score: Double)
-
-  class TopKQids(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[ScoredQid, List[ScoredQid], Seq[String]] {
-    private def better(a: ScoredQid, b: ScoredQid): Boolean =
-      a.score > b.score || (a.score == b.score && a.qid < b.qid)
-    private def insert(buf: List[ScoredQid], v: ScoredQid): List[ScoredQid] = {
-      val (pre, post) = buf.span(b => better(b, v))
-      val merged = pre ::: v :: post
-      if (merged.length > k) merged.take(k) else merged
-    }
-    def zero: List[ScoredQid] = Nil
-    def reduce(buf: List[ScoredQid], v: ScoredQid): List[ScoredQid] = insert(buf, v)
-    def merge(a: List[ScoredQid], b: List[ScoredQid]): List[ScoredQid] = b.foldLeft(a)(insert)
-    def finish(buf: List[ScoredQid]): Seq[String] = buf.map(_.qid)
-    def bufferEncoder: org.apache.spark.sql.Encoder[List[ScoredQid]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[List[ScoredQid]]()
-    def outputEncoder: org.apache.spark.sql.Encoder[Seq[String]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[String]]()
-  }
-
-  /** Aggregator-based top-k per mention: (url, surface, begin, rank, qid) —
-    * identical rows to `topK`, different physical shape (partial agg).
-    */
-  def topKAgg(cands: DataFrame, k: Int): DataFrame = {
-    val fn = org.apache.spark.sql.functions.udaf(
-      new TopKQids(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[ScoredQid]())
-    cands
-      .groupBy(col("url"), col("surface"), col("begin"))
-      .agg(fn(col("qid"), col("score")).as("qids"))
-      .select(col("url"), col("surface"), col("begin"),
-        posexplode(col("qids")).as(Seq("rank0", "qid")))
-      .withColumn("rank", col("rank0") + 1)
-      .drop("rank0")
   }
 
   /** TF-IDF context scoring: document frequency per surface via groupBy-count

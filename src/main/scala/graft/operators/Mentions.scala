@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.model.{Mention, Page}
 import graft.text.AhoCorasick
 
@@ -10,25 +11,29 @@ import graft.text.AhoCorasick
   * is built once on the driver and shipped via Broadcast, so dictionary cost
   * is O(1) per executor regardless of page count; scanning is
   * O(text + matches) per page, embarrassingly parallel, no shuffle.
+  *
+  * Both steps use raw substring semantics, the SQL-oracle-checkable one; the
+  * word-bounded scan runs inside the page-local kernel (`KgPipeline`).
   */
 object Mentions {
 
-  /** flatMap pages → mentions (the Generator/UDTF role done idiomatically —
-    * SURVEY.md §2.9). `wordBounds=true` is the pipeline semantic; `false`
-    * gives raw substring occurrences (the SQL-oracle-checkable semantic).
+  /** flatMap pages → every substring occurrence of each surface (the
+    * Generator/UDTF role done idiomatically — SURVEY.md §2.9).
     */
-  def scan(
-      spark: SparkSession,
-      pages: Dataset[Page],
-      surfaces: Seq[String],
-      wordBounds: Boolean = true
-  ): Dataset[Mention] = {
+  def scan(spark: SparkSession, pages: Dataset[Page], surfaces: Seq[String]): Dataset[Mention] = {
     import spark.implicits._
     val trie = spark.sparkContext.broadcast(AhoCorasick.build(surfaces))
     pages.flatMap { p =>
-      trie.value.scan(p.text, wordBounds).map { m =>
+      trie.value.scan(p.text, wordBounds = false).map { m =>
         Mention(p.url, m.pattern, m.begin, m.end, p.lang)
       }
     }
   }
+
+  /** The surfaces each page contains: distinct (url, surface) over `scan` —
+    * the one presence step of the linking queries; its distinct is the
+    * only shuffle.
+    */
+  def present(spark: SparkSession, pages: Dataset[Page], surfaces: Seq[String]): DataFrame =
+    scan(spark, pages, surfaces).select(col("url"), col("surface")).distinct()
 }

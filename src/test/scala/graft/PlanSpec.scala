@@ -40,12 +40,12 @@ class PlanSpec extends SparkSpec {
     assert(countShuffles(deduped) == countShuffles(base))
   }
 
-  test("linking join is broadcast, not shuffled") {
-    import spark.implicits._
-    val mentions = operators.Mentions.scan(spark, Tables.pages(spark, sfDir), model.Dict.surfaces)
-    val joined = operators.Linking.candidates(spark, mentions, model.Dict.aliases)
-    assert(countBroadcasts(joined) == 1)
-    assert(countShuffles(joined) == 0)
+  test("q19 top-1 link is a lookup: one shuffle (the presence distinct), no broadcast, no window") {
+    val df = Queries.q19LinkTop1(spark, sfDir)
+    assert(countShuffles(df) == 1, initialPlan(df).toString)
+    assert(countBroadcasts(df) == 0, initialPlan(df).toString)
+    assert(initialPlan(df).collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty,
+      initialPlan(df).toString)
   }
 
   test("q04 dims broadcast: no shuffle on the fact side before aggregation") {
@@ -113,21 +113,6 @@ class PlanSpec extends SparkSpec {
     val a = Queries.q29AnnBrute(spark, sfDir).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val b = native.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(a == b)
-  }
-
-  test("Aggregator top-k combines map-side (partial + final ObjectHashAggregate)") {
-    import spark.implicits._
-    val mentions = operators.Mentions.scan(spark, Tables.pages(spark, sfDir), model.Dict.surfaces)
-    val cands = operators.Linking.candidates(spark, mentions, model.Dict.aliases)
-    val df = operators.Linking.topKAgg(cands, 1)
-    val aggs = initialPlan(df).collect {
-      case o: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec => o
-    }
-    // partial (map-side, pre-shuffle) + final — ≤ k rows per mention cross the wire
-    assert(aggs.size == 2, initialPlan(df).toString)
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, Final}
-    assert(aggs.exists(_.aggregateExpressions.exists(_.mode == Partial)))
-    assert(aggs.exists(_.aggregateExpressions.exists(_.mode == Final)))
   }
 
   test("bucketed tables sort-merge join with zero exchanges (co-located join)") {

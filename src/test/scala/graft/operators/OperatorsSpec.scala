@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSpec
 import graft.model.{Alias, Dict, Page}
+import graft.pipeline.KgPipeline
 import graft.sources.Tables
 import graft.text.HtmlCodec
 import org.apache.spark.sql.functions._
@@ -35,7 +36,7 @@ class OperatorsSpec extends SparkSpec {
   test("mention scan matches driver-side brute force on a sample page") {
     import spark.implicits._
     val pages = Tables.pages(spark, sfDir).limit(20).cache()
-    val got = Mentions.scan(spark, pages, Dict.surfaces, wordBounds = false)
+    val got = Mentions.scan(spark, pages, Dict.surfaces)
       .map(m => (m.url, m.surface, m.begin)).collect().toSet
     val want = pages.collect().flatMap { p =>
       Dict.surfaces.flatMap { su =>
@@ -48,27 +49,29 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("word-bound mentions never split tokens") {
-    import spark.implicits._
-    val pages = Tables.pages(spark, sfDir).limit(20)
-    val ms = Mentions.scan(spark, pages, Dict.surfaces, wordBounds = true).collect()
+    val pages = Tables.pages(spark, sfDir).limit(20).cache()
+    val ms = KgPipeline.linkedMentions(spark, pages).collect()
     assert(ms.nonEmpty)
     val byUrl = pages.collect().map(p => p.url -> p.text).toMap
-    ms.foreach { m =>
-      val t = byUrl(m.url)
-      assert(t.substring(m.begin, m.end) == m.surface)
-      assert(m.begin == 0 || !t.charAt(m.begin - 1).isLetterOrDigit)
-      assert(m.end == t.length || !t.charAt(m.end).isLetterOrDigit)
+    ms.foreach { r =>
+      val (surface, begin) = (r.getAs[String]("surface"), r.getAs[Int]("begin"))
+      val end = begin + surface.length
+      val t = byUrl(r.getAs[String]("url"))
+      assert(t.substring(begin, end) == surface)
+      assert(begin == 0 || !t.charAt(begin - 1).isLetterOrDigit)
+      assert(end == t.length || !t.charAt(end).isLetterOrDigit)
     }
   }
 
   test("linking: ambiguous surface resolves to highest-prior qid, salted join agrees with plain") {
     import spark.implicits._
-    val pages = Tables.pages(spark, sfDir).limit(50)
-    val mentions = Mentions.scan(spark, pages, Dict.surfaces, wordBounds = true)
-    val top1 = Linking.topK(Linking.candidates(spark, mentions, Dict.aliases), 1)
-    val tableRows = top1.filter(col("surface") === "table").select("qid").distinct().collect()
+    val tableRows = graft.Queries.q19LinkTop1(spark, sfDir)
+      .filter(col("surface") === "table").select("qid").distinct().collect()
     assert(tableRows.map(_.getString(0)).toSeq == Seq("Q1013")) // prior 0.7 beats 0.3
+    assert(KgPipeline.aliasBest("table") == "Q1013")
 
+    val pages = Tables.pages(spark, sfDir).limit(50)
+    val mentions = Mentions.scan(spark, pages, Dict.surfaces)
     val dim = Dict.aliases.toDF()
     val plain = mentions.toDF().join(dim, Seq("surface"))
       .select("url", "begin", "qid").collect().toSet
@@ -398,17 +401,6 @@ class OperatorsSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     assert(int8.head == 0L) // self-similarity still tops the quantized list
     assert(brute.count(int8.toSet.contains) >= 7, s"int8=${int8.toSeq} brute=${brute.toSeq}")
-  }
-
-  test("Aggregator top-k returns exactly the window top-k rows") {
-    val mentions = Mentions.scan(spark, Tables.pages(spark, sfDir), graft.model.Dict.surfaces)
-    val cands = Linking.candidates(spark, mentions, graft.model.Dict.aliases)
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[String]("url"), r.getAs[String]("surface"), r.getAs[Int]("begin"),
-        r.getAs[String]("qid"))
-    val viaWindow = Linking.topK(cands, 2).collect().map(key).toSet
-    val viaAgg = Linking.topKAgg(cands, 2).collect().map(key).toSet
-    assert(viaAgg == viaWindow && viaAgg.nonEmpty)
   }
 
   test("nearDupPairs: planted near-dups found, no false pairs, empty input safe") {
