@@ -1246,9 +1246,10 @@ object Queries {
   /** Near-dup cluster resolution (connected components + survivor): planted
     * duplicate CHAINS over doc ids — doc d duplicates doc d−1 except at
     * 8-boundaries — so components are the runs [8k, 8k+7], cluster id = 8k,
-    * survivor = the run head: all closed-form in doc_id for the oracle. The
-    * length-8 chains force ≥3 alternating star rounds, exercising the
-    * iteration (a star input would converge in one).
+    * survivor = the run head: all closed-form in doc_id for the oracle. At
+    * oracle scale the edge set is far under `Dedup.LocalFinishRows`, so the
+    * labels come from the union-find finisher with no star round; the star
+    * loop is gated by the limit-0 OperatorsSpec cases.
     */
   def q49Components(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")

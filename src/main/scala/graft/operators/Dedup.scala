@@ -659,31 +659,93 @@ object Dedup {
       .distinct()
   }
 
+  /** One star round, the body of every iteration of the component loop:
+    * large-star, then small-star. PlanSpec asserts on this plan that every
+    * exchange moves two-Long rows only.
+    */
+  private[graft] def starRound(edges: DataFrame): DataFrame = smallStar(largeStar(edges))
+
+  /** The deduplicated edge count at or below which the component loop
+    * runs `unionFind` instead of star rounds: 2^20 edges. What the one task
+    * holds is its node map, not the edge rows (they stream through): about
+    * 50 bytes per node (`LongMap` boxes its values) plus an 8-byte id
+    * snapshot, so at most 2^21 nodes here. Measured on a 4-core host, JDK
+    * 17, 2^20 generated edges: a perfect matching (2^21 nodes, the worst
+    * case) holds 124 MB live after GC and needs a 160 MB heap to finish at
+    * all, 224 MB to finish without GC pressure; a random graph (0.9M nodes)
+    * holds 60 MB, a chain (1M nodes) 65 MB. Through `componentsWithStatus`
+    * on `local[4]` those three graphs take 2.5–4.6 s at this limit and
+    * 10.5–69 s through star rounds (the chain does not converge in 20
+    * rounds).
+    */
+  private[graft] val LocalFinishRows: Long = 1L << 20
+
+  /** The local finisher: the whole edge set in ONE task (`coalesce(1)` is a
+    * narrow merge of the checkpointed blocks, so no exchange runs and
+    * no rows are collected), union-by-min with path halving,
+    * so every root is its component's minimum id. Emits one
+    * (id, component) row per node.
+    */
+  private def unionFind(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges.as[(Long, Long)].coalesce(1).mapPartitions { rows =>
+      val parent = scala.collection.mutable.LongMap.empty[Long]
+      def find(x0: Long): Long = {
+        var x = x0
+        var p = parent(x)
+        while (p != x) {
+          val g = parent(p)
+          parent(x) = g
+          x = g
+          p = parent(x)
+        }
+        x
+      }
+      rows.foreach { case (u, v) =>
+        parent.getOrElseUpdate(u, u)
+        parent.getOrElseUpdate(v, v)
+        val (ru, rv) = (find(u), find(v))
+        if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+      }
+      // snapshot the ids: find rewrites parents while the labels stream out
+      parent.keys.toArray.iterator.map(id => (id, find(id)))
+    }.toDF("id", "component")
+  }
+
   /** Connected components over candidate pairs — the step every pair-
     * emitting near-dup operator (minhash/simhash/embedding) stops short of:
     * a 100 TB dedup keeps one doc per CLUSTER, not per pair. Alternating
     * small-star/large-star joins (Kiveris et al., "Connected Components in
-    * MapReduce and Beyond" — no GraphX dependency), iterated to fixpoint
-    * with a bounded iteration count (converges in O(log n) rounds; n here
-    * is the largest component, so the bound is generous).
+    * MapReduce and Beyond" — no GraphX dependency) for an edge set too
+    * large for one task; an edge set that fits one task (`LocalFinishRows`)
+    * is resolved instead by one union-find over one partition. The star
+    * loop is bounded (converges in O(log n) rounds; n here is the largest
+    * component, so the bound is generous).
     *
-    * Scale shape: every shuffle in every iteration moves two-Long rows
-    * (node, candidate-parent) — never document payloads (PlanSpec-asserted).
-    * `localCheckpoint` truncates the per-iteration lineage so plan size
-    * stays constant across rounds.
+    * The finisher: the exact edge count is known from the initial
+    * signature, so the check costs nothing. At or below the limit the
+    * method returns `unionFind` of the deduplicated edge set, converged —
+    * no star round and no except run at all. The check is made once, not
+    * after every round: no measured workload has an edge set above the
+    * limit, so a mid-loop exit would be unmeasured code. Labels are
+    * identical by construction: the min-id label of a component is unique,
+    * whichever path computes it.
     *
-    * Convergence (the Kiveris changed-row counter, adapted to exactness):
-    * the per-round check is ONE tiny aggregate over the just-checkpointed
-    * edge set — an order-independent signature (count + two independent
-    * xor-folds of xxhash64, overflow-free at any edge count) compared to
-    * the previous round's. Equal sets always
-    * produce equal signatures, so the exact (shuffle-heavy) `except` check
-    * runs ONCE, when the signature first repeats, to confirm the fixpoint —
-    * a signature collision between distinct sets merely costs one extra
-    * except that says "keep going", never a wrong answer. Per-round jobs
-    * drop from 3 (checkpoint + count + except) to 2 (checkpoint + tiny agg
-    * over block-manager-resident two-Long rows), and the except's
-    * double-shuffle leaves the loop entirely.
+    * Scale shape: every shuffle in every star round moves two-Long rows
+    * (node, candidate-parent) — never document payloads (PlanSpec-asserted);
+    * the finisher runs no shuffle. `localCheckpoint` truncates the
+    * per-iteration lineage so plan size stays constant across rounds.
+    *
+    * Convergence of the star loop (the Kiveris changed-row counter, adapted
+    * to exactness): the per-round check is ONE tiny aggregate over the
+    * just-checkpointed edge set — an order-independent signature (count +
+    * two independent xor-folds of xxhash64, overflow-free at any edge
+    * count) compared to the previous round's. Equal sets always produce
+    * equal signatures, so the exact (shuffle-heavy) `except` check runs
+    * ONCE, when the signature first repeats, to confirm the fixpoint — a
+    * signature collision between distinct sets merely costs one extra
+    * except that says "keep going", never a wrong answer.
     *
     * Returns (id, component) for every node appearing in `pairs`, where
     * component = min id of the connected component (so the component id IS
@@ -696,12 +758,24 @@ object Dedup {
     * current labels are RETURNED (flag false, warning logged) rather than
     * the job killed — on a pathological graph a 100 TB run degrades to
     * approximate labels a caller can quarantine, instead of discarding
-    * maxIters rounds of cluster work at the finish line.
+    * maxIters rounds of cluster work at the finish line. The finisher path
+    * is always converged.
     */
   def componentsWithStatus(
       spark: SparkSession,
       pairs: DataFrame,
       maxIters: Int = 20
+  ): (DataFrame, Boolean) =
+    componentsWithStatus(spark, pairs, maxIters, LocalFinishRows)
+
+  /** The component loop every public entry point reaches. `localFinishRows`
+    * is the finisher's edge limit; specs pass 0 to force the star path.
+    */
+  private[graft] def componentsWithStatus(
+      spark: SparkSession,
+      pairs: DataFrame,
+      maxIters: Int,
+      localFinishRows: Long
   ): (DataFrame, Boolean) = {
     val init = pairs
       .select(col(pairs.columns(0)).cast("long").as("u"), col(pairs.columns(1)).cast("long").as("v"))
@@ -723,9 +797,9 @@ object Dedup {
     }
     // LAZY localCheckpoint + the signature aggregate as its materializing
     // action: one job per round computes the stars, caches the blocks,
-    // truncates the lineage AND returns the convergence signature — there is
-    // no separate checkpoint/count/except job left in the loop at all
-    // (the initial signature also doubles as the emptiness check)
+    // truncates the lineage AND returns the edge count the finisher check
+    // reads and the convergence signature — there is no separate
+    // checkpoint/count/except job left in the loop at all
     //
     // Partition economy per round: the checkpointed edge set inherits the
     // session's shuffle partition count, so each of the next round's
@@ -739,12 +813,13 @@ object Dedup {
       df.coalesce(math.max(1L, rows >> 20).min(Int.MaxValue.toLong).toInt)
     var e = init.localCheckpoint(false)
     var sig = signature(e)
-    if (sig._1 == 0) return (e.select(col("u").as("id"), col("v").as("component")), true)
+    // an empty edge set finishes here too: unionFind of no rows is no labels
+    if (sig._1 <= localFinishRows) return (unionFind(e), true)
     e = rowJustified(e, sig._1)
     var converged = false
     var it = 0
     while (!converged && it < maxIters) {
-      val next = smallStar(largeStar(e)).localCheckpoint(false)
+      val next = starRound(e).localCheckpoint(false)
       val nextSig = signature(next)
       val nextBalanced = rowJustified(next, nextSig._1)
       // signature repeat ⇒ run the exact confirmation (once, at fixpoint)
@@ -775,7 +850,7 @@ object Dedup {
   /** Incremental connected components — the label-update step of daily
     * dedup: yesterday's (id, component) labels ARE a connectivity-
     * preserving contraction of yesterday's graph (every node wired to its
-    * component min), so running the star algorithm over
+    * component min), so running the component loop over
     * labels-as-edges ∪ today's new candidate pairs yields exactly the
     * components of the full cumulative graph — without ever rebuilding or
     * re-walking yesterday's edge set, whose size is corpus-scale while the
@@ -826,8 +901,20 @@ object Dedup {
       pairs: DataFrame,
       maxIters: Int = 20,
       requireConverged: Boolean = true
+  ): DataFrame =
+    clusters(docs, idCol, pairs, maxIters, requireConverged, LocalFinishRows)
+
+  /** `clusters` at a given finisher limit (specs pass 0). */
+  private[graft] def clusters(
+      docs: DataFrame,
+      idCol: String,
+      pairs: DataFrame,
+      maxIters: Int,
+      requireConverged: Boolean,
+      localFinishRows: Long
   ): DataFrame = {
-    val (comp, converged) = componentsWithStatus(docs.sparkSession, pairs, maxIters)
+    val (comp, converged) =
+      componentsWithStatus(docs.sparkSession, pairs, maxIters, localFinishRows)
     if (requireConverged && !converged)
       throw new IllegalStateException(
         s"connected components did not converge in $maxIters rounds; " +

@@ -186,16 +186,18 @@ class PlanSpec extends SparkSpec {
   test("connected components: every per-iteration shuffle moves two-Long rows only") {
     import spark.implicits._
     val pairs = (1L to 64L).filter(_ % 8 != 0).map(d => (d - 1, d)).toDF("id1", "id2")
-    import org.apache.spark.sql.functions.{col, min}
+    import org.apache.spark.sql.functions.col
     val comp = operators.Dedup.components(spark, pairs)
     // the fixpoint result is built from localCheckpointed iterations; assert
-    // on a single star round's plan instead (same code path every iteration)
-    val oneRound = {
-      val sym = pairs.select(col("id1").as("u"), col("id2").as("v"))
-        .unionAll(pairs.select(col("id2").as("u"), col("id1").as("v")))
-      sym.groupBy("u").agg(min(col("v")).as("mv"))
-    }
-    initialPlan(oneRound).collect { case e: ShuffleExchangeLike => e }.foreach { e =>
+    // on the plan of one star round, the plan every iteration runs
+    val oneRound = operators.Dedup.starRound(pairs.select(col("id1").as("u"), col("id2").as("v")))
+    val plan = initialPlan(oneRound)
+    val shuffles = plan.collect { case e: ShuffleExchangeLike => e }
+    // the two star windows and small-star's distinct
+    assert(shuffles.size == 3, plan.toString)
+    assert(plan.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }.size == 2,
+      plan.toString)
+    shuffles.foreach { e =>
       val cols = e.child.output
       assert(cols.size <= 2, s"star shuffle carries ${cols.map(_.name)}")
       assert(cols.forall(_.dataType == org.apache.spark.sql.types.LongType),
@@ -203,6 +205,22 @@ class PlanSpec extends SparkSpec {
     }
     // and the result itself is (id, component) Longs only
     assert(comp.schema.fields.forall(_.dataType == org.apache.spark.sql.types.LongType))
+  }
+
+  test("connected components under the finisher limit: the labels plan has no exchange, window or aggregate") {
+    import spark.implicits._
+    val pairs = (1L to 64L).filter(_ % 8 != 0).map(d => (d - 1, d)).toDF("id1", "id2")
+    val comp = operators.Dedup.components(spark, pairs)
+    assert(comp.count() == 64)
+    // one narrow pass over the checkpointed edge blocks: the star read-out's
+    // distinct (an aggregate, and an exchange once the edges span partitions)
+    // is gone with the star rounds
+    val plan = initialPlan(comp)
+    assert(plan.collect { case e: ShuffleExchangeLike => e }.isEmpty, plan.toString)
+    assert(plan.collect { case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty,
+      plan.toString)
+    assert(plan.collect { case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a }.isEmpty,
+      plan.toString)
   }
 
   test("multi-query ANN: one shuffle total for M queries, combined map-side (≤k rows/group cross it)") {

@@ -295,22 +295,27 @@ class OperatorsSpec extends SparkSpec {
       (20L, 21L),
       (5L, 10L)
     ).toDF("id1", "id2")
-    val comp = Dedup.components(spark, pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expect = Map(
       1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       10L -> 1L, 11L -> 1L, 12L -> 1L, // cross-link merges the clique into the chain
       20L -> 20L, 21L -> 20L)
-    assert(comp == expect)
-    // empty candidate set → empty mapping, no failure
-    assert(Dedup.components(spark, Seq.empty[(Long, Long)].toDF("id1", "id2")).count() == 0)
-    // clusters: unpaired docs are their own singleton cluster and survive
-    val docs = (1L to 6L).toDF("doc_id")
-    val cl = Dedup.clusters(docs, "doc_id", Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(cl == Set(
-      (1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
-      (4L, 4L, true), (5L, 5L, true), (6L, 6L, true)))
+    // limit 0 forces the star loop, the default limit the union-find finisher
+    Seq(0L, Dedup.LocalFinishRows).foreach { limit =>
+      val (comp, converged) = Dedup.componentsWithStatus(spark, pairs, 20, limit)
+      assert(converged, s"limit $limit")
+      assert(comp.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == expect, s"limit $limit")
+      // empty candidate set → empty mapping, no failure
+      val (empty, emptyConverged) = Dedup.componentsWithStatus(
+        spark, Seq.empty[(Long, Long)].toDF("id1", "id2"), 20, limit)
+      assert(empty.count() == 0 && emptyConverged, s"limit $limit")
+      // clusters: unpaired docs are their own singleton cluster and survive
+      val docs = (1L to 6L).toDF("doc_id")
+      val cl = Dedup.clusters(docs, "doc_id", Seq((1L, 2L), (2L, 3L)).toDF("id1", "id2"), 20, true, limit)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+      assert(cl == Set(
+        (1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
+        (4L, 4L, true), (5L, 5L, true), (6L, 6L, true)), s"limit $limit")
+    }
   }
 
   test("components property: 200 seeded random multigraphs edges == union-find (dups, self-loops, stars, rings)") {
@@ -332,9 +337,46 @@ class OperatorsSpec extends SparkSpec {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val truth = parent.keys.map(k => k -> find(k)).toMap
-    val comp = Dedup.components(spark, edges.toDF("id1", "id2")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp == truth)
+    // limit 0 forces the star loop, the default limit the union-find finisher
+    Seq(0L, Dedup.LocalFinishRows).foreach { limit =>
+      val comp = Dedup.componentsWithStatus(spark, edges.toDF("id1", "id2"), 20, limit)._1.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(comp == truth, s"limit $limit")
+    }
+  }
+
+  test("components hybrid: the union-find finisher equals star-only labels and flag") {
+    import spark.implicits._
+    val rng = new scala.util.Random(4321)
+    def bothWays(es: Seq[(Long, Long)]) = es ++ es.map(_.swap)
+    val graphs = Seq(
+      "chain" -> bothWays((1L until 100L).map(d => (d - 1, d))),
+      // center 500 is the max id, so the label is a leaf; half the spokes twice
+      "star" -> ((1L to 40L).map(l => (500L, l)) ++ (2L to 40L by 2).map(l => (l, 500L))),
+      "small components" -> (0L until 150L).flatMap(k =>
+        Seq((3 * k, 3 * k + 1), (3 * k + 1, 3 * k + 2), (3 * k + 2, 3 * k))),
+      "giant component" -> ((1 until 300).map(i => (rng.nextInt(i).toLong, i.toLong)) ++
+        Seq.fill(100)((rng.nextInt(300).toLong, rng.nextInt(300).toLong))))
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+      val rows = df.as[(Long, Long)].collect()
+      assert(rows.map(_._1).distinct.length == rows.length, "one row per id")
+      rows.toMap
+    }
+    graphs.foreach { case (name, es) =>
+      val pairs = es.toDF("id1", "id2")
+      def run(limit: Long) = {
+        val (l, flag) = Dedup.componentsWithStatus(spark, pairs, 20, limit)
+        (labels(l), flag)
+      }
+      val starOnly = run(0L)
+      assert(starOnly._2, name)
+      assert(run(Dedup.LocalFinishRows) == starOnly, name)
+      // the label update: half the edges as old labels, the rest as new pairs
+      val (oldEs, newEs) = es.splitAt(es.size / 2)
+      val oldLabels = Dedup.components(spark, oldEs.toDF("id1", "id2"))
+      assert(labels(Dedup.componentsIncremental(spark, oldLabels, newEs.toDF("id1", "id2"))) ==
+        starOnly._1, name)
+    }
   }
 
   test("components over minhash candidate pairs equals union-find ground truth") {
@@ -833,14 +875,15 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     // a length-32 chain needs several star rounds; maxIters=1 cannot finish
     val chain = (1L until 32L).map(d => (d - 1, d)).toDF("id1", "id2")
-    val (labels, converged) = Dedup.componentsWithStatus(spark, chain, maxIters = 1)
+    // limit 0: the chain is under the finisher limit, so force the star loop
+    val (labels, converged) = Dedup.componentsWithStatus(spark, chain, maxIters = 1, localFinishRows = 0L)
     assert(!converged)
     val degraded = labels.collect()
     assert(degraded.nonEmpty) // degraded labels returned, job not killed
     // the one-row-per-id contract must survive degradation (a multi-parent
     // mid-state would otherwise duplicate every downstream join)
     assert(degraded.map(_.getLong(0)).distinct.length == degraded.length)
-    val (labels2, converged2) = Dedup.componentsWithStatus(spark, chain, maxIters = 20)
+    val (labels2, converged2) = Dedup.componentsWithStatus(spark, chain, maxIters = 20, localFinishRows = 0L)
     assert(converged2)
     val m = labels2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((0L until 32L).forall(m(_) == 0L))
@@ -850,10 +893,12 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     val chain = (1L until 32L).map(d => (d - 1, d)).toDF("id1", "id2")
     val docs = (0L until 32L).toDF("doc_id")
+    // limit 0: the chain is under the finisher limit, so force the star loop
     intercept[IllegalStateException] {
-      Dedup.clusters(docs, "doc_id", chain, maxIters = 1)
+      Dedup.clusters(docs, "doc_id", chain, maxIters = 1, requireConverged = true, localFinishRows = 0L)
     }
-    val degraded = Dedup.clusters(docs, "doc_id", chain, maxIters = 1, requireConverged = false)
+    val degraded = Dedup.clusters(docs, "doc_id", chain, maxIters = 1, requireConverged = false,
+      localFinishRows = 0L)
     assert(degraded.count() == 32)
   }
 
