@@ -837,15 +837,8 @@ object Queries {
     // re-balance the single-file scan: shingling+64 minhashes is ~ms/doc CPU,
     // so parallelism must follow cores, not the one input split
     val docs = t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
-    // sketch ONCE: the candidates plan references the signature table four
-    // times (band probe, band build, both estimate joins), and an
-    // un-materialized typed-map subtree is re-evaluated per reference —
-    // materializedOnce (localCheckpoint, never CacheManager-persist) makes
-    // every reference read the 2.5 MB checkpointed table.
-    // Per-invocation only: each invocation re-sketches from parquet.
-    val sigs = materializedOnce(
-      Dedup.minHashSignatures(s, docs, "doc_id", "text"))
-    Dedup.minHashCandidates(s, sigs, bands = 16, minEstJaccard = 0.7)
+    Dedup.minHashCandidates(s, Dedup.minHashSignatures(s, docs, "doc_id", "text"),
+      bands = 16, minEstJaccard = 0.7)
       .select(col("id1"), col("id2"))
   }
 
@@ -877,10 +870,7 @@ object Queries {
     * all reproducible in DuckDB.
     */
   def q27SimHashGate(s: SparkSession, dir: String): DataFrame = {
-    // sketch once (the md5 vote is the dominant CPU; the self-join
-    // references the table twice) — materializedOnce, per-invocation only
-    val sk = materializedOnce(simHash48Table(s, dir))
-    Dedup.simHashPairs(s, sk, maxHamming = 3, chunks = 4, chunkBits = 12)
+    Dedup.simHashPairs(s, simHash48Table(s, dir), maxHamming = 3, chunks = 4, chunkBits = 12)
       .select(col("id1"), col("id2"), col("hamming").cast("bigint").as("hamming"))
   }
 
@@ -940,10 +930,8 @@ object Queries {
     */
   def q28JaccardVerify(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents").repartition(s.sparkContext.defaultParallelism)
-    // sketch once, reuse across the four signature references (see q26)
-    val sigs = materializedOnce(
-      Dedup.minHashSignatures(s, docs, "doc_id", "text"))
-    val cands = Dedup.minHashCandidates(s, sigs, bands = 16, minEstJaccard = 0.3)
+    val cands = Dedup.minHashCandidates(s, Dedup.minHashSignatures(s, docs, "doc_id", "text"),
+      bands = 16, minEstJaccard = 0.3)
     Dedup.verifyJaccard(s, docs, "doc_id", "text", cands, shingleN = 5, minJaccard = 0.6)
       .select(col("id1"), col("id2"))
   }
@@ -2209,16 +2197,9 @@ object Queries {
     * gating both the layout lifecycle and the sketch-once economics that
     * make daily 100 TB dedup re-runs linear in the append, not the corpus.
     */
-  def q75MinHashStored(s: SparkSession, dir: String): DataFrame = {
-    // read the stored layout ONCE: the candidates plan references the
-    // signature table four times, and each unpersisted reference re-opens
-    // every layout file (the append-accumulated small files make the opens,
-    // not the bytes, the cost). One parallel materialization, then all
-    // references hit the cache. In-query only — each invocation re-reads.
-    val sigs = materializedOnce(storedSigs(s, dir))
-    Dedup.minHashCandidates(s, sigs, bands = 16, minEstJaccard = 0.7)
+  def q75MinHashStored(s: SparkSession, dir: String): DataFrame =
+    Dedup.minHashCandidates(s, storedSigs(s, dir), bands = 16, minEstJaccard = 0.7)
       .select(col("id1"), col("id2"))
-  }
 
   def q75Sql: String = q26Sql
 
@@ -2231,9 +2212,9 @@ object Queries {
     * union(yesterday's pairs, today's increment) == full recompute.
     */
   def q77MinHashIncremental(s: SparkSession, dir: String): DataFrame = {
-    // one parallel read of the stored layout shared by every reference
-    // (all-side banding, new-side banding, both estimate joins) — see q75
-    val all = materializedOnce(storedSigs(s, dir))
+    // the operator materializes the all side itself; the new side's filter
+    // reads the stored layout once more (a scan, no sketch)
+    val all = storedSigs(s, dir)
     val newSigs = all.filter(col("id") % 2 =!= 0)
     Dedup.minHashCandidatesIncremental(s, all, newSigs, bands = 16, minEstJaccard = 0.7)
       .select(col("id1"), col("id2"))
@@ -2685,10 +2666,10 @@ object Queries {
   def q91SimHashIncr(s: SparkSession, dir: String): DataFrame = {
     // each half is sketched exactly ONCE (the md5 vote is the dominant
     // CPU): even + odd sketched separately, their union is the all side and
-    // the odd table alone the new side — previously the all side ran
-    // simHash48Table over the full corpus, so odd docs were md5-sketched
-    // twice per query. Persist + materialize so the two references to the
-    // odd table (union member, new side) share one computation.
+    // the odd table alone the new side. The operator materializes only the
+    // all side, so without these checkpoints the new side would md5-sketch
+    // the odd docs a second time; the operator's own checkpoint of the
+    // union is a copy of these blocks, no sketch.
     val even = materializedOnce(simHash48Table(s, dir, col("doc_id") % 2 === 0))
     val odd = materializedOnce(simHash48Table(s, dir, col("doc_id") % 2 =!= 0))
     Dedup.simHashPairsIncremental(

@@ -22,7 +22,10 @@ import graft.sources.Tables
   *               sketch → the family's own score and filter. Full and
   *               incremental (new batch vs all) runs differ only in the
   *               pair predicate; the MinHash signature and band-key tables
-  *               are stored through the Tables layout lifecycle.
+  *               are stored through the Tables layout lifecycle. The
+  *               MinHash and SimHash sketch tables are materialized at ONE
+  *               point, `sketchedOnce`, so the plan branches that read them
+  *               scan one checkpoint instead of re-sketching.
   *  - ngramJaccard: exact verification joined onto LSH candidates only.
   *  - components: connected components over verified pairs → survivors.
   */
@@ -51,6 +54,23 @@ object Dedup {
     else df.coalesce(math.max(1L, (est.toLong + targetBytes - 1) / targetBytes)
       .min(Int.MaxValue.toLong).toInt)
   }
+
+  /** The candidate path's one materialization point. A payload frame (a
+    * MinHash signature or SimHash sketch table) is read by several plan
+    * branches: the band probe and the band build, and both join-back sides.
+    * Left as a plan, its sketch map runs once per branch, and under the
+    * size-justified coalesce each run is a single task. So the frame is
+    * materialized here first, eagerly (the call itself runs that one job)
+    * and at its own partition width (the sketch runs once, in parallel),
+    * and only then coalesced; every branch then scans the same
+    * checkpointed blocks. `localCheckpoint`, never
+    * `persist`: the blocks belong to this invocation's RDD, so a later call
+    * over the same plan computes from its inputs again (see
+    * `Queries.materializedOnce`). A caller that passes its own checkpoint
+    * pays one copy of it here, no sketch.
+    */
+  private def sketchedOnce(df: DataFrame): DataFrame =
+    sizeJustifiedCoalesce(df.localCheckpoint(true))
 
   /** The canonical normalized-content digest (whitespace-collapsed,
     * lowercased, md5) — THE content identity every exact-dedup consumer
@@ -107,6 +127,12 @@ object Dedup {
   //   key function) → bucket pairs (`bucketPairs`: the only wide join, over
   //   band keys and ids) → ids-only join-back of the sketch (`joinedBack`)
   //   → the family's own score and filter.
+  // The MinHash and SimHash entry points pass every sketch table they read
+  // more than once through `sketchedOnce`, the path's one materialization
+  // point. The stored-pruned path's all side is the stored signature layout
+  // (no sketch to repeat) and is read as it is. The embedding family has
+  // no sketch table: its payload is the caller's vector frame, and its
+  // sign bits are computed inside the bander.
   // Candidate generation is linear in docs, never all-pairs; the band-key
   // shuffle is the only wide op on the key side, bucket sizes are bounded
   // by similarity structure, with AQE skew-join as backstop for degenerate
@@ -190,7 +216,7 @@ object Dedup {
       bands: Int = 16,
       minEstJaccard: Double = 0.5
   ): DataFrame = {
-    val sigs = sizeJustifiedCoalesce(sigs0)
+    val sigs = sketchedOnce(sigs0)
     val keys = banded(sigs, minHashKeys(bands))
     estimatePairs(spark, sigs, bucketPairs(keys, keys, _ < _), minEstJaccard)
   }
@@ -236,7 +262,8 @@ object Dedup {
       bands: Int = 16,
       minEstJaccard: Double = 0.5
   ): DataFrame = {
-    val allSigs = sizeJustifiedCoalesce(allSigs0)
+    // the new batch is banded once and read nowhere else
+    val allSigs = sketchedOnce(allSigs0)
     val newSigs = sizeJustifiedCoalesce(newSigs0)
     estimatePairs(spark, allSigs,
       bucketPairs(banded(newSigs, minHashKeys(bands)), banded(allSigs, minHashKeys(bands)), _ =!= _),
@@ -351,7 +378,9 @@ object Dedup {
     * than trusting the caller, the lineage audit below checks that the
     * layout's recorded batches cover `allSigs` exactly (one tiny aggregate
     * over the lineage log's latest rows + one column-pruned id aggregate — zero IO
-    * against the layout's data files) and throws on a gap.
+    * against the layout's data files) and throws on a gap. The audit runs
+    * before anything is materialized, so a failed call checkpoints nothing;
+    * only the new batch then goes through `sketchedOnce`.
     */
   def minHashCandidatesStoredPruned(
       spark: SparkSession,
@@ -368,7 +397,10 @@ object Dedup {
       s"band layout at $bandLayoutPath does not cover allSigs - " +
         "appendBandLayout the new batch BEFORE querying the pruned path, " +
         "or new-vs-new collision pairs would be silently dropped")
-    val newKeys = banded(sizeJustifiedCoalesce(newSigs), minHashKeys(bands))
+    // the new batch's keys are read twice (the bucket set and the join), so
+    // its table goes through the materialization point; the all side is the
+    // stored signature layout, read by the two join-back sides as it is
+    val newKeys = banded(sketchedOnce(newSigs), minHashKeys(bands))
     // the bucket set is bounded by nBuckets (a few hundred Longs) — safe to
     // collect and inline as a partition-pruning predicate
     val buckets = newKeys.select(Tables.format.bucket(col("bkey"), nBuckets)).distinct()
@@ -402,7 +434,7 @@ object Dedup {
       chunks: Int = 4,
       chunkBits: Int = 16
   ): DataFrame = {
-    val hashes = sizeJustifiedCoalesce(hashes0)
+    val hashes = sketchedOnce(hashes0)
     val keys = banded(hashes, chunkKeys(chunks, chunkBits))
     hammingVerified(hashes, bucketPairs(keys, keys, _ < _), maxHamming)
   }
@@ -429,7 +461,8 @@ object Dedup {
       chunks: Int = 4,
       chunkBits: Int = 16
   ): DataFrame = {
-    val allHashes = sizeJustifiedCoalesce(allHashes0)
+    // the new batch is banded once and read nowhere else
+    val allHashes = sketchedOnce(allHashes0)
     val newHashes = sizeJustifiedCoalesce(newHashes0)
     val keys = chunkKeys(chunks, chunkBits)
     hammingVerified(allHashes,
@@ -665,9 +698,9 @@ object Dedup {
     */
   private[graft] def starRound(edges: DataFrame): DataFrame = smallStar(largeStar(edges))
 
-  /** The deduplicated edge count at or below which the component loop
-    * runs `unionFind` instead of star rounds: 2^20 edges. What the one task
-    * holds is its node map, not the edge rows (they stream through): about
+  /** The pair count, duplicates included, at or below which the component
+    * loop runs `unionFind` instead of star rounds: 2^20 pairs. What the one
+    * task holds is its node map, not the pair rows (they stream through): about
     * 50 bytes per node (`LongMap` boxes its values) plus an 8-byte id
     * snapshot, so at most 2^21 nodes here. Measured on a 4-core host, JDK
     * 17, 2^20 generated edges: a perfect matching (2^21 nodes, the worst
@@ -723,14 +756,20 @@ object Dedup {
     * loop is bounded (converges in O(log n) rounds; n here is the largest
     * component, so the bound is generous).
     *
-    * The finisher: the exact edge count is known from the initial
-    * signature, so the check costs nothing. At or below the limit the
-    * method returns `unionFind` of the deduplicated edge set, converged —
-    * no star round and no except run at all. The check is made once, not
+    * The finisher: the input's pair count (self-loops dropped, duplicates
+    * kept) is read by the job that checkpoints the pairs. At or below the
+    * limit the method returns `unionFind` of those raw pairs, converged —
+    * no distinct, no star round and no except run at all; union-find does
+    * not care about duplicate or reversed pairs, and counting them only
+    * makes the limit more conservative. The check is made once, not
     * after every round: no measured workload has an edge set above the
     * limit, so a mid-loop exit would be unmeasured code. Labels are
     * identical by construction: the min-id label of a component is unique,
-    * whichever path computes it.
+    * whichever path computes it. Above the limit the count costs one pass
+    * more than deduplicating first would: the raw pairs are checkpointed
+    * and counted, then deduplicated into a second checkpoint, and the raw
+    * blocks stay in block storage beside it through the star loop. That
+    * path is unmeasured too.
     *
     * Scale shape: every shuffle in every star round moves two-Long rows
     * (node, candidate-parent) — never document payloads (PlanSpec-asserted);
@@ -769,7 +808,7 @@ object Dedup {
     componentsWithStatus(spark, pairs, maxIters, LocalFinishRows)
 
   /** The component loop every public entry point reaches. `localFinishRows`
-    * is the finisher's edge limit; specs pass 0 to force the star path.
+    * is the finisher's pair limit; specs pass 0 to force the star path.
     */
   private[graft] def componentsWithStatus(
       spark: SparkSession,
@@ -777,10 +816,13 @@ object Dedup {
       maxIters: Int,
       localFinishRows: Long
   ): (DataFrame, Boolean) = {
-    val init = pairs
+    val rawPairs = pairs
       .select(col(pairs.columns(0)).cast("long").as("u"), col(pairs.columns(1)).cast("long").as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
+      .localCheckpoint(false)
+    // the count materializes the checkpoint; an empty pair set finishes here
+    // too: unionFind of no rows is no labels
+    if (rawPairs.count() <= localFinishRows) return (unionFind(rawPairs), true)
     // order-independent set signature: count + two independent xor-folds
     // (the second over the swapped pair = a different 64-bit hash of the same
     // row). xor cannot overflow at ANY edge count — a sum term would wrap a
@@ -797,9 +839,9 @@ object Dedup {
     }
     // LAZY localCheckpoint + the signature aggregate as its materializing
     // action: one job per round computes the stars, caches the blocks,
-    // truncates the lineage AND returns the edge count the finisher check
-    // reads and the convergence signature — there is no separate
-    // checkpoint/count/except job left in the loop at all
+    // truncates the lineage AND returns the edge count and the convergence
+    // signature — there is no separate checkpoint/count/except job left in
+    // the loop at all
     //
     // Partition economy per round: the checkpointed edge set inherits the
     // session's shuffle partition count, so each of the next round's
@@ -811,10 +853,11 @@ object Dedup {
     // whenever the justified count meets the current one (large graphs).
     def rowJustified(df: DataFrame, rows: Long): DataFrame =
       df.coalesce(math.max(1L, rows >> 20).min(Int.MaxValue.toLong).toInt)
-    var e = init.localCheckpoint(false)
+    // above the limit: the star loop's signature and except need set
+    // semantics, so deduplicate once from the checkpointed raw pairs (one
+    // more job, and the raw blocks are held beside the distinct ones)
+    var e = rawPairs.distinct().localCheckpoint(false)
     var sig = signature(e)
-    // an empty edge set finishes here too: unionFind of no rows is no labels
-    if (sig._1 <= localFinishRows) return (unionFind(e), true)
     e = rowJustified(e, sig._1)
     var converged = false
     var it = 0

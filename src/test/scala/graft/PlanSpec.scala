@@ -223,6 +223,32 @@ class PlanSpec extends SparkSpec {
       plan.toString)
   }
 
+  test("connected components under the finisher limit shuffle no pairs: raw pairs, duplicates and all, go to union-find") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+    val chain = (1L to 64L).filter(_ % 8 != 0).map(d => (d - 1, d))
+    val pairs = (chain ++ chain.map(_.swap) ++ chain.take(5) ++ Seq((9L, 9L))).toDF("id1", "id2")
+    // (records written, tasks) of every stage that wrote shuffle output
+    val shuffled = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int)]
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val written = e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten
+        if (written > 0) shuffled.add(written -> e.stageInfo.numTasks)
+      }
+    }
+    org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (comp, converged) = operators.Dedup.componentsWithStatus(spark, pairs, 20)
+      assert(converged && comp.collect().length == 64)
+      org.apache.spark.graft.BusDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the pair count's partial aggregates (one row per task) are the only
+    // shuffle output; a distinct would move the pairs themselves
+    import scala.jdk.CollectionConverters._
+    assert(shuffled.asScala.forall { case (rows, tasks) => rows <= tasks }, shuffled.toString)
+  }
+
   test("multi-query ANN: one shuffle total for M queries, combined map-side (≤k rows/group cross it)") {
     val df = Queries.q51AnnMulti(spark, sfDir)
     assert(countShuffles(df) == 1, initialPlan(df).toString)
@@ -275,6 +301,32 @@ class PlanSpec extends SparkSpec {
         val carried = j.output.map(_.name)
         assert(carried.forall(Set("band", "bkey", "id1", "id2")), s"$family pair join carries $carried")
       }
+    }
+  }
+
+  test("near-dup candidates sketch once: every payload reference scans one checkpoint, no sketch map runs under a join") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapElementsExec, MapPartitionsExec, RDDScanExec}
+    object Stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // the direct-caller shape: the operator over an unmaterialized sketch of
+    // a parquet scan, with no caller-side materialization
+    val docs = Tables.read(spark, sfDir, "documents")
+    val families = Seq(
+      "minhash" -> operators.Dedup.minHashCandidates(spark,
+        operators.Dedup.minHashSignatures(spark, docs, "doc_id", "text"), minEstJaccard = 0.7),
+      "simhash" -> operators.Dedup.simHashPairs(spark,
+        operators.Dedup.simHashes(spark, docs, "doc_id", "text"), maxHamming = 6))
+    families.foreach { case (family, df) =>
+      df.collect()
+      val executed = df.queryExecution.executedPlan
+      val nodes = Stages.collect(executed) { case p => p }
+      def objectMaps(p: SparkPlan) =
+        Stages.collect(p) { case m @ (_: MapPartitionsExec | _: MapElementsExec) => m }
+      // the sketch table is never re-read from the files, and the only object
+      // maps left are the banders, with no sketch map beneath them
+      assert(nodes.collect { case f: FileSourceScanExec => f }.isEmpty, s"$family: $executed")
+      assert(objectMaps(executed).forall(m => objectMaps(m).size == 1), s"$family: $executed")
+      val checkpoints = nodes.collect { case r: RDDScanExec => r.rdd.id }
+      assert(checkpoints.nonEmpty && checkpoints.distinct.size == 1, s"$family: $executed")
     }
   }
 

@@ -337,11 +337,29 @@ class OperatorsSpec extends SparkSpec {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val truth = parent.keys.map(k => k -> find(k)).toMap
-    // limit 0 forces the star loop, the default limit the union-find finisher
+    // limit 0 forces the star loop over the deduplicated edges, the default
+    // limit the union-find finisher over the raw pairs
     Seq(0L, Dedup.LocalFinishRows).foreach { limit =>
-      val comp = Dedup.componentsWithStatus(spark, edges.toDF("id1", "id2"), 20, limit)._1.collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(comp == truth, s"limit $limit")
+      val (labels, converged) = Dedup.componentsWithStatus(spark, edges.toDF("id1", "id2"), 20, limit)
+      val comp = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(converged && comp == truth, s"limit $limit")
+    }
+  }
+
+  test("near-dup candidates: a raw sketch table and a pre-materialized one give the same pairs and scores") {
+    import spark.implicits._
+    Seq(1, 4).foreach { n =>
+      val docs = Tables.read(spark, sfDir, "documents").repartition(n)
+      val sigs = Dedup.minHashSignatures(spark, docs, "doc_id", "text")
+      def minhash(s: org.apache.spark.sql.DataFrame) = Dedup.minHashCandidates(spark, s, 16, 0.5)
+        .select("id1", "id2", "est_jaccard").as[(Long, Long, Double)].collect().toSet
+      val raw = minhash(sigs)
+      assert(raw.nonEmpty && raw == minhash(sigs.localCheckpoint(true)), s"minhash at $n partitions")
+      val hashes = Dedup.simHashes(spark, docs, "doc_id", "text")
+      def simhash(h: org.apache.spark.sql.DataFrame) = Dedup.simHashPairs(spark, h, maxHamming = 6)
+        .select("id1", "id2", "hamming").as[(Long, Long, Int)].collect().toSet
+      val rawH = simhash(hashes)
+      assert(rawH.nonEmpty && rawH == simhash(hashes.localCheckpoint(true)), s"simhash at $n partitions")
     }
   }
 
