@@ -477,14 +477,13 @@ object Queries {
        |FROM linked""".stripMargin
 
   /** J1: the diff kernel over two corpus revisions (old = docs with
-    * doc_id % 7 != 0) — single-shuffle full-outer diff, op-tagged.
+    * doc_id % 7 != 0) — single-shuffle flag-aggregate diff, op-tagged.
     */
   def q23TripleDiff(s: SparkSession, dir: String): DataFrame = {
     // both revisions derive from ONE linking pass (old = the %7-filtered
-    // subset), so the flag form diffs with a single scan + a single
-    // aggregation exchange — the generic diffOps evaluated the whole
-    // mention-scan subtree twice and spent three wide ops (2 distincts +
-    // full-outer join) on what one max-flag aggregate expresses.
+    // subset), so the flags go on that one frame: a single scan + a single
+    // aggregation exchange — diffOps over two filtered copies would union
+    // the whole mention-scan subtree twice.
     val about = q19LinkTop1(s, dir)
       .select(
         concat(lit("data:"), col("url")).as("subj"),

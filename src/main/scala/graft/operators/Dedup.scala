@@ -23,9 +23,10 @@ import graft.sources.Tables
   *               incremental (new batch vs all) runs differ only in the
   *               pair predicate; the MinHash signature and band-key tables
   *               are stored through the Tables layout lifecycle. The
-  *               MinHash and SimHash sketch tables are materialized at ONE
-  *               point, `sketchedOnce`, so the plan branches that read them
-  *               scan one checkpoint instead of re-sketching.
+  *               MinHash and SimHash sketch tables and the embedding
+  *               (id, vector) payload are materialized at ONE point,
+  *               `sketchedOnce`, so the plan branches that read them scan
+  *               one checkpoint instead of re-computing their input.
   *  - ngramJaccard: exact verification joined onto LSH candidates only.
   *  - components: connected components over verified pairs → survivors.
   */
@@ -56,7 +57,8 @@ object Dedup {
   }
 
   /** The candidate path's one materialization point. A payload frame (a
-    * MinHash signature or SimHash sketch table) is read by several plan
+    * MinHash signature or SimHash sketch table, or the embedding family's
+    * (id, vector) frame) is read by several plan
     * branches: the band probe and the band build, and both join-back sides.
     * Left as a plan, its sketch map runs once per branch, and under the
     * size-justified coalesce each run is a single task. So the frame is
@@ -131,8 +133,10 @@ object Dedup {
   // more than once through `sketchedOnce`, the path's one materialization
   // point. The stored-pruned path's all side is the stored signature layout
   // (no sketch to repeat) and is read as it is. The embedding family has
-  // no sketch table: its payload is the caller's vector frame, and its
-  // sign bits are computed inside the bander.
+  // no sketch table: its payload is the caller's vector frame, which
+  // `nearDupPairs` materializes the same way (the dimension probe, both
+  // bander sides and both join-back sides read it), and its sign bits are
+  // computed inside the bander.
   // Candidate generation is linear in docs, never all-pairs; the band-key
   // shuffle is the only wide op on the key side, bucket sizes are bounded
   // by similarity structure, with AQE skew-join as backstop for degenerate
@@ -512,7 +516,9 @@ object Dedup {
     * so at cosine 0.95 (θ≈0.318 rad, p≈0.899) recall is 1−(1−p^4)^6 ≈
     * 0.998 with the defaults — vs ≈28% for a single 12-plane bucket. At
     * 100 TB the wide ops move ~24 B/row instead of the embedding payload.
-    * Empty input returns an empty frame.
+    * Empty input returns an empty frame. The (id, vector) payload goes
+    * through `sketchedOnce`, so the caller's plan behind it (a scan, a
+    * union, a typed map) runs once per call, not once per reading branch.
     */
   def nearDupPairs(
       spark: SparkSession,
@@ -523,7 +529,7 @@ object Dedup {
       bands: Int = 6,
       bandBits: Int = 4
   ): DataFrame = {
-    val vectors = embeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
+    val vectors = sketchedOnce(embeddings.select(col(idCol).cast("long").as("id"), col(vecCol).as("v")))
     val keys = banded(vectors, hyperplaneKeys(spark, vectors, bands, bandBits))
     cosineVerified(spark, vectors, bucketPairs(keys, keys, _ < _), minCosine)
   }

@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
   * keyed on the full triple. This is the pipeline's only required shuffle
   * besides final dedup (SURVEY.md §2.3 J1).
   *
-  * Both directions in one pass: a full-outer join on the triple key with
-  * null-side filters shares ONE shuffle for added+removed instead of two
-  * anti-joins shuffling the same data twice — at 100 TB that halves the
-  * dominant shuffle. Per-entity grouping keys ride along so one call diffs
-  * every (entity, revision-pair) in the batch at once.
+  * Both directions in one pass: the two sides are tagged with membership
+  * flags and unioned, and ONE map-side-combining aggregation on the triple
+  * key yields added+removed — one shuffle instead of two anti-joins
+  * shuffling the same data twice. Per-entity grouping keys ride along so
+  * one call diffs every (entity, revision-pair) in the batch at once.
   */
 object TripleDiff {
 
@@ -33,15 +33,15 @@ object TripleDiff {
     l.join(r, cond, "left_anti")
   }
 
-  /** diffOps specialized to the common case where BOTH revisions derive
-    * from ONE frame: each row carries the key columns plus two membership
-    * flags (row belongs to the old / the new revision; each row must be in
-    * at least one — enforced by the pre-filter). ONE scan and ONE
-    * map-side-combining aggregation replace diffOps' two distincts + a
-    * full-outer join (guide §2.3 aggregate-before-shuffle, §8 use what the
-    * optimizer cannot see: the two sides share a subtree, which diffOps
-    * would evaluate twice). Output rows and schema are identical to
-    * `diffOps(df.filter(inOld), df.filter(inNew), keys)`.
+  /** THE diff kernel, over one frame whose rows carry the key columns plus
+    * two membership flags (row belongs to the old / the new revision; each
+    * row must be in at least one — enforced by the pre-filter). ONE scan and
+    * ONE map-side-combining aggregation on the key: the group-by compares
+    * null tag columns as equal, which is the `<=>` semantics of
+    * `added`/`removed`, and max-combining the flags makes each side a set
+    * (like rdflib Graph). When both revisions derive from one frame (q23),
+    * the shared subtree is evaluated once (guide §2.3
+    * aggregate-before-shuffle, §8 use what the optimizer cannot see).
     */
   def diffOpsFromFlags(
       df: DataFrame, inOld: org.apache.spark.sql.Column,
@@ -56,24 +56,14 @@ object TripleDiff {
           .otherwise(lit(null).cast("string")).as("op"): _*)
       .filter(col("op").isNotNull)
 
-  /** Single-shuffle both-directions diff: returns the union tagged with
-    * op ∈ {INSERT, DELETE}. Input rows are deduplicated per side first
-    * (set semantics, like rdflib Graph).
+  /** Both-directions diff of two frames: the union of the two sides, each
+    * row tagged with its side, through `diffOpsFromFlags` — rows tagged
+    * op ∈ {INSERT, DELETE}, one aggregation shuffle.
     */
   def diffOps(oldDf: DataFrame, newDf: DataFrame, keys: Seq[String] = keyCols): DataFrame = {
-    // rename the new side's columns so self-derived inputs never collide
-    val o = oldDf.select(keys.map(col): _*).distinct()
-      .withColumn("in_old", lit(1))
-    val n = newDf.select(keys.map(k => col(k).as(s"${k}__new")): _*).distinct()
-      .withColumn("in_new", lit(1))
-    val cond = keys.map(k => col(k) <=> col(s"${k}__new")).reduce(_ && _)
-    o.join(n, cond, "full_outer")
-      .select(
-        keys.map(k => coalesce(col(k), col(s"${k}__new")).as(k)) :+
-          when(col("in_old").isNull, lit("INSERT"))
-            .when(col("in_new").isNull, lit("DELETE"))
-            .otherwise(lit(null).cast("string")).as("op"): _*
-      )
-      .filter(col("op").isNotNull)
+    def tagged(df: DataFrame, old: Boolean) =
+      df.select(keys.map(col) :+ lit(old).as("__old") :+ lit(!old).as("__new"): _*)
+    diffOpsFromFlags(tagged(oldDf, old = true).unionByName(tagged(newDf, old = false)),
+      col("__old"), col("__new"), keys)
   }
 }

@@ -163,20 +163,19 @@ object KgPipeline {
 
   /** Node table of the materialized graph: every entity appearing as a
     * subject or object, with out/in degree and distinct-source counts —
-    * two partial-aggregating shuffles + one full-outer join, all on the
-    * node key.
+    * ONE aggregate on the node key over both edge ends: each triple
+    * contributes (subj, 1, 0, url) and (obj, 0, 1, null), so the degrees
+    * are sums and `n_urls` counts the distinct urls of the node's subject
+    * rows (a node seen only as an object has 0).
     */
   def nodeTable(triples: DataFrame): DataFrame = {
-    val outd = triples.groupBy(col("subj").as("node"))
-      .agg(count(lit(1)).as("out_degree"), countDistinct(col("url")).as("n_urls"))
-    val ind = triples.groupBy(col("obj").as("node"))
-      .agg(count(lit(1)).as("in_degree"))
-    outd.join(ind, Seq("node"), "full_outer")
-      .select(
-        col("node"),
-        coalesce(col("out_degree"), lit(0L)).as("out_degree"),
-        coalesce(col("in_degree"), lit(0L)).as("in_degree"),
-        coalesce(col("n_urls"), lit(0L)).as("n_urls"))
+    def end(node: String, out: Long, url: Column) =
+      struct(col(node).as("node"), lit(out).as("out"), lit(1L - out).as("in"), url.as("url"))
+    triples
+      .select(inline(array(end("subj", 1L, col("url")), end("obj", 0L, lit(null).cast("string")))))
+      .groupBy(col("node"))
+      .agg(sum(col("out")).as("out_degree"), sum(col("in")).as("in_degree"),
+        countDistinct(col("url")).as("n_urls"))
   }
 
   /** North-star materialize: the deduped triples as partitioned nodes/edges
@@ -236,7 +235,10 @@ object KgPipeline {
       batchId: Long
   ): Unit = {
     import graft.sources.Tables
-    val out = dedupTriples(triples(spark, pages)).withColumn("batch", lit(batchId))
+    // the id rides as a string: the partition directory (batch=<id>) and the
+    // type read back from it are the same, but a Long literal is inlined
+    // into the stage's generated code (a class per batch) and a string is not
+    val out = dedupTriples(triples(spark, pages)).withColumn("batch", lit(batchId.toString))
     Tables.format.overwritePartitions(out, path, "batch")
     // idempotency key = the batch: the data write REPLACES the batch
     // partition, so a re-landing's lineage row must supersede the batch's
@@ -249,8 +251,8 @@ object KgPipeline {
     * incremental KG: out/in degree and distinct-source counts are SUMS over
     * batch-disjoint triple sets (urls are batch-disjoint, so even the
     * countDistinct(url) legs add exactly), so appending a page batch updates
-    * the stored node table with ONE full-outer merge against the NEW batch's
-    * (append-sized) node aggregate — yesterday's triples are never
+    * the stored node table with ONE sum merge (`sumMerge`) against the NEW
+    * batch's (append-sized) node aggregate — yesterday's triples are never
     * re-aggregated. q82 gates the maintained table against q55's SQL
     * verbatim, proving update-by-merge == full recompute.
     */
@@ -280,10 +282,17 @@ object KgPipeline {
   }
 
   /** semigroupMerge with every column summed — the common case (node table
-    * q82, corpus report q87).
+    * q82, corpus report q87) — as ONE aggregate on the key over the union
+    * of the two states. `sum` skips nulls, so
+    * a key on one side only, or a null value on one side, keeps the other
+    * side's value: semigroupMerge's rule. Each sum is cast back to its
+    * column's type.
     */
-  def sumMerge(a: DataFrame, b: DataFrame, key: String, sumCols: Seq[String]): DataFrame =
-    semigroupMerge(a, b, key, sumCols.map(c => c -> ((x: Column, y: Column) => x + y)))
+  def sumMerge(a: DataFrame, b: DataFrame, key: String, sumCols: Seq[String]): DataFrame = {
+    val both = a.select((key +: sumCols).map(col): _*).unionByName(b.select((key +: sumCols).map(col): _*))
+    val sums = sumCols.map(c => sum(col(c)).cast(both.schema(c).dataType).as(c))
+    both.groupBy(col(key)).agg(sums.head, sums.tail: _*)
+  }
 
   /** S7/C11 — golden file serialization (write_to_file,
     * /root/reference/src/wikidata_update/get_updates.py:1077-1085;

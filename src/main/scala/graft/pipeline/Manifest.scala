@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -15,7 +14,10 @@ import org.apache.spark.sql.types.StructType
   * (stage, part_key, input_fingerprint, input_sum, rows_in, rows_out,
   * wall_ms, status, run_seq), written by `append` and read by `latestRows`
   * — the newest run_seq per (stage, part_key) supersedes every earlier row
-  * of that key.
+  * of that key. Both ends handle the log as local data on the driver: it
+  * holds one row per partition per run, so collecting it costs less than
+  * a distributed plan, and a local frame keeps per-call values out of
+  * generated code (see `append`).
   * Two kinds of writer share it:
   *  - resumable stages (`runStage`): each stage's output is written
   *    partitioned by `part_key` (pmod(xxhash64(url), nParts)); after the
@@ -85,42 +87,53 @@ object Manifest {
     * the shared schema, so a column an older log lacks reads as null.
     */
   def latestRows(spark: SparkSession, path: String): DataFrame =
-    if (exists(spark, new Path(path))) latest(spark.read.schema(schema).parquet(path))
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    spark.createDataFrame(java.util.Arrays.asList(latestLocal(spark, path): _*), schema)
 
   /** One stage's latest rows of an already-read log frame. */
   def latestRows(log: DataFrame, stage: String): DataFrame =
-    latest(log.filter(col("stage") === stage))
+    log.sparkSession.createDataFrame(
+      java.util.Arrays.asList(latest(log.filter(col("stage") === stage).collect()): _*), log.schema)
 
-  private def latest(log: DataFrame): DataFrame =
-    log
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("stage"), col("part_key")).orderBy(col("run_seq").desc)))
-      .filter(col("rn") === 1)
-      .drop("rn")
+  /** `latestRows` of the log at `path` as driver-side rows. */
+  private def latestLocal(spark: SparkSession, path: String): Seq[Row] =
+    if (exists(spark, new Path(path))) latest(spark.read.schema(schema).parquet(path).collect())
+    else Nil
 
-  /** THE writer: append `rows` — per-key columns, taken by name — to the
-    * log at `path` as one file, each stamped with `stage`, `status` and
-    * `runSeq`; a schema column `rows` lacks is written as null (not
-    * measured).
+  /** The newest row per (stage, part_key), picked on the driver (a null
+    * run_seq, from a log older than the column, ranks below every stamped
+    * row). The log grows by at most nParts + 1 rows per run, so one scan
+    * plus a driver-side pick costs less than a window query, and the
+    * readers' plans over the result are local: the same on every call, so
+    * Spark's codegen cache serves them after the first.
     */
-  private[graft] def append(path: String, stage: String, status: String, runSeq: Long,
-      rows: DataFrame): Unit = {
-    val stamped = rows.select(col("*"), lit(stage).as("stage"), lit(status).as("status"),
-      lit(runSeq).as("run_seq"))
+  private def latest(log: Array[Row]): Seq[Row] =
+    log.groupBy(r => (r.getAs[Any]("stage"), r.getAs[Any]("part_key"))).values.toSeq
+      .map(_.maxBy(r => Option(r.getAs[Any]("run_seq")).fold(Long.MinValue)(_.asInstanceOf[Long])))
+
+  /** THE writer: append one log row per element of `rows` — per-key
+    * measurements by column name — to the log at `path` as one file, each
+    * stamped with `stage`, `status` and `runSeq`; a schema column a row
+    * lacks is written as null (not measured).
+    *
+    * The rows (at most nParts + 1) are written as local data, so the
+    * stamps are row values, not literals of a plan: Spark inlines a Long
+    * literal into the Java source it generates and caches compiled classes
+    * by that source, so a `lit(runSeq)` would make every append compile a
+    * class no later append could reuse.
+    */
+  private[graft] def append(spark: SparkSession, path: String, stage: String, status: String,
+      runSeq: Long, rows: Seq[Map[String, Long]]): Unit = {
+    val stamps = Map[String, Any]("stage" -> stage, "status" -> status, "run_seq" -> runSeq)
+    val local = rows.map(r => Row.fromSeq(schemaCols.map(c => stamps.getOrElse(c, r.getOrElse(c, null)))))
     graft.sources.Tables.format.append(
-      stamped.select(schema.fields.toSeq.map { f =>
-        val c = if (stamped.columns.contains(f.name)) col(f.name) else lit(null)
-        c.cast(f.dataType).as(f.name)
-      }: _*).coalesce(1),
-      path)
+      spark.createDataFrame(java.util.Arrays.asList(local: _*), schema).coalesce(1), path)
   }
 
   /** Monotonic per-append sequence for latest-row-wins reads. Layout:
     * millis << 20 | per-JVM random (10 bits) | per-JVM counter (10 bits) —
     * two JVMs appending to the same log in the same millisecond collide
     * only if their random nonces also match (1/1024 per ms, vs certain
-    * before), so row_number's run_seq tiebreak can't silently pick a
+    * before), so the latest-row pick's run_seq order can't silently pick a
     * superseded 'ok' row over a newer 'orphaned' one. Positivity of the
     * shifted value needs millis < 2^43 — epoch millis stay below that until
     * ~2248. The 10-bit counter wraps after 1024 appends within one
@@ -197,15 +210,17 @@ object Manifest {
     val orphans = (outputKeys(spark, outPath) -- lin.map(_._1)).toSeq
     if (orphans.nonEmpty) {
       orphans.foreach(deletePartitionDir(spark, outPath, _))
-      append(manifestPath, stage, "orphaned", runSeq,
-        orphans.map((_, 0L, 0L, 0L)).toDF("part_key", "rows_in", "rows_out", "wall_ms"))
+      append(spark, manifestPath, stage, "orphaned", runSeq,
+        orphans.map(k => Map("part_key" -> k, "rows_in" -> 0L, "rows_out" -> 0L, "wall_ms" -> 0L)))
     }
 
-    val done = latestRows(spark, manifestPath)
+    val done = latestLocal(spark, manifestPath)
       // orphaned/failed ⇒ not done; no sum lane ⇒ written before it existed
-      .filter(col("stage") === stage && col("status") === "ok" && col("input_sum").isNotNull)
-      .select("part_key", "input_fingerprint", "input_sum", "rows_in")
-      .as[(Long, Long, Long, Long)].collect().toSet
+      .filter(r => r.getAs[Any]("stage") == stage && r.getAs[Any]("status") == "ok" &&
+        r.getAs[Any]("input_sum") != null)
+      .map(r => (r.getAs[Long]("part_key"), r.getAs[Long]("input_fingerprint"),
+        r.getAs[Long]("input_sum"), r.getAs[Long]("rows_in")))
+      .toSet
     val pending = lin.filterNot(done)
     if (pending.isEmpty) return 0L
 
@@ -235,9 +250,10 @@ object Manifest {
           .groupBy("part_key").agg(count(lit(1))).as[(Long, Long)].collect().toMap
 
     val wallMs = (System.nanoTime() - t0) / 1000000
-    append(manifestPath, stage, "ok", runSeq,
-      pending.toSeq.map { case (k, fp, sm, n) => (k, fp, sm, n, rowsOut.getOrElse(k, 0L), wallMs) }
-        .toDF("part_key", "input_fingerprint", "input_sum", "rows_in", "rows_out", "wall_ms"))
+    append(spark, manifestPath, stage, "ok", runSeq, pending.toSeq.map { case (k, fp, sm, n) =>
+      Map("part_key" -> k, "input_fingerprint" -> fp, "input_sum" -> sm, "rows_in" -> n,
+        "rows_out" -> rowsOut.getOrElse(k, 0L), "wall_ms" -> wallMs)
+    })
     keyLit.size.toLong
   }
 }

@@ -110,15 +110,18 @@ object Tables {
     * it the key is the row's own run_seq, so every append counts — a
     * layout where a re-run really does add rows twice gets flagged by the
     * audit.
+    *
+    * The key joins the aggregate's one row on the driver, not as a `lit`
+    * column: a Long literal is inlined into the aggregate's generated code,
+    * so every batch id or run_seq would compile a class of its own.
     */
   def recordLayoutLineage(path: String, op: String, batch: DataFrame, idCol: String,
       idempotencyKey: Option[Long] = None): Unit = {
     val runSeq = Manifest.nextRunSeq()
-    Manifest.append(s"$path/_lineage", op, "ok", runSeq, batch
-      .agg(
-        Manifest.fingerprint(Seq(col(idCol))).as("input_fingerprint"),
-        count(lit(1)).as("rows_in"))
-      .withColumn("part_key", lit(idempotencyKey.getOrElse(runSeq))))
+    val ids = batch.agg(Manifest.fingerprint(Seq(col(idCol))), count(lit(1))).head()
+    Manifest.append(batch.sparkSession, s"$path/_lineage", op, "ok", runSeq, Seq(Map(
+      "part_key" -> idempotencyKey.getOrElse(runSeq), "input_fingerprint" -> ids.getLong(0),
+      "rows_in" -> ids.getLong(1))))
   }
 
   /** The latest lineage row per key of the layout at `path`. */

@@ -83,6 +83,15 @@ object StreamIngest {
     * the global min — dedupe such streams upstream (the
     * `dropDuplicatesWithinWatermark` pattern of streamDedupDocs, keyed on
     * url) or compact the layout periodically with a batch re-dedup.
+    *
+    * Each micro-batch is re-rooted in the caller's session before any work
+    * runs on it. The drain is a new streaming run on a cloned session, and
+    * a cloned session gets a class loader of its own; Spark keys its
+    * codegen cache by (class loader, source), so plans run on the batch
+    * frame itself would compile every generated class again on every
+    * drain. Re-rooted, the landing and lineage plans reuse the caller's
+    * compiled classes: a second drain into the same layout compiles none
+    * (StreamingSpec).
     */
   def runKgLand(
       spark: SparkSession,
@@ -99,7 +108,8 @@ object StreamIngest {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
         import spark.implicits._
-        graft.pipeline.KgPipeline.writeTriplesBatch(spark, batch.as[Page], layoutPath, batchId)
+        val pages = spark.createDataset(batch.as[Page].rdd)
+        graft.pipeline.KgPipeline.writeTriplesBatch(spark, pages, layoutPath, batchId)
       }
       .start()
     q.awaitTermination()

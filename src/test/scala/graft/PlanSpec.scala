@@ -330,6 +330,27 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("embedding near-dup materializes its payload once: the caller's scan and map run in no plan branch") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, MapElementsExec, RDDScanExec}
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    object Stages extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // q38's caller shape: a parquet scan behind a typed map (scaling keeps
+    // every cosine)
+    val emb = Tables.read(spark, sfDir, "embeddings")
+      .select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])].map { case (id, v) => (id, v.map(_ * 2f)) }
+      .toDF("vec_id", "embedding")
+    val df = operators.Dedup.nearDupPairs(spark, emb, "vec_id", "embedding")
+    df.collect()
+    val executed = df.queryExecution.executedPlan
+    val nodes = Stages.collect(executed) { case p => p }
+    assert(nodes.collect { case f: FileSourceScanExec => f }.isEmpty, executed.toString)
+    assert(nodes.collect { case m: MapElementsExec => m }.isEmpty, executed.toString)
+    val checkpoints = nodes.collect { case r: RDDScanExec => r.rdd.id }
+    assert(checkpoints.nonEmpty && checkpoints.distinct.size == 1, executed.toString)
+  }
+
   test("q61: IVF probe prunes PARTITIONS at the scan — the layout is read nProbe/nCells, not fully") {
     import org.apache.spark.sql.functions.{col, input_file_name}
     import spark.implicits._

@@ -123,14 +123,22 @@ class OperatorsSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit}
     val rng = new scala.util.Random(11)
-    val keys = Seq("entity", "subj", "pred", "obj")
+    val keys = Seq("entity", "subj", "pred", "obj", "obj_lang")
     // shared frame with per-row membership flags (each row in ≥1 revision),
     // including duplicate key rows with differing flags (max-combine case)
+    // and a null tag column on some rows (null-safe key equality)
     val rows = (0 until 60).map { i =>
       val inOld = rng.nextBoolean()
-      ("E", s"s${i % 9}", s"p${i % 2}", s"o${i % 13}", inOld, !inOld || rng.nextBoolean())
+      ("E", s"s${i % 9}", s"p${i % 2}", s"o${i % 13}", if (i % 5 == 0) null else "en",
+        inOld, !inOld || rng.nextBoolean())
     }
-    val df = rows.toDF("entity", "subj", "pred", "obj", "in_old", "in_new")
+    val df = rows.toDF("entity", "subj", "pred", "obj", "obj_lang", "in_old", "in_new")
+    // ground truth: Scala set difference of the collected keys, where a null
+    // tag equals a null tag (the `<=>` semantics of added/removed)
+    val oldK = rows.filter(_._6).map(r => Seq[Any](r._1, r._2, r._3, r._4, r._5)).toSet
+    val newK = rows.filter(_._7).map(r => Seq[Any](r._1, r._2, r._3, r._4, r._5)).toSet
+    val want = (newK -- oldK).map(_ :+ "INSERT") ++ (oldK -- newK).map(_ :+ "DELETE")
+    assert(want.exists(_.contains(null)) && want.map(_.last).size == 2)
     val viaFlags = TripleDiff
       .diffOpsFromFlags(df, col("in_old"), col("in_new"), keys)
       .collect().map(_.toSeq).toSet
@@ -139,7 +147,8 @@ class OperatorsSpec extends SparkSpec {
         df.filter(col("in_old")).select(keys.map(col): _*),
         df.filter(col("in_new")).select(keys.map(col): _*), keys)
       .collect().map(_.toSeq).toSet
-    assert(viaFlags == viaDiff)
+    assert(viaFlags == want)
+    assert(viaDiff == want)
     // one aggregation exchange, no join, in the flag form's plan
     val plan = TripleDiff.diffOpsFromFlags(df, col("in_old"), lit(true), keys)
       .queryExecution.executedPlan match {

@@ -395,4 +395,85 @@ class PipelineSpec extends SparkSpec {
     assert(mergedNodes == full && full.nonEmpty)
     tri.unpersist()
   }
+
+  test("nodeTable property: degrees and source counts equal a Scala count over the triples") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(3)
+    // subjects Q0-Q7, objects Q4-Q11: nodes only as subject, only as object
+    // and as both; the first 20 triples appear twice
+    val once = (0 until 300).map(_ =>
+      (s"wd:Q${rnd.nextInt(8)}", "wdt:P1002", s"wd:Q${4 + rnd.nextInt(8)}", s"u${rnd.nextInt(5)}"))
+    val tri = once ++ once.take(20)
+    val want = (tri.map(_._1) ++ tri.map(_._3)).distinct.map { n =>
+      (n, tri.count(_._1 == n).toLong, tri.count(_._3 == n).toLong,
+        tri.filter(_._1 == n).map(_._4).distinct.size.toLong)
+    }.toSet
+    assert(want.exists { case (_, out, in, urls) => out == 0 && in > 0 && urls == 0 })
+    assert(want.exists { case (_, out, in, _) => out > 0 && in > 0 })
+    val got = KgPipeline.nodeTable(tri.toDF("subj", "pred", "obj", "url")).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(got == want)
+  }
+
+  test("sumMerge property: equals a Scala per-key merge under semigroupMerge's one-side and null rules") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(13)
+    // (key, nullable Long, Int) states over a small key domain: keys on one
+    // side only, keys on both sides, null values on one side
+    def state(): Map[String, (Option[Long], Int)] = Seq.fill(10)(s"k${rnd.nextInt(15)}").distinct
+      .map(k => k -> ((if (rnd.nextInt(4) == 0) None else Some(rnd.nextInt(100).toLong)), rnd.nextInt(100)))
+      .toMap
+    val (a, b) = (state(), state())
+    val want = (a.keySet ++ b.keySet).map { k =>
+      (a.get(k), b.get(k)) match {
+        case (Some((v, n)), None) => (k, v, n)
+        case (None, Some((v, n))) => (k, v, n)
+        case (Some((v1, n1)), Some((v2, n2))) => (k, (v1 ++ v2).reduceOption(_ + _), n1 + n2)
+        case (None, None) => sys.error("unreachable")
+      }
+    }
+    val shared = a.keySet & b.keySet
+    assert((a.keySet ++ b.keySet) != shared && shared.nonEmpty)
+    assert(shared.exists(k => a(k)._1.isEmpty != b(k)._1.isEmpty))
+    def df(m: Map[String, (Option[Long], Int)]) =
+      m.toSeq.map { case (k, (v, n)) => (k, v, n) }.toDF("k", "v", "n")
+    val merged = KgPipeline.sumMerge(df(a), df(b), "k", Seq("v", "n"))
+    assert(merged.schema.map(_.dataType) == df(a).schema.map(_.dataType))
+    val got = merged.collect()
+      .map(r => (r.getString(0), Option(r.get(1)).map(_.asInstanceOf[Long]), r.getInt(2))).toSet
+    assert(got == want)
+  }
+
+  test("latest-row reader property: the newest run_seq per (stage, part_key) wins, whatever the append order") {
+    val log = s"${tempDir("graft-manifest-latest")}/log"
+    val rnd = new scala.util.Random(17)
+    // twelve appends with increasing run_seq, written in shuffled order, over
+    // two stages and three keys, each row's rows_in = its append index
+    val appends = (0 until 12).map { i =>
+      (Manifest.nextRunSeq(), if (rnd.nextBoolean()) "s" else "t",
+        if (rnd.nextInt(3) == 0) "orphaned" else "ok", (0L until 3L).filter(_ => rnd.nextBoolean()), i.toLong)
+    }
+    // plus key 9 of stage s: a superseded ok row, and key 10: an orphaned
+    // row newer than an ok row (written first, so file order cannot decide)
+    val fixed = Seq(
+      (Manifest.nextRunSeq(), "s", "ok", Seq(9L, 10L), 100L),
+      (Manifest.nextRunSeq(), "s", "ok", Seq(9L), 101L),
+      (Manifest.nextRunSeq(), "s", "orphaned", Seq(10L), 102L))
+    val all = appends ++ fixed
+    rnd.shuffle(appends).foreach { case (seq, stage, status, keys, i) =>
+      Manifest.append(spark, log, stage, status, seq, keys.map(k => Map("part_key" -> k, "rows_in" -> i)))
+    }
+    fixed.reverse.foreach { case (seq, stage, status, keys, i) =>
+      Manifest.append(spark, log, stage, status, seq, keys.map(k => Map("part_key" -> k, "rows_in" -> i)))
+    }
+    val want = all.flatMap { case (seq, stage, status, keys, i) => keys.map(k => ((stage, k), (seq, status, i))) }
+      .groupBy(_._1).map { case (key, rows) => key -> rows.map(_._2).maxBy(_._1) }
+    assert(want(("s", 9L)) == ((fixed(1)._1, "ok", 101L)))
+    assert(want(("s", 10L)) == ((fixed(2)._1, "orphaned", 102L)))
+    def read(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getAs[String]("stage"), r.getAs[Long]("part_key")) ->
+        ((r.getAs[Long]("run_seq"), r.getAs[String]("status"), r.getAs[Long]("rows_in")))).toMap
+    assert(read(Manifest.latestRows(spark, log)) == want)
+    assert(read(Manifest.latestRows(spark.read.parquet(log), "s")) == want.filter(_._1._1 == "s"))
+  }
 }

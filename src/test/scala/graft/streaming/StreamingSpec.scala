@@ -94,6 +94,39 @@ class StreamingSpec extends SparkSpec {
     assert(Tables.auditLayoutLineage(spark, s"$tmp/layout", pages, "url"))
   }
 
+  test("a second runKgLand drain reuses the first drain's generated code") {
+    import graft.sources.Tables
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import java.nio.file.{Files, Paths}
+    val tmp = tempDir("graft-kgland-codegen")
+    val pages = Tables.pages(spark, sfDir).toDF()
+    val half = pmod(xxhash64(col("url")), lit(2))
+    // both drops are written before the first drain and moved into the
+    // source dir by a file rename, so no Spark job runs between the drains
+    pages.filter(half === 0).write.parquet(s"$tmp/drop1")
+    pages.filter(half === 1).write.parquet(s"$tmp/drop2")
+    Files.createDirectories(Paths.get(s"$tmp/pages"))
+    def drop(name: String): Unit = new java.io.File(s"$tmp/$name").listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+      .foreach(f => Files.move(f.toPath, Paths.get(s"$tmp/pages/$name-${f.getName}")))
+    def drain(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      StreamIngest.runKgLand(spark, s"$tmp/pages", s"$tmp/layout", s"$tmp/ckpt")
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    drop("drop1")
+    drain()
+    drop("drop2")
+    // every generated class of the landing and lineage plans is served from
+    // Spark's codegen cache; a drain that ran them in its own cloned session
+    // (a class loader per run), or inlined its batch id or run_seq as a
+    // Long literal, would compile ~15 classes here
+    val compiled = drain()
+    assert(compiled == 0, s"the second drain compiled $compiled classes")
+    assert(spark.read.parquet(s"$tmp/layout").select("batch").distinct().count() == 2)
+    assert(Tables.auditLayoutLineage(spark, s"$tmp/layout", pages, "url"))
+  }
+
   test("streaming CONTENT dedup: kept fingerprints equal batch exact-dedup survivors; replay drains nothing") {
     val tmp = tempDir("graft-contentdedup")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
